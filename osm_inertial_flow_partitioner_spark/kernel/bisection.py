@@ -161,6 +161,9 @@ def recursive_bisection(
     if coords_aligned:
         root_lat = np.asarray(lat_by_vertex, dtype=np.float64)
         root_lon = np.asarray(lon_by_vertex, dtype=np.float64)
+        assert len(root_lat) == len(root_lon) == len(vertex_ids), (
+            "coords_aligned: lat/lon must align to np.sort(vertex_ids)"
+        )
     elif isinstance(lat_by_vertex, dict):
         root_lat = np.array(
             [lat_by_vertex[int(v)] for v in vertex_ids], dtype=np.float64
@@ -231,18 +234,12 @@ def recursive_bisection(
     # so the emitted sequence is bit-identical to the serial loop.
     # Small entering cells (the many-concurrent-tasks regime, e.g. the
     # multilevel finish) stay fully serial — no pool, no
-    # oversubscription.
-    pool = None
+    # oversubscription. Without a C compiler the pool runs the GIL-bound
+    # numpy engine: same results, no speedup.
     if len(vertex_ids) >= 32768 and workers > 1:
-        from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-        from .cdinic import available
-
-        if available():
-            pool = ThreadPoolExecutor(max_workers=workers)
-    if pool is not None:
-        from concurrent.futures import FIRST_COMPLETED, wait
-
+        pool = ThreadPoolExecutor(max_workers=workers)
         try:
             # per-cell direction jobs keep the size-gated auto policy
             # (10-way pool on >= PARALLEL_JOBS_MIN_N cells): the mild
@@ -274,7 +271,7 @@ def recursive_bisection(
             recorded.sort(key=lambda t: (t[0], t[1]))
             result.stats.extend(s for _, _, s in recorded)
         finally:
-            pool.shutdown(wait=False)
+            pool.shutdown(wait=False, cancel_futures=True)
     else:
         rnd = 0
         while active:

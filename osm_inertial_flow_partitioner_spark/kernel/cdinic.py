@@ -1,28 +1,29 @@
-"""Compiled (C, via ctypes) Dinic max-flow kernel — optional fast path.
+"""Compiled (C, via ctypes) kernels: the production min-cut and CC.
 
-The numpy/Python hybrid engines in ``maxflow.py`` pay per-BFS-level
-numpy dispatch overhead and per-arc Python interpretation in their hot
-loops; on the high-diameter geometric kNN cells this engine partitions,
-a single direction job costs ~0.45s at 40k vertices (round-6 profile:
-~60 Dinic phases x hundreds of thin BFS levels, plus a ~200k-op Python
-discharge tail). The same algorithm in portable C runs the whole job in
-single-digit milliseconds.
+The numpy Dinic in ``maxflow.py`` pays per-BFS-level numpy dispatch
+overhead and per-arc Python interpretation in its hot loop; on the
+high-diameter geometric kNN cells this engine partitions, a single
+direction job costs ~0.45s at 40k vertices (~60 Dinic phases x hundreds
+of thin BFS levels). The same algorithm in portable C runs the whole
+job in single-digit milliseconds.
 
-Correctness contract: this is the SAME reference-shaped Dinic as
-``maxflow.dinic_min_cut`` — identical CSR adjacency order (``flat``),
-current-arc DFS, reverse edge at ``id ^ 1``, flags = the final failing
-BFS's reachable set. The max-flow VALUE is unique and the flags are the
-unique minimal min cut of ANY max flow (Picard & Queyranne 1980), so
-the result is engine-independent by theorem; bit-equality against the
-Python Dinic / push-relabel / Edmonds-Karp engines is additionally
-pinned by tests (``tests/test_kernel_maxflow.py``,
-``tests/test_cdinic.py`` fuzz battery).
+Correctness contract: ``dinic_unit_terminal`` is the reference-shaped
+Dinic of ``maxflow.dinic_min_cut`` with the super source/sink left
+implicit — identical CSR adjacency order (``flat``), current-arc DFS,
+reverse edge at ``id ^ 1``, flags = the final failing BFS's reachable
+set. The max-flow VALUE is unique and the flags are the unique minimal
+min cut of ANY max flow (Picard & Queyranne 1980), so the result is
+engine-independent by theorem; bit-equality against the numpy Dinic is
+additionally pinned by tests: the ``tests/test_cdinic.py`` fuzz battery,
+and ``min_cut`` against the numpy Dinic on every fixture x direction.
 
 Build discipline: the C source below is compiled ONCE per machine into
 a content-hashed shared object under the system temp dir (atomic
-rename, so concurrent Python workers race safely). Any failure —
-no compiler, sandboxed tmp, dlopen error — degrades silently to
-``available() == False`` and the numpy engines; nothing hard-fails.
+rename, so concurrent Python workers race safely). When the build or
+dlopen fails — no compiler, sandboxed tmp — ``available()`` is False,
+``maxflow.min_cut`` and ``cc_min_label`` run their numpy engines, and
+the first call in the process emits a ``RuntimeWarning`` naming the
+failure.
 """
 
 from __future__ import annotations
@@ -32,6 +33,8 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import threading
+import warnings
 
 import numpy as np
 
@@ -40,90 +43,6 @@ _SRC = r"""
 #include <stdlib.h>
 
 typedef int64_t i64;
-
-/* BFS levels on the residual graph. level: -1 = unreachable. */
-static int bfs(i64 n, const i64 *ev, const i64 *ecap, const i64 *eflow,
-               const i64 *off, const i64 *flat, i64 s, i64 t, i64 *level,
-               i64 *queue) {
-    for (i64 i = 0; i < n; i++) level[i] = -1;
-    i64 qh = 0, qt = 0;
-    level[s] = 0;
-    queue[qt++] = s;
-    while (qh < qt) {
-        i64 u = queue[qh++];
-        i64 lu = level[u] + 1;
-        for (i64 j = off[u]; j < off[u + 1]; j++) {
-            i64 e = flat[j];
-            i64 v = ev[e];
-            if (level[v] < 0 && ecap[e] > eflow[e]) {
-                level[v] = lu;
-                queue[qt++] = v;
-            }
-        }
-    }
-    return level[t] >= 0;
-}
-
-/* Dinic with iterative current-arc DFS blocking flow.
-   Returns the max-flow value; eflow holds the final flow and level the
-   final (failing) BFS levels, i.e. residual reachability from s. */
-i64 dinic_maxflow(i64 n, const i64 *ev, const i64 *ecap, i64 *eflow,
-                  const i64 *off, const i64 *flat, i64 s, i64 t,
-                  i64 *level) {
-    i64 *queue = (i64 *)malloc((size_t)n * sizeof(i64));
-    i64 *it = (i64 *)malloc((size_t)n * sizeof(i64));
-    i64 *stack_v = (i64 *)malloc((size_t)(n + 1) * sizeof(i64));
-    i64 *stack_e = (i64 *)malloc((size_t)(n + 1) * sizeof(i64));
-    if (!queue || !it || !stack_v || !stack_e) {
-        free(queue); free(it); free(stack_v); free(stack_e);
-        return -1;
-    }
-    i64 total = 0;
-    while (bfs(n, ev, ecap, eflow, off, flat, s, t, level, queue)) {
-        for (i64 i = 0; i < n; i++) it[i] = off[i];
-        for (;;) {
-            /* one current-arc DFS attempt for an augmenting path */
-            i64 top = 0;
-            stack_v[0] = s;
-            int found = 0;
-            while (top >= 0) {
-                i64 u = stack_v[top];
-                if (u == t) { found = 1; break; }
-                int advanced = 0;
-                i64 nxt = level[u] + 1;
-                for (; it[u] < off[u + 1]; it[u]++) {
-                    i64 e = flat[it[u]];
-                    i64 v = ev[e];
-                    if (level[v] == nxt && ecap[e] > eflow[e]) {
-                        stack_e[top + 1] = e;
-                        stack_v[++top] = v;
-                        advanced = 1;
-                        break;
-                    }
-                }
-                if (!advanced) {
-                    level[u] = -2; /* dead-end kill */
-                    top--;
-                    if (top >= 0) it[stack_v[top]]++;
-                }
-            }
-            if (!found) break;
-            i64 f = ecap[stack_e[1]] - eflow[stack_e[1]];
-            for (i64 k = 2; k <= top; k++) {
-                i64 r = ecap[stack_e[k]] - eflow[stack_e[k]];
-                if (r < f) f = r;
-            }
-            for (i64 k = 1; k <= top; k++) {
-                i64 e = stack_e[k];
-                eflow[e] += f;
-                eflow[e ^ 1] -= f;
-            }
-            total += f;
-        }
-    }
-    free(queue); free(it); free(stack_v); free(stack_e);
-    return total;
-}
 
 /* Unit-capacity Dinic with IMPLICIT terminals: the artificial super
    source/sink and their INF arcs are never materialized. BFS seeds
@@ -253,6 +172,7 @@ void cc_min_label(i64 n, i64 m, const i64 *lt, const i64 *lh, i64 *comp) {
 _P = ctypes.POINTER(ctypes.c_int64)
 _LIB = None
 _TRIED = False
+_LOCK = threading.Lock()
 
 
 def _build() -> "ctypes.CDLL":
@@ -279,11 +199,6 @@ def _build() -> "ctypes.CDLL":
                 except OSError:
                     pass
     lib = ctypes.CDLL(so)
-    lib.dinic_maxflow.restype = ctypes.c_int64
-    lib.dinic_maxflow.argtypes = [
-        ctypes.c_int64, _P, _P, _P, _P, _P,
-        ctypes.c_int64, ctypes.c_int64, _P,
-    ]
     lib.cc_min_label.restype = None
     lib.cc_min_label.argtypes = [ctypes.c_int64, ctypes.c_int64, _P, _P, _P]
     lib.dinic_unit_terminal.restype = ctypes.c_int64
@@ -297,14 +212,25 @@ def _build() -> "ctypes.CDLL":
 def _lib():
     global _LIB, _TRIED
     if not _TRIED:
-        _TRIED = True
-        if os.environ.get("TILER_NO_CDINIC"):
-            _LIB = None
-        else:
-            try:
-                _LIB = _build()
-            except Exception:
-                _LIB = None
+        with _LOCK:  # pool threads race to the first call: warn once
+            if not _TRIED:
+                try:
+                    _LIB = _build()
+                except Exception as exc:
+                    stderr = getattr(exc, "stderr", None)
+                    reason = (
+                        stderr.decode(errors="replace").strip()
+                        if stderr
+                        else f"{type(exc).__name__}: {exc}"
+                    )
+                    warnings.warn(
+                        f"cdinic: building the compiled kernel failed "
+                        f"({reason}); min-cut and connected components now "
+                        f"run the numpy engines, about 10x slower",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
+                _TRIED = True
     return _LIB
 
 
@@ -314,36 +240,6 @@ def available() -> bool:
 
 def _ptr(a: np.ndarray) -> "ctypes._Pointer":
     return a.ctypes.data_as(_P)
-
-
-def dinic_maxflow_c(
-    n: int,
-    ev: np.ndarray,
-    ecap: np.ndarray,
-    eflow: np.ndarray,
-    off: np.ndarray,
-    flat: np.ndarray,
-    s: int,
-    t: int,
-) -> tuple[int, np.ndarray]:
-    """Run compiled Dinic over the extended-graph arrays (mutates
-    ``eflow`` in place). Returns (max_flow, final BFS level array with
-    -1/-2 = unreachable)."""
-    lib = _lib()
-    assert lib is not None
-    ev = np.ascontiguousarray(ev, dtype=np.int64)
-    ecap = np.ascontiguousarray(ecap, dtype=np.int64)
-    assert eflow.dtype == np.int64 and eflow.flags.c_contiguous
-    off = np.ascontiguousarray(off, dtype=np.int64)
-    flat = np.ascontiguousarray(flat, dtype=np.int64)
-    level = np.empty(n, dtype=np.int64)
-    mf = lib.dinic_maxflow(
-        n, _ptr(ev), _ptr(ecap), _ptr(eflow), _ptr(off), _ptr(flat),
-        s, t, _ptr(level),
-    )
-    if mf < 0:
-        raise MemoryError("cdinic: work-array allocation failed")
-    return int(mf), level
 
 
 def dinic_unit_terminal_c(
@@ -386,3 +282,27 @@ def cc_min_label_c(n: int, lt: np.ndarray, lh: np.ndarray) -> np.ndarray:
     comp = np.empty(n, dtype=np.int64)
     lib.cc_min_label(n, len(lt), _ptr(lt), _ptr(lh), _ptr(comp))
     return comp
+
+
+def cc_min_label(n: int, lt: np.ndarray, lh: np.ndarray) -> np.ndarray:
+    """Component labels by minimum local index: the compiled union-find
+    when it built, else a numpy label-propagation fixpoint (same
+    labels)."""
+    if available():
+        return cc_min_label_c(n, lt, lh)
+    label = np.arange(n, dtype=np.int64)
+    if len(lt):
+        while True:
+            # hook: each endpoint adopts the smaller label
+            lu, lv = label[lt], label[lh]
+            np.minimum.at(label, lt, lv)
+            np.minimum.at(label, lh, lu)
+            # pointer-jump to the fixpoint of label[label]
+            while True:
+                nxt = label[label]
+                if np.array_equal(nxt, label):
+                    break
+                label = nxt
+            if np.array_equal(label[lt], label[lh]):
+                break
+    return label

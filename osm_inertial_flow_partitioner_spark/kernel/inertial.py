@@ -91,10 +91,9 @@ def best_inertial_cut(
             flags = np.zeros(n, dtype=bool)
             part_two, cut = n, 0
         else:
-            # production kernel: implicit-terminal compiled Dinic —
-            # bit-identical to the reference-shaped Dinic (flags are
-            # the unique minimal min cut for ANY max flow);
-            # TILER_KERNEL=dinic|pr|c switches engines for A/B
+            # min_cut picks the engine (compiled Dinic, or the numpy
+            # Dinic without a C compiler); flags are the unique
+            # minimal min cut either way
             flags, part_two, cut, _ = min_cut(graph, sources, sinks)
         balance = abs(n // 2 - part_two)
         return ((cut, balance, job_idx), flags, part_two, cut, job_idx)
@@ -103,21 +102,13 @@ def best_inertial_cut(
     if n >= PARALLEL_JOBS_MIN_N and (jobs_workers is None or jobs_workers > 1):
         from concurrent.futures import ThreadPoolExecutor
 
-        from .cdinic import available
-
-        if available():
-            graph.base_csr()  # build the shared CSR once, not per thread
-            width = n_jobs if jobs_workers is None else min(n_jobs, jobs_workers)
-            with ThreadPoolExecutor(max_workers=width) as pool:
-                results = list(pool.map(run_job, range(n_jobs)))
-            # frozen total-order argmin — thread completion order is
-            # irrelevant, the key includes job_idx
-            best = min(results, key=lambda r: r[0])
-            return best[1], best[2], best[3], best[4]
-    best = None
-    for job_idx in range(n_jobs):
-        r = run_job(job_idx)
-        if best is None or r[0] < best[0]:
-            best = r
-    assert best is not None
+        graph.base_csr()  # build the shared CSR once, not per thread
+        width = n_jobs if jobs_workers is None else min(n_jobs, jobs_workers)
+        with ThreadPoolExecutor(max_workers=width) as pool:
+            results = list(pool.map(run_job, range(n_jobs)))
+    else:
+        results = [run_job(j) for j in range(n_jobs)]
+    # frozen total-order argmin — thread completion order is irrelevant,
+    # the key includes job_idx
+    best = min(results, key=lambda r: r[0])
     return best[1], best[2], best[3], best[4]

@@ -27,11 +27,13 @@ path ending at t, and get skipped (there) or explored-and-dead-ended
 (here) with the same net arc advancement at their parents. The blocking
 flow and the final (failing, hence break-free) BFS flags are therefore
 identical; we run full BFS, which vectorizes.
+
+``min_cut`` runs the compiled twin of this Dinic (kernel/cdinic.py)
+when it builds; this numpy Dinic is the test oracle and the fallback
+for a host without a C compiler.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 
@@ -158,7 +160,6 @@ class _ExtGraph:
         self.flat = flat  # edge ids, adjacency-concatenated
         self.eflow = np.zeros(len(eu), dtype=np.int64)
         self.level = np.full(n, INVALID_LEVEL, dtype=np.int64)
-        self.last = np.zeros(n, dtype=np.int64)
         # list-mirror caches for the blocking-flow hot loop
         self._ev_list = None
         self._ecap_list = None
@@ -238,7 +239,7 @@ def _blocking_flow_phase(g: _ExtGraph, s: int, t: int) -> int:
     flat2 = flat2_np.tolist()
     off2 = off2_np.tolist()
     level = level_np.tolist()
-    last = [0] * g.n
+    last = [0] * g.n  # resetCurrentEdges (dinic.go:126-130)
     pushed: list[int] = []
     deltas: list[int] = []
 
@@ -293,69 +294,20 @@ def _blocking_flow_phase(g: _ExtGraph, s: int, t: int) -> int:
     return total
 
 
-def _dfs_augment(g: _ExtGraph, s: int, t: int) -> int:
-    """Single-path variant kept for unit tests: runs one phase's first
-    augmenting path semantics via the same machinery. Mutates g.eflow
-    and g.level like the reference's dfsAugmentPath."""
-    lev_before = g.level.copy()
-    ev = g.ev.tolist()
-    ecap = g.ecap.tolist()
-    eflow = g.eflow.tolist()
-    off = g.off.tolist()
-    flat = g.flat.tolist()
-    level = g.level.tolist()
-    last = g.last.tolist()
-    stack = [s]
-    path: list[int] = []
-    f = 0
-    while stack:
-        u = stack[-1]
-        if u == t:
-            f = min(ecap[e] - eflow[e] for e in path)
-            for e in path:
-                eflow[e] += f
-                eflow[e ^ 1] -= f
-            break
-        nxt = level[u] + 1
-        base = off[u]
-        end = off[u + 1]
-        j = last[u]
-        advanced = False
-        while base + j < end:
-            e = flat[base + j]
-            v = ev[e]
-            if level[v] == nxt and ecap[e] > eflow[e]:
-                stack.append(v)
-                path.append(e)
-                advanced = True
-                break
-            j += 1
-        last[u] = j
-        if not advanced:
-            level[u] = INVALID_LEVEL
-            stack.pop()
-            if path:
-                path.pop()
-                last[stack[-1]] += 1
-    g.eflow[:] = eflow
-    g.level[:] = level
-    g.last[:] = last
-    return f
-
-
 def dinic_unit_terminal_min_cut(
     base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
 ) -> tuple[np.ndarray, int, int, None]:
-    """Production fast path: implicit-terminal unit-capacity compiled
-    Dinic (kernel/cdinic.py). The base CSR is built once per cell and
-    reused by every direction job, so a job costs zero numpy graph
-    construction — the per-job ``extended()``/contraction rebuilds were
-    a co-dominant cost of big finish kernels once the flow search
-    itself was compiled. Flags/value are the engine-independent minimal
-    min cut (same argument as dinic_min_cut_c); terminals must be
-    disjoint (guaranteed by the 25%-extremes selection). Returns None
-    in the graph slot — flow state stays inside the C call; use the
-    explicit engines when ``validate_min_cut`` is needed."""
+    """Production engine: implicit-terminal unit-capacity compiled
+    Dinic (kernel/cdinic.py), the counterpart of the reference's
+    border-nodes variant — the super source/sink and their INF arcs are
+    never materialized. The base CSR is built once per cell and reused
+    by every direction job, so a job costs zero numpy graph
+    construction. Flags/value equal ``dinic_min_cut``'s: the max-flow
+    value is unique and the flags are the unique minimal min cut of ANY
+    max flow (Picard & Queyranne 1980). Terminals must be disjoint
+    (guaranteed by the 25%-extremes selection). Returns None in the
+    graph slot — flow state stays inside the C call; use
+    ``dinic_min_cut`` when ``validate_min_cut`` is needed."""
     from . import cdinic
 
     off, flat = base.base_csr()
@@ -368,26 +320,6 @@ def dinic_unit_terminal_min_cut(
     flags = level >= 0
     part_two = int(base.n) - int(flags.sum())
     return flags, part_two, max_flow, None
-
-
-def dinic_min_cut_c(
-    base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
-) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
-    """Compiled-Dinic twin of ``dinic_min_cut`` (kernel/cdinic.py):
-    identical CSR order, current-arc semantics and final-BFS flags, so
-    the result is bit-identical — and engine-independent anyway (unique
-    flow value; flags = the unique minimal min cut of any max flow)."""
-    from . import cdinic
-
-    g = base.extended(sources, sinks)
-    s, t = base.n, base.n + 1
-    max_flow, level = cdinic.dinic_maxflow_c(
-        g.n, g.ev, g.ecap, g.eflow, g.off, g.flat, s, t
-    )
-    g.level[:] = np.where(level >= 0, level, INVALID_LEVEL)
-    flags = g.level[: base.n] != INVALID_LEVEL
-    part_two = int(base.n) - int(flags.sum())
-    return flags, part_two, max_flow, g
 
 
 def dinic_min_cut(
@@ -403,7 +335,6 @@ def dinic_min_cut(
     s, t = base.n, base.n + 1
     max_flow = 0
     while True:
-        g.last.fill(0)  # resetCurrentEdges (dinic.go:126-130)
         if _bfs_levels(g, s, t):
             max_flow += _blocking_flow_phase(g, s, t)
         else:
@@ -412,416 +343,19 @@ def dinic_min_cut(
             return flags, part_two, max_flow, g
 
 
-def _bfs_dist_transpose(g: _ExtGraph, start: int) -> np.ndarray:
-    """Vectorized BFS distances ON THE TRANSPOSE of the residual graph:
-    d[v] = length of the shortest residual path FROM v TO ``start``.
-    Expanding a frontier vertex w follows its CSR arcs f = (w, v) and
-    admits v when residual(f^1) > 0, i.e. the residual arc (v, w)
-    exists — so only the one CSR is ever needed."""
-    n = g.n
-    ev, ecap, eflow, off, flat = g.ev, g.ecap, g.eflow, g.off, g.flat
-    INF = np.iinfo(np.int64).max
-    d = np.full(n, INF, dtype=np.int64)
-    d[start] = 0
-    frontier = np.array([start], dtype=np.int64)
-    lvl = 0
-    while frontier.size:
-        starts = off[frontier]
-        counts = off[frontier + 1] - starts
-        total = int(counts.sum())
-        if total == 0:
-            break
-        base = np.repeat(starts, counts)
-        step = np.arange(total, dtype=np.int64) - np.repeat(
-            np.cumsum(counts) - counts, counts
-        )
-        eidx = flat[base + step]
-        tgt = ev[eidx]
-        rev = eidx ^ 1
-        ok = (ecap[rev] - eflow[rev] > 0) & (d[tgt] == INF)
-        tgt = tgt[ok]
-        if tgt.size == 0:
-            break
-        lvl += 1
-        d[tgt] = lvl
-        frontier = np.unique(tgt)
-    return d
-
-
-def _sequential_discharge(
-    g: _ExtGraph, s: int, t: int, h_np: np.ndarray, ex_np: np.ndarray,
-    active: np.ndarray, max_ops: int,
-) -> bool:
-    """Sequential FIFO discharge (current-arc push/relabel) for small
-    active sets — list indexing beats numpy round overhead by orders of
-    magnitude at tail sizes. Runs at most ~max_ops arc operations, then
-    syncs state back and returns False so the caller can GLOBAL RELABEL
-    and re-enter: without that, excess trapped behind a freshly
-    saturated cut climbs heights one relabel at a time across the whole
-    trapped region (millions of ops) instead of jumping straight to
-    n + dist_to_s. Returns True when all excess is discharged."""
-    from collections import deque
-
-    n = g.n
-    ev = g.ev.tolist()
-    ecap = g.ecap.tolist()
-    eflow = g.eflow.tolist()
-    off = g.off.tolist()
-    flat = g.flat.tolist()
-    h = h_np.tolist()
-    ex = ex_np.tolist()
-    cur = [0] * n
-    INF = np.iinfo(np.int64).max
-    q = deque(int(u) for u in active)
-    in_q = bytearray(n)
-    for u in active:
-        in_q[int(u)] = 1
-    ops = 0
-    while q and ops < max_ops:
-        u = q.popleft()
-        in_q[u] = 0
-        base, end = off[u], off[u + 1]
-        unmovable = False
-        while ex[u] > 0 and ops < max_ops:
-            j = cur[u]
-            ops += 1
-            if base + j < end:
-                e = flat[base + j]
-                v = ev[e]
-                if ecap[e] > eflow[e] and h[u] == h[v] + 1:
-                    f = ex[u]
-                    r = ecap[e] - eflow[e]
-                    if r < f:
-                        f = r
-                    eflow[e] += f
-                    eflow[e ^ 1] -= f
-                    ex[u] -= f
-                    ex[v] += f
-                    if v != s and v != t and not in_q[v]:
-                        q.append(v)
-                        in_q[v] = 1
-                    if ecap[e] > eflow[e]:
-                        continue  # non-saturating: arc stays current
-                cur[u] = j + 1
-            else:
-                # relabel: 1 + min height over residual arcs
-                mn = INF - 1
-                for jj in range(base, end):
-                    e = flat[jj]
-                    if ecap[e] > eflow[e]:
-                        hv = h[ev[e]]
-                        if hv < mn:
-                            mn = hv
-                ops += end - base
-                if mn >= INF - 1:
-                    # no residual arc: excess is unmovable (never
-                    # happens for preflows) — drop, don't re-queue
-                    unmovable = True
-                    break
-                if mn + 1 > h[u]:  # relabels never lower a height
-                    h[u] = mn + 1
-                cur[u] = 0
-        if ex[u] > 0 and not unmovable and not in_q[u]:
-            # budget exhausted mid-discharge: keep it active
-            q.append(u)
-            in_q[u] = 1
-    g.eflow[:] = eflow
-    h_np[:] = h
-    ex_np[:] = ex
-    return not q
-
-
-def push_relabel_min_cut(
-    base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
-) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
-    """Vectorized synchronous push-relabel with periodic global
-    relabeling — same contract and BIT-IDENTICAL result as
-    ``dinic_min_cut``:
-
-    - the max-flow VALUE is unique, and
-    - the returned flags are the source-side residual-reachable set of a
-      max FLOW, which is the unique MINIMAL min cut (Picard & Queyranne
-      1980) — independent of which max flow any algorithm finds, hence
-      of the algorithm itself. ``tests/test_kernel_maxflow.py`` asserts
-      equality against Dinic and Edmonds-Karp on every fixture.
-
-    Parallel-round validity: each round is (a) a push sub-phase — every
-    active vertex pushes on at most its first admissible arc, heights
-    frozen, distinct arcs per pusher (two endpoints can never both find
-    the same undirected pair admissible) — then (b) a relabel sub-phase
-    over the POST-push residual graph, h[v] = max(h[v], 1 + min h over
-    residual arcs), which preserves the valid-labeling invariant (a
-    fresh residual arc (v, u) created by a push into v has
-    h[u] = h_old[v] + 1, so the min over current arcs caps h'[v] at
-    h[u] + 1). Every round therefore maps to a legal sequential
-    execution of generic push-relabel, which terminates with a valid
-    max flow for ANY operation order (Goldberg & Tarjan 1988).
-
-    The artificial s->src arcs are capped at (real out-capacity of the
-    source) + 1 instead of INF: net flow through a source vertex can
-    never exceed its real out-capacity, so the cap never saturates —
-    residual reachability of every source (hence the flags) and the
-    max-flow value are untouched — while the initial excess flood stays
-    O(E) instead of O(INF).
-
-    Progressive source caps (round 6): the flood is further capped at
-    ``TILER_PR_CAP0`` (default 128) per s-arc initially. All flow
-    enters through the s-arcs, so the capped network's max-flow value
-    is min(sum caps, F); when the drained preflow leaves an s-arc
-    SATURATED below its full (outcap + 1) cap, the cap may have been
-    binding — grow it 8x, re-flood the delta as excess (the arc stays
-    saturated, so no residual s->arc invalidates the labeling) and
-    keep discharging with heights intact. When every s-arc ends
-    unsaturated-or-at-full-cap the value equals the true F and the
-    final flow IS a max flow of the uncapped network, so the
-    residual-reachability flags are the same unique minimal min cut.
-    Why it pays: typical cuts here are tens of edges while outcap(S)
-    after contraction is thousands — without the cap, O(outcap) excess
-    floods in and every surplus unit walks all the way back to s
-    through the discharge loop (profiled: 223k arc ops, ~90% of a
-    direction job, for a cut of 63)."""
-    g = base.extended(sources, sinks)
-    n = g.n
-    s, t = base.n, base.n + 1
-    eu, ev, ecap, eflow, off, flat = g.eu, g.ev, g.ecap, g.eflow, g.off, g.flat
-    m0 = len(base.eu)
-    INF = np.iinfo(np.int64).max
-
-    # cap s->src arcs (even ids m0, m0+2, ...) at real out-capacity + 1,
-    # bounded by the progressive starting cap
-    ns = len(sources)
-    s_arcs = m0 + 2 * np.arange(ns, dtype=np.int64)
-    cap0 = int(os.environ.get("TILER_PR_CAP0", "128"))
-    if ns:
-        real_outcap = np.bincount(eu[:m0], minlength=n)
-        cap_full = real_outcap[np.asarray(sources, dtype=np.int64)] + 1
-        ecap[s_arcs] = np.minimum(cap_full, max(cap0, 1))
-
-    h = np.zeros(n, dtype=np.int64)
-    ex = np.zeros(n, dtype=np.int64)
-
-    def global_relabel() -> None:
-        d_t = _bfs_dist_transpose(g, t)
-        d_s = _bfs_dist_transpose(g, s)
-        h_new = np.where(
-            d_t != INF, d_t, np.where(d_s != INF, n + d_s, 2 * n)
-        )
-        h_new[s] = n
-        h_new[t] = 0
-        np.maximum(h, h_new, out=h)
-
-    global_relabel()
-    # saturate the source arcs
-    if ns:
-        f0 = ecap[s_arcs]
-        eflow[s_arcs] += f0
-        eflow[s_arcs ^ 1] -= f0
-        np.add.at(ex, ev[s_arcs], f0)
-
-    m_work = max(len(flat), 1)
-    work = 0
-    rounds_since_gr = 0
-    #: below this active-set size, numpy round overhead beats the work —
-    #: finish with a sequential FIFO discharge loop (hi_pr-style)
-    tail_threshold = 4096
-    def _grow_caps() -> bool:
-        """Preflow drained at the current caps: grow any s-arc that
-        ended saturated below its full cap (its cap may have been the
-        binding cut) and re-flood the delta — re-saturating the arc
-        keeps the labeling valid (no new residual arc out of s).
-        Returns True when another drain round is needed."""
-        nonlocal work, rounds_since_gr
-        if not ns:
-            return False
-        grow = (eflow[s_arcs] == ecap[s_arcs]) & (ecap[s_arcs] < cap_full)
-        if not grow.any():
-            return False
-        garcs = s_arcs[grow]
-        new_cap = np.minimum(cap_full[grow], ecap[garcs] * 8)
-        delta = new_cap - ecap[garcs]
-        ecap[garcs] = new_cap
-        eflow[garcs] += delta
-        eflow[garcs ^ 1] -= delta
-        np.add.at(ex, ev[garcs], delta)
-        global_relabel()
-        work = 0
-        rounds_since_gr = 0
-        return True
-
-    while True:
-        act = np.flatnonzero(ex > 0)
-        act = act[(act != s) & (act != t)]
-        if act.size == 0:
-            if _grow_caps():
-                continue
-            break
-        if act.size < tail_threshold:
-            # exact distances before each chunk keep tail climbs short;
-            # the op budget bounds how far stale heights can wander
-            # before the next global relabel jumps trapped excess home
-            global_relabel()
-            if _sequential_discharge(
-                g, s, t, h, ex, act, max_ops=max(m_work, 1 << 20)
-            ):
-                if _grow_caps():
-                    continue
-                break
-            continue
-        # global relabel on either trigger: arc-scan work (the classic
-        # hi_pr heuristic) or round count — without the latter, trapped
-        # excess climbs heights +1 per round for up to 2N tiny rounds
-        # before the next work-triggered relabel jumps it home
-        if work >= m_work or rounds_since_gr >= 128:
-            global_relabel()
-            work = 0
-            rounds_since_gr = 0
-        rounds_since_gr += 1
-        starts = off[act]
-        counts = off[act + 1] - starts
-        keep = counts > 0
-        act, starts, counts = act[keep], starts[keep], counts[keep]
-        if act.size == 0:
-            break
-        total = int(counts.sum())
-        seg_off = np.cumsum(counts) - counts
-        base_r = np.repeat(starts, counts)
-        step = np.arange(total, dtype=np.int64) - np.repeat(seg_off, counts)
-        eidx = flat[base_r + step]
-        res = ecap[eidx] - eflow[eidx]
-        hw = h[ev[eidx]]
-        hv = np.repeat(h[act], counts)
-        work += total
-
-        # push sub-phase: first admissible arc per active vertex
-        adm = (res > 0) & (hv == hw + 1)
-        pos = np.where(adm, np.arange(total, dtype=np.int64), total)
-        first = np.minimum.reduceat(pos, seg_off)
-        has_adm = first < (seg_off + counts)
-        if has_adm.any():
-            e_push = eidx[first[has_adm]]
-            u = act[has_adm]
-            f = np.minimum(ex[u], ecap[e_push] - eflow[e_push])
-            eflow[e_push] += f
-            eflow[e_push ^ 1] -= f
-            ex[u] -= f
-            np.add.at(ex, ev[e_push], f)
-
-        # relabel sub-phase on POST-push residuals, only for vertices
-        # that are still active and found no admissible arc
-        rl = ~has_adm
-        rl &= ex[act] > 0
-        if rl.any():
-            ract = act[rl]
-            rstarts = off[ract]
-            rcounts = off[ract + 1] - rstarts
-            rtotal = int(rcounts.sum())
-            rseg = np.cumsum(rcounts) - rcounts
-            rbase = np.repeat(rstarts, rcounts)
-            rstep = np.arange(rtotal, dtype=np.int64) - np.repeat(rseg, rcounts)
-            reidx = flat[rbase + rstep]
-            rres = ecap[reidx] - eflow[reidx]
-            rh = np.where(rres > 0, h[ev[reidx]], INF - 1)
-            mn = np.minimum.reduceat(rh, rseg)
-            # NB: h[ract] fancy indexing yields a copy — assign, never
-            # use it as an `out=` target
-            h[ract] = np.maximum(h[ract], mn + 1)
-            work += rtotal
-
-    max_flow = int(eflow[s_arcs].sum()) if ns else 0
-    reached = _bfs_levels(g, s, t)
-    assert not reached, "push-relabel terminated with an s-t residual path"
-    flags = g.level[: base.n] != INVALID_LEVEL
-    part_two = int(base.n) - int(flags.sum())
-    return flags, part_two, max_flow, g
-
-
-def contracted_min_cut(
-    base: FlowGraph,
-    sources: np.ndarray,
-    sinks: np.ndarray,
-    engine=None,
-) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
-    """Source/sink-set contraction + vectorized push-relabel — the
-    vectorized counterpart of the reference's border-nodes variant
-    (buildBorderNodes, `/root/reference/pkg/partitioner/dinic.go:250-263`:
-    only boundary terminals matter, interior ones are dead weight).
-
-    Every source is s-reachable through a never-saturating arc, so all
-    sources lie on the source side of the unique minimal min cut (and
-    symmetrically sinks on the sink side): contracting each set into a
-    single terminal S / T preserves (a) every source/sink-respecting
-    cut's capacity — only intra-set arcs drop, and those never cross —
-    and (b) the min-cut family, because a cut placing a source on the
-    t-side pays that source's capped s-arc (out-capacity + 1), strictly
-    worse than keeping it. The minimal cut therefore maps back verbatim:
-    flags[source] = True, flags[sink] = False, flags[v] =
-    contracted_flags[map[v]]. The max-flow value is identical.
-    ``tests/test_kernel_maxflow.py`` asserts bit-equality vs Dinic.
-
-    Cost: the contracted instance has ~half the vertices and sheds every
-    intra-set arc, and the push-relabel excess flood shrinks from
-    O(sum outcap(sources)) to O(boundary arcs)."""
-    n = base.n
-    sources = np.asarray(sources, dtype=np.int64)
-    sinks = np.asarray(sinks, dtype=np.int64)
-    role = np.zeros(n, dtype=np.int8)  # 0 interior, 1 source, 2 sink
-    role[sources] = 1
-    role[sinks] = 2
-    interior = np.flatnonzero(role == 0)
-    n_in = len(interior)
-    S, T = n_in, n_in + 1
-    vmap = np.empty(n, dtype=np.int64)
-    vmap[interior] = np.arange(n_in)
-    vmap[role == 1] = S
-    vmap[role == 2] = T
-
-    # base arcs are interleaved (u,v),(v,u) pairs: contract the DIRECTED
-    # edge list (even ids), drop intra-set arcs, rebuild pairs
-    tails = vmap[base.eu[0::2]]
-    heads = vmap[base.ev[0::2]]
-    keep = tails != heads
-    cbase = FlowGraph.from_directed_edges(n_in + 2, tails[keep], heads[keep])
-    if engine is None:
-        engine = push_relabel_min_cut
-    cflags, _cp2, max_flow, g = engine(
-        cbase, np.array([S], dtype=np.int64), np.array([T], dtype=np.int64)
-    )
-    flags = np.empty(n, dtype=bool)
-    flags[role == 1] = True
-    flags[role == 2] = False
-    flags[interior] = cflags[:n_in]
-    part_two = int(n) - int(flags.sum())
-    return flags, part_two, max_flow, g
-
-
-#: below this vertex count the current-arc DFS Dinic beats push-relabel
-#: (measured crossover ~6-8k on geometric kNN graphs: PR pays fixed
-#: global-relabel BFS + list-conversion overhead per job)
-SMALL_CUT_THRESHOLD = 8192
-
-
 def min_cut(
     base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
-) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
-    """Production kernel selector: results identical for every engine
-    by construction (see contracted_min_cut / dinic_min_cut_c).
-    Default 'auto' prefers the source/sink-contracted COMPILED Dinic
-    (kernel/cdinic.py — ~50x the numpy engines on the high-diameter
-    cells this partitioner cuts) and falls back to the round-5
-    size-dispatched numpy pair when no C toolchain is available.
-    TILER_KERNEL=dinic|pr|c forces one implementation for A/B runs."""
+) -> tuple[np.ndarray, int, int, "_ExtGraph | None"]:
+    """The one place that picks the max-flow engine: the compiled
+    implicit-terminal Dinic when kernel/cdinic.py built, else the numpy
+    ``dinic_min_cut`` (about 10x slower; ``cdinic`` warns once when the
+    build fails). Both return the same (flags, part_two, cut): the flow
+    value is unique and the flags are the unique minimal min cut."""
     from . import cdinic
 
-    mode = os.environ.get("TILER_KERNEL", "auto")
-    if mode == "auto" and cdinic.available():
-        mode = "cfast"
-    if mode == "cfast":
+    if cdinic.available():
         return dinic_unit_terminal_min_cut(base, sources, sinks)
-    if mode == "c":
-        return contracted_min_cut(base, sources, sinks, engine=dinic_min_cut_c)
-    if mode == "dinic" or (mode == "auto" and base.n < SMALL_CUT_THRESHOLD):
-        return dinic_min_cut(base, sources, sinks)
-    return contracted_min_cut(base, sources, sinks)
+    return dinic_min_cut(base, sources, sinks)
 
 
 def validate_min_cut(
@@ -856,9 +390,6 @@ def validate_min_cut(
     eu, ev = g.eu[:m0], g.ev[:m0]
     cross = int((flags[eu] & ~flags[ev]).sum())
     assert cross == cut_edges, f"cut capacity {cross} != max flow {cut_edges}"
-    # NET flow out of s == NET flow into t (the flow-value identity).
-    # Netting matters for push-relabel results: returned excess may exit
-    # through a different source's src->s arc than it entered, leaving a
-    # legal circulation through s that positive-only sums would miscount
-    # (Dinic never creates one, so this is a strict generalization).
+    # NET flow out of s == NET flow into t (the flow-value identity);
+    # netting keeps the check valid for any legal circulation through s
     assert outf[n] - inf_[n] == inf_[n + 1] - outf[n + 1], "source-out != sink-in"

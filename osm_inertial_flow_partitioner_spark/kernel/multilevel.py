@@ -132,6 +132,9 @@ def multilevel_finish_local(
     if coords_aligned:
         lat0 = np.asarray(lat_by_vertex, dtype=np.float64)
         lon0 = np.asarray(lon_by_vertex, dtype=np.float64)
+        assert len(lat0) == len(lon0) == len(ids0), (
+            "coords_aligned: lat/lon must align to np.sort(vertex_ids)"
+        )
     elif isinstance(lat_by_vertex, dict):
         lat0 = np.array([lat_by_vertex[int(v)] for v in ids0], dtype=np.float64)
         lon0 = np.array([lon_by_vertex[int(v)] for v in ids0], dtype=np.float64)

@@ -97,8 +97,8 @@ METRICS_SCHEMA = (
 #: active cells smaller than this finish their whole recursion in one
 #: kernel call (a few MB of int64/float64 arrays per cell). Round-5
 #: default was 16k, sized to the ~10s-per-16k-cell numpy kernel; round
-#: 6 raised it to 64k after the compiled Dinic landed (kernel/cdinic.py
-#: — the same 16k finish now runs ~0.3s, a 28k finish ~1.5s), so a
+#: 6 raised it to 64k after the compiled Dinic landed (``min_cut``'s C
+#: engine — the same 16k finish now runs ~0.3s, a 28k finish ~1.5s), so a
 #: local finish beats a ~6-9s distributed round up to far larger cells
 #: (50k docs: 4 rounds/level -> 1, same-window A/B in
 #: OPTIMIZATION_r06.md). Cells past ``PROMOTE_CAP x`` this threshold
@@ -300,7 +300,7 @@ def _make_cc_roles_kernel(rate: float):
     jobs = direction_jobs()
 
     def kernel(key, vdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        from ..kernel import cdinic
+        from ..kernel import cc_min_label
 
         root, path = int(key[0]), int(key[1])
         vdf = vdf.sort_values("vertex_id")
@@ -312,24 +312,7 @@ def _make_cc_roles_kernel(rate: float):
         if len(edf):
             lt = np.searchsorted(ids, edf["tail"].to_numpy(np.int64))
             lh = np.searchsorted(ids, edf["head"].to_numpy(np.int64))
-            if cdinic.available():
-                # compiled union-find by min local index — same labels
-                # as the propagation fixpoint below, ~50x at big cells
-                label = cdinic.cc_min_label_c(n, lt, lh)
-            else:
-                while True:
-                    # hook: each endpoint adopts the smaller label
-                    lu, lv = label[lt], label[lh]
-                    np.minimum.at(label, lt, lv)
-                    np.minimum.at(label, lh, lu)
-                    # pointer-jump to the fixpoint of label[label]
-                    while True:
-                        nxt = label[label]
-                        if np.array_equal(nxt, label):
-                            break
-                        label = nxt
-                    if np.array_equal(label[lt], label[lh]):
-                        break
+            label = cc_min_label(n, lt, lh)
         # label indices are positions of ascending ids -> min position
         # IS the min original vertex id of the component
         comp = ids[label]
@@ -420,15 +403,13 @@ def _make_direction_kernel(thread_budget: int = 10):
                 flags, part_two, cut, _ = min_cut(graph, sources, sinks)
             return flags, part_two, cut
 
-        from ..kernel import cdinic
-
         # ``thread_budget`` is the driver's cores-per-concurrent-group
         # estimate: with several big cells in flight, a full 10-thread
         # pool PER TASK oversubscribes the host (round-6 500k profile:
         # multi-cell direction rounds ran FASTER at local[8] than
         # local[32] purely from thread contention)
         workers = max(1, min(len(jobs), thread_budget))
-        if cdinic.available() and n >= 2048 and workers > 1:
+        if n >= 2048 and workers > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             graph.base_csr()  # build the shared CSR once, not per thread
@@ -859,8 +840,8 @@ def _run_level(
                 e_act = _label_edges(edges, act)
                 # ALWAYS decompose by connected component here. The CC
                 # pass is not just task fan-out: min-cut cost grows
-                # superlinearly with subgraph size, so running Dinic /
-                # push-relabel per component is fundamentally cheaper
+                # superlinearly with subgraph size, so running Dinic
+                # per component is fundamentally cheaper
                 # than one full-cell run even when the (cell x direction)
                 # tasks already saturate the cluster. (Round-2 lesson:
                 # gating this on task count — `n_big * 10 < parallelism`

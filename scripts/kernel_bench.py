@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Max-flow kernel micro-benchmark: one direction job on a synthetic
-geometric kNN graph at the bench's root-cell scale (n ~ 125k). Compares
-available min-cut kernels for identical (flags, part_two, max_flow).
+geometric kNN graph at the bench's root-cell scale (n ~ 125k). Times the
+numpy Dinic oracle against the production ``min_cut`` and checks they
+return identical (flags, part_two, max_flow).
 
     python scripts/kernel_bench.py [n] [k]
 """
@@ -19,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from osm_inertial_flow_partitioner_spark.kernel.maxflow import (  # noqa: E402
     FlowGraph,
     dinic_min_cut,
+    min_cut,
 )
 
 
@@ -77,32 +79,16 @@ def main() -> None:
     sources = order[:kk]
     sinks = order[::-1][:kk]
 
-    from osm_inertial_flow_partitioner_spark.kernel.maxflow import (
-        contracted_min_cut,
-        push_relabel_min_cut,
-    )
-
-    kernels = {
-        "dinic": dinic_min_cut,
-        "push_relabel": push_relabel_min_cut,
-        "contracted_pr": contracted_min_cut,
-    }
-    if os.environ.get("SKIP_DINIC"):
-        del kernels["dinic"]
-
     results = {}
-    for name, fn in kernels.items():
+    for name, fn in (("dinic", dinic_min_cut), ("min_cut", min_cut)):
         t0 = time.time()
         flags, part_two, max_flow, _g = fn(graph, sources, sinks)
         dt = time.time() - t0
         results[name] = (flags, part_two, max_flow)
         print(f"{name}: {dt:.2f}s  max_flow={max_flow} part_two={part_two}")
-    names = list(results)
-    for other in names[1:]:
-        a, b = results[names[0]], results[other]
-        same = bool(np.array_equal(a[0], b[0])) and a[1:] == b[1:]
-        print(f"IDENTICAL {names[0]} vs {other}: {same}")
-
+    a, b = results["dinic"], results["min_cut"]
+    same = bool(np.array_equal(a[0], b[0])) and a[1:] == b[1:]
+    print(f"IDENTICAL dinic vs min_cut: {same}")
 
 if __name__ == "__main__":
     main()

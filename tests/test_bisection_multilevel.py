@@ -12,6 +12,7 @@ from osm_inertial_flow_partitioner_spark.kernel import (
     recursive_bisection,
 )
 from osm_inertial_flow_partitioner_spark.kernel.multilevel import (
+    multilevel_finish_local,
     pv_offsets,
     unpack_cell_numbers,
 )
@@ -35,13 +36,10 @@ def test_recursive_bisection_grid():
 
 
 def test_recursive_bisection_dag_pool_matches_serial():
-    """The task-DAG thread-pool scheduler (engaged for cells >= 32768
-    when the compiled kernel exists) must reproduce the serial loop's
-    cells AND stats sequence exactly — the round-6 restructure reorders
-    execution, never results. Also pins the aligned-coords fast path
-    against the dict path."""
-    from osm_inertial_flow_partitioner_spark.kernel import cdinic
-
+    """The task-DAG thread-pool scheduler (engaged for cells >= 32768)
+    must reproduce the serial loop's cells AND stats sequence exactly —
+    the round-6 restructure reorders execution, never results. Also
+    pins the aligned-coords fast path against the dict path."""
     v, e = road_like_graph(40_000, seed=23)
     ids = v["ids"]
     serial = recursive_bisection(
@@ -54,8 +52,6 @@ def test_recursive_bisection_dag_pool_matches_serial():
         ids, v["lat"][ids], v["lon"][ids], e["tail"], e["head"], 2048,
         pool_workers=8, coords_aligned=True,
     )
-    if not cdinic.available():  # pool never engages without the C kernel
-        pytest.skip("compiled kernel unavailable; pool path inert")
     for other in (pooled, aligned):
         assert len(other.cells) == len(serial.cells)
         for a, b in zip(serial.cells, other.cells):
@@ -67,6 +63,20 @@ def test_recursive_bisection_dag_pool_matches_serial():
             (s.n, s.cut_edges, s.part_two, s.best_job, s.round)
             for s in serial.stats
         ]
+
+
+def test_coords_aligned_rejects_misaligned_coordinates():
+    v, e = unit_square_grid(4)
+    ids = v["ids"]
+    lat, lon = v["lat"][ids][:-1], v["lon"][ids][:-1]  # one short
+    with pytest.raises(AssertionError, match="coords_aligned"):
+        recursive_bisection(
+            ids, lat, lon, e["tail"], e["head"], 8, coords_aligned=True
+        )
+    with pytest.raises(AssertionError, match="coords_aligned"):
+        multilevel_finish_local(
+            ids, lat, lon, e["tail"], e["head"], [8, 4], coords_aligned=True
+        )
 
 
 def test_recursive_bisection_rejects_nonterminating_config():
@@ -157,10 +167,6 @@ def test_multilevel_finish_local_matches_full_oracle():
     """multilevel_finish_local (the one-pass multi-level finish kernel)
     must reproduce multilevel_partition_local's lower-level cells and
     numbering exactly when seeded with the oracle's top-level cells."""
-    from osm_inertial_flow_partitioner_spark.kernel.multilevel import (
-        multilevel_finish_local,
-    )
-
     v, e = road_like_graph(300, seed=11)
     cell_sizes = [8, 32, 128]
     assign, num_cells, _ = multilevel_partition_local(

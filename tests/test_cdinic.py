@@ -1,31 +1,33 @@
-"""Round-6 focused tests: the compiled Dinic kernel (kernel/cdinic.py)
-and the progressive source-cap in push-relabel must be bit-identical to
-the established engines on randomized graphs.
+"""The compiled kernels (kernel/cdinic.py) must be bit-identical to the
+numpy oracles on randomized graphs, and a failed build must be loud.
 
 Seeded fuzz battery: random geometric-ish and Erdos-Renyi graphs with
 varying density, disconnected components, duplicate edges, degenerate
-n <= 3 cells and random source/sink rates — every engine must agree on
-(flags, part_two, cut) exactly, and the flow state must pass the
+n <= 3 cells and random source/sink rates — the compiled
+implicit-terminal Dinic must agree with the numpy Dinic on (flags,
+part_two, cut) exactly, and the numpy Dinic's flow state must pass the
 reference's validation asserts.
 """
 
 from __future__ import annotations
 
+import subprocess
+import warnings
+
 import numpy as np
 import pytest
 
 from osm_inertial_flow_partitioner_spark.kernel import cdinic
+from osm_inertial_flow_partitioner_spark.kernel.inertial import best_inertial_cut
 from osm_inertial_flow_partitioner_spark.kernel.maxflow import (
     FlowGraph,
-    contracted_min_cut,
     dinic_min_cut,
-    dinic_min_cut_c,
     dinic_unit_terminal_min_cut,
-    push_relabel_min_cut,
     validate_min_cut,
 )
+from osm_inertial_flow_partitioner_spark.sources.fixtures import unit_square_grid
 
-pytestmark = pytest.mark.skipif(
+needs_cc = pytest.mark.skipif(
     not cdinic.available(), reason="no C toolchain in this runtime"
 )
 
@@ -57,6 +59,7 @@ def _random_terminals(rng: np.random.Generator, n: int):
     return perm[:k].astype(np.int64), perm[n - k :].astype(np.int64)
 
 
+@needs_cc
 def test_fuzz_engines_bit_equal():
     rng = np.random.default_rng(20260822)
     checked = 0
@@ -66,25 +69,16 @@ def test_fuzz_engines_bit_equal():
         if len(src) == 0:
             continue
         g = FlowGraph.from_directed_edges(n, tails, heads)
-        f_c, p_c, c_c, gext = contracted_min_cut(
-            g, src, snk, engine=dinic_min_cut_c
-        )
         f_d, p_d, c_d, _ = dinic_min_cut(g, src, snk)
-        f_p, p_p, c_p, _ = push_relabel_min_cut(g, src, snk)
-        f_cp, p_cp, c_cp, _ = contracted_min_cut(g, src, snk)
         f_t, p_t, c_t, _ = dinic_unit_terminal_min_cut(g, src, snk)
-        assert c_c == c_d == c_p == c_cp == c_t
-        assert p_c == p_d == p_p == p_cp == p_t
-        assert np.array_equal(f_c, f_d)
-        assert np.array_equal(f_c, f_p)
-        assert np.array_equal(f_c, f_cp)
-        assert np.array_equal(f_c, f_t)
+        assert (c_t, p_t) == (c_d, p_d)
+        assert np.array_equal(f_t, f_d)
         checked += 1
     assert checked > 100  # the battery actually ran
 
 
 def test_fuzz_raw_cdinic_validates():
-    # un-contracted compiled Dinic: flow state passes the reference's
+    # the numpy Dinic oracle's flow state passes the reference's
     # validation oracle (capacity, conservation, cut == flow)
     rng = np.random.default_rng(7)
     for _ in range(50):
@@ -93,49 +87,55 @@ def test_fuzz_raw_cdinic_validates():
         if len(src) == 0:
             continue
         g = FlowGraph.from_directed_edges(n, tails, heads)
-        flags, p2, cut, gext = dinic_min_cut_c(g, src, snk)
+        flags, p2, cut, gext = dinic_min_cut(g, src, snk)
         validate_min_cut(g, src, snk, flags, cut, gext)
 
 
-def test_cc_min_label_matches_propagation():
+@needs_cc
+def test_cc_min_label_matches_propagation(monkeypatch):
     rng = np.random.default_rng(11)
+    graphs = []
     for _ in range(50):
         n = int(rng.integers(1, 300))
         m = int(rng.integers(0, 2 * n))
         lt = rng.integers(0, n, size=m).astype(np.int64)
         lh = rng.integers(0, n, size=m).astype(np.int64)
-        # reference: numpy label-propagation fixpoint (the pre-round-6
-        # _cc_kernel body)
-        label = np.arange(n, dtype=np.int64)
-        if m:
-            while True:
-                lu, lv = label[lt], label[lh]
-                np.minimum.at(label, lt, lv)
-                np.minimum.at(label, lh, lu)
-                while True:
-                    nxt = label[label]
-                    if np.array_equal(nxt, label):
-                        break
-                    label = nxt
-                if np.array_equal(label[lt], label[lh]):
-                    break
-        got = cdinic.cc_min_label_c(n, lt, lh)
-        assert np.array_equal(got, label)
+        graphs.append((n, lt, lh, cdinic.cc_min_label_c(n, lt, lh)))
+    # the numpy label-propagation fixpoint, as run without a C compiler
+    monkeypatch.setattr(cdinic, "_LIB", None)
+    monkeypatch.setattr(cdinic, "_TRIED", True)
+    for n, lt, lh, got in graphs:
+        assert np.array_equal(got, cdinic.cc_min_label(n, lt, lh))
 
 
-def test_pr_progressive_cap_growth(monkeypatch):
-    # force a tiny starting cap so the growth path is exercised on a
-    # graph whose max flow far exceeds it
-    monkeypatch.setenv("TILER_PR_CAP0", "1")
-    rng = np.random.default_rng(99)
-    n = 60
-    tails = np.repeat(np.arange(n), 4)
-    heads = (tails + rng.integers(1, 5, size=len(tails))) % n
-    g = FlowGraph.from_directed_edges(n, tails.astype(np.int64), heads.astype(np.int64))
-    src = np.arange(0, 15, dtype=np.int64)
-    snk = np.arange(n - 15, n, dtype=np.int64)
-    f_p, p_p, c_p, _ = push_relabel_min_cut(g, src, snk)
-    monkeypatch.delenv("TILER_PR_CAP0")
-    f_d, p_d, c_d, _ = dinic_min_cut(g, src, snk)
-    assert c_p == c_d and p_p == p_d and np.array_equal(f_p, f_d)
-    assert c_d > 1  # the cap really was below the flow
+def test_build_failure_warns_once_and_falls_back(monkeypatch):
+    v, e = unit_square_grid(7)
+    ids = v["ids"]
+    lat, lon = v["lat"][ids], v["lon"][ids]
+
+    def cut():
+        graph = FlowGraph.from_directed_edges(len(ids), e["tail"], e["head"])
+        return best_inertial_cut(graph, lat, lon)
+
+    expected = cut()  # the compiled engine wherever a C compiler exists
+
+    def failing_build():
+        raise subprocess.CalledProcessError(
+            1, ["cc"], stderr=b"cc: fatal error: no input files"
+        )
+
+    # reset the once-per-process build state around a failing build
+    monkeypatch.setattr(cdinic, "_build", failing_build)
+    monkeypatch.setattr(cdinic, "_LIB", None)
+    monkeypatch.setattr(cdinic, "_TRIED", False)
+    with pytest.warns(
+        RuntimeWarning,
+        match=r"cc: fatal error: no input files.*numpy engines, about 10x slower",
+    ):
+        flags, part_two, cut_edges, job = cut()
+    assert not cdinic.available()
+    assert np.array_equal(flags, expected[0])
+    assert (part_two, cut_edges, job) == expected[1:]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # one warning per process
+        cut()

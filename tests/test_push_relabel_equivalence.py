@@ -1,11 +1,11 @@
-"""Push-relabel / contraction kernels must be BIT-IDENTICAL to the
-reference-shaped Dinic on (flags, part_two, max_flow): the max-flow
-value is unique and the flags are the unique minimal min cut
-(Picard-Queyranne), independent of which max flow an algorithm finds.
+"""The production ``min_cut`` must be BIT-IDENTICAL to the numpy
+reference-shaped Dinic oracle on (flags, part_two, max_flow): the
+max-flow value is unique and the flags are the unique minimal min cut
+(Picard-Queyranne), independent of which max flow an engine finds.
 
-Covers every fixture graph x every inertial direction, random geometric
-and Erdos-Renyi-ish graphs (hypothesis), and flow-validity of the
-push-relabel result via the reference's debug oracle."""
+Covers every fixture graph x every inertial direction, random
+Erdos-Renyi-ish graphs (hypothesis) and a geometric 4-NN graph, and
+flow-validity of the Dinic result via the reference's debug oracle."""
 
 import numpy as np
 import pytest
@@ -21,10 +21,7 @@ from osm_inertial_flow_partitioner_spark.kernel.inertial import (
     direction_jobs,
     pick_sources_sinks,
 )
-from osm_inertial_flow_partitioner_spark.kernel.maxflow import (
-    contracted_min_cut,
-    push_relabel_min_cut,
-)
+from osm_inertial_flow_partitioner_spark.kernel.maxflow import min_cut
 from osm_inertial_flow_partitioner_spark.sources.fixtures import (
     disconnected_components,
     path_graph,
@@ -53,14 +50,12 @@ def _graph(fix):
     )
 
 
-def _assert_all_equal(graph, sources, sinks, validate=True):
+def _assert_all_equal(graph, sources, sinks):
     fd, p2d, mfd, gd = dinic_min_cut(graph, sources, sinks)
-    fp, p2p, mfp, gp = push_relabel_min_cut(graph, sources, sinks)
-    fc, p2c, mfc, _gc = contracted_min_cut(graph, sources, sinks)
-    assert np.array_equal(fd, fp) and np.array_equal(fd, fc)
-    assert (p2d, mfd) == (p2p, mfp) == (p2c, mfc)
-    if validate:
-        validate_min_cut(graph, sources, sinks, fp, mfp, gp)
+    fp, p2p, mfp, _ = min_cut(graph, sources, sinks)
+    assert np.array_equal(fd, fp)
+    assert (p2d, mfd) == (p2p, mfp)
+    validate_min_cut(graph, sources, sinks, fd, mfd, gd)
 
 
 @pytest.mark.parametrize("name", sorted(FIXTURES))
@@ -107,7 +102,7 @@ def test_geometric_graph_identical():
     graph = FlowGraph.from_directed_edges(
         n, np.array(tails)[order], np.array(heads)[order]
     )
-    for a, b in direction_jobs()[:4]:
+    for a, b in direction_jobs():
         proj = a * lon + b * lat
         sources, sinks = pick_sources_sinks(proj, 0.25)
         _assert_all_equal(graph, sources, sinks)
