@@ -6,7 +6,6 @@ the *number of cells*, which doubles every bisection round.
 """
 
 from .maxflow import FlowGraph, dinic_min_cut, validate_min_cut  # noqa: F401
-from .cdinic import cc_min_label  # noqa: F401
 from .inertial import best_inertial_cut, direction_jobs  # noqa: F401
 from .bisection import bisect_once, recursive_bisection  # noqa: F401
 from .multilevel import multilevel_partition_local, pack_cell_numbers  # noqa: F401

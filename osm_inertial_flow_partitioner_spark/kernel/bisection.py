@@ -75,6 +75,7 @@ def bisect_once(
     tails: np.ndarray,
     heads: np.ndarray,
     rate: float = SOURCE_SINK_RATE,
+    jobs_workers: int | None = None,
 ) -> tuple[np.ndarray, CutStats]:
     """Bisect one cell. Inputs use *original* vertex ids:
 
@@ -87,13 +88,19 @@ def bisect_once(
       ForOutEdgesOfVertex. Edges with an endpoint outside the cell must
       already be dropped (the J3 semi-join, recursiveBisection.go:155-159).
 
+    ``jobs_workers`` caps the direction-job thread pool, as in
+    ``best_inertial_cut`` (None = its size-gated auto policy).
+
     Returns (side array: 0 = partition one / source side, 1 = partition
     two; stats).
     """
     n = len(vertex_ids)
     lt = np.searchsorted(vertex_ids, tails)
     lh = np.searchsorted(vertex_ids, heads)
-    return _bisect_local(n, lat, lon, lt, lh, rate)
+    assert np.array_equal(vertex_ids[np.minimum(lt, n - 1)], tails) and (
+        np.array_equal(vertex_ids[np.minimum(lh, n - 1)], heads)
+    ), "bisect_once: an edge endpoint is not a vertex of the cell"
+    return _bisect_local(n, lat, lon, lt, lh, rate, jobs_workers=jobs_workers)
 
 
 @dataclass

@@ -1,4 +1,4 @@
-"""Compiled (C, via ctypes) kernels: the production min-cut and CC.
+"""Compiled (C, via ctypes) kernel: the production min-cut.
 
 The numpy Dinic in ``maxflow.py`` pays per-BFS-level numpy dispatch
 overhead and per-arc Python interpretation in its hot loop; on the
@@ -21,9 +21,8 @@ Build discipline: the C source below is compiled ONCE per machine into
 a content-hashed shared object under the system temp dir (atomic
 rename, so concurrent Python workers race safely). When the build or
 dlopen fails — no compiler, sandboxed tmp — ``available()`` is False,
-``maxflow.min_cut`` and ``cc_min_label`` run their numpy engines, and
-the first call in the process emits a ``RuntimeWarning`` naming the
-failure.
+``maxflow.min_cut`` runs the numpy Dinic, and the first call in the
+process emits a ``RuntimeWarning`` naming the failure.
 """
 
 from __future__ import annotations
@@ -141,32 +140,6 @@ i64 dinic_unit_terminal(i64 n, i64 m, const i64 *ev, const i64 *off,
     free(queue); free(it); free(stack_v); free(stack_e); free(eflow);
     return flow;
 }
-
-/* Connected components by union-find; comp[i] = minimum ORIGINAL id
-   (ids[] ascending) in i's component, matching the frozen cc rule. */
-void cc_min_label(i64 n, i64 m, const i64 *lt, const i64 *lh, i64 *comp) {
-    i64 *parent = (i64 *)malloc((size_t)n * sizeof(i64));
-    if (!parent) { for (i64 i = 0; i < n; i++) comp[i] = -1; return; }
-    for (i64 i = 0; i < n; i++) parent[i] = i;
-    for (i64 e = 0; e < m; e++) {
-        i64 a = lt[e], b = lh[e];
-        while (parent[a] != a) { parent[a] = parent[parent[a]]; a = parent[a]; }
-        while (parent[b] != b) { parent[b] = parent[parent[b]]; b = parent[b]; }
-        if (a == b) continue;
-        /* union by smaller root index -> root IS the min local index,
-           and local indices are positions of ascending original ids */
-        if (a < b) parent[b] = a; else parent[a] = b;
-    }
-    for (i64 i = 0; i < n; i++) {
-        i64 r = i;
-        while (parent[r] != r) r = parent[r];
-        /* path compression for the scan */
-        i64 c = i;
-        while (parent[c] != r) { i64 nx = parent[c]; parent[c] = r; c = nx; }
-        comp[i] = r;
-    }
-    free(parent);
-}
 """
 
 _P = ctypes.POINTER(ctypes.c_int64)
@@ -199,8 +172,6 @@ def _build() -> "ctypes.CDLL":
                 except OSError:
                     pass
     lib = ctypes.CDLL(so)
-    lib.cc_min_label.restype = None
-    lib.cc_min_label.argtypes = [ctypes.c_int64, ctypes.c_int64, _P, _P, _P]
     lib.dinic_unit_terminal.restype = ctypes.c_int64
     lib.dinic_unit_terminal.argtypes = [
         ctypes.c_int64, ctypes.c_int64, _P, _P, _P,
@@ -225,8 +196,8 @@ def _lib():
                     )
                     warnings.warn(
                         f"cdinic: building the compiled kernel failed "
-                        f"({reason}); min-cut and connected components now "
-                        f"run the numpy engines, about 10x slower",
+                        f"({reason}); min-cut now runs the numpy engine, "
+                        f"about 10x slower",
                         RuntimeWarning,
                         stacklevel=2,
                     )
@@ -270,39 +241,3 @@ def dinic_unit_terminal_c(
     if mf < 0:
         raise MemoryError("cdinic: work-array allocation failed")
     return int(mf), level
-
-
-def cc_min_label_c(n: int, lt: np.ndarray, lh: np.ndarray) -> np.ndarray:
-    """Union-find components over local indices 0..n-1; returns for each
-    vertex the minimum local index of its component."""
-    lib = _lib()
-    assert lib is not None
-    lt = np.ascontiguousarray(lt, dtype=np.int64)
-    lh = np.ascontiguousarray(lh, dtype=np.int64)
-    comp = np.empty(n, dtype=np.int64)
-    lib.cc_min_label(n, len(lt), _ptr(lt), _ptr(lh), _ptr(comp))
-    return comp
-
-
-def cc_min_label(n: int, lt: np.ndarray, lh: np.ndarray) -> np.ndarray:
-    """Component labels by minimum local index: the compiled union-find
-    when it built, else a numpy label-propagation fixpoint (same
-    labels)."""
-    if available():
-        return cc_min_label_c(n, lt, lh)
-    label = np.arange(n, dtype=np.int64)
-    if len(lt):
-        while True:
-            # hook: each endpoint adopts the smaller label
-            lu, lv = label[lt], label[lh]
-            np.minimum.at(label, lt, lv)
-            np.minimum.at(label, lh, lu)
-            # pointer-jump to the fixpoint of label[label]
-            while True:
-                nxt = label[label]
-                if np.array_equal(nxt, label):
-                    break
-                label = nxt
-            if np.array_equal(label[lt], label[lh]):
-                break
-    return label

@@ -7,29 +7,29 @@ iteration is ONE distributed job: every oversized cell is bisected in
 parallel by a numpy kernel inside cogrouped ``applyInPandas``. Cut
 semantics are identical because each cell's bisection is independent.
 
-Three execution modes, chosen per round from driver-side cell counts —
-this keeps the cluster busy through the whole bisection tree:
+Three execution modes, chosen per round from driver-side cell counts:
 
-1. **direction-parallel** (few big cells, e.g. round 0's single root):
-   each (cell, direction) pair is its own Spark group — the 10 inertial
-   direction jobs (`inertial_flow.go:123-132`) run as 10 tasks instead
-   of a loop, the driver reduces with the frozen (cut, balance, job)
-   argmin. 10x shuffle volume, 10x parallelism on the serial prefix —
-   the right trade exactly when data-per-round is smallest relative to
-   the cluster;
-2. **cell-parallel** (many big cells): one group per cell, the 10
-   directions loop inside the kernel — parallelism already saturates;
-3. **local-finish** (cell below ``local_recursion_threshold``): the
-   kernel runs the *entire remaining recursion* locally in one call
-   (the reference itself is a local recursion), collapsing O(log n)
-   rounds into one pass. Lower levels typically complete in a single
-   distributed pass.
+1. **per-cell bisection** (big cells): one cogroup group per cell; the
+   10 inertial direction jobs (`inertial_flow.go:123-132`) run inside
+   the kernel on a thread pool of ``parallelism // #big cells`` threads
+   (the compiled Dinic releases the GIL), so a lone root uses every core
+   and many cells do not oversubscribe the host; the frozen
+   (cut, balance, job) argmin is taken in-process, as the reference
+   takes it (`inertial_flow.go:107-168`);
+2. **local finish** (cell below ``local_recursion_threshold``): the
+   kernel runs the *entire remaining recursion* of its cell locally in
+   one call (the reference itself is a local recursion), collapsing
+   O(log n) rounds into one pass;
+3. **ml-finish** (every entering cell of a level below the threshold):
+   one kernel call per cell completes ALL remaining levels, instead of
+   one distributed pass + relabel per level.
 
-Scale design (100 TB / 10^9+ vertices): parallelism unit = cell (or
-cell x direction); a max cell of 2^20 vertices fits one executor
-(reference main.go:21). Per round: 2 equi-joins label edge endpoints
-with their cell key, then one cogrouped shuffle feeds the kernel; all
-shuffles shrink with the active set and the active-key side broadcasts.
+Scale design (100 TB / 10^9+ vertices): parallelism unit = cell; a max
+cell of 2^20 vertices fits one executor (reference main.go:21). Per
+round: 2 equi-joins label edge endpoints with their cell key (round 0
+of the top level tags them with the literal root key instead), then one
+cogrouped shuffle feeds the kernel; all shuffles shrink with the active
+set and the active-key side broadcasts.
 Cell labels are (root, path) heap-numbered paths (prefix-free per root),
 relabeled per level by the frozen SURVEY.md §7 rule: per parent,
 non-empty cells by min original vertex id, then empty cells (degenerate
@@ -41,9 +41,8 @@ lineage/metrics via plans/checkpoint.py.
 Driver memory is independent of total cell count: per-cell sizes,
 empty-cell bookkeeping, lineage metrics and the per-level relabel all
 live in DataFrames (per-root rank window + two-phase prefix sum over
-roots); the driver touches O(1) scalars per round, plus O(active x 10)
-argmin rows in direction-parallel mode, where active < parallelism by
-construction.
+roots); the driver touches O(1) scalars per round, plus one stat row
+per bisected cell while fewer cells than ``parallelism`` are big.
 """
 
 from __future__ import annotations
@@ -58,28 +57,11 @@ from pyspark.sql import functions as F
 
 from ..config import PartitionConfig
 from ..kernel.bisection import bisect_once, recursive_bisection
-from ..kernel.inertial import direction_jobs
-from ..kernel.maxflow import FlowGraph, min_cut
 
 KERNEL_OUT_SCHEMA = (
     "root long, parent_path long, path long, vertex_id long, "
     "lat double, lon double, "
     "n int, cut_edges int, part_two int, best_job int, n_empty int"
-)
-
-#: one frame carries BOTH row kinds of the all-jobs direction kernel:
-#: vertex rows (vertex_id >= 0, job = -1) with the 10 per-job cut sides
-#: packed into ``sidespack`` bit j, and per-(component, job) stat rows
-#: (vertex_id = -1) with (cut_edges, part_two) for the frozen argmin.
-DIR_OUT_SCHEMA = (
-    "root long, path long, comp long, vertex_id long, "
-    "lat double, lon double, sidespack long, job int, "
-    "cut_edges int, part_two int"
-)
-
-CC_OUT_SCHEMA = (
-    "root long, path long, vertex_id long, lat double, lon double, "
-    "comp long, rolepack long"
 )
 
 ML_FINISH_SCHEMA = (
@@ -102,18 +84,12 @@ METRICS_SCHEMA = (
 #: local finish beats a ~6-9s distributed round up to far larger cells
 #: (50k docs: 4 rounds/level -> 1, same-window A/B in
 #: OPTIMIZATION_r06.md). Cells past ``PROMOTE_CAP x`` this threshold
-#: still bisect distributed (and the truly huge ones
-#: direction-parallel), so executor memory is never exceeded: a
+#: still bisect distributed, so executor memory is never exceeded: a
 #: 128k-vertex finish task peaks well under the 2^20-vertex
 #: executor-memory design bound.
 DEFAULT_LOCAL_RECURSION_THRESHOLD = int(
     os.environ.get("TILER_FINISH_THRESHOLD", 1 << 16)
 )
-
-#: set TILER_FINISH_PROMOTE=0 to disable the borderline-cell promote
-#: rule (below) — measurement knob so one binary can A/B the round-4
-#: round structure against the round-5 one in the same window.
-PROMOTE_ENABLED = os.environ.get("TILER_FINISH_PROMOTE", "1") != "0"
 
 #: promote-rule cap: borderline big cells are promoted to an in-kernel
 #: finish only when the largest of them is below cap * threshold. With
@@ -122,11 +98,15 @@ PROMOTE_ENABLED = os.environ.get("TILER_FINISH_PROMOTE", "1") != "0"
 #: cheaper than the distributed round it replaces. 2.5 specifically
 #: covers the 200k-doc shape, where two 55/45-ish bisections of the
 #: ~500k root leave four ~125-150k cells that a 2.0 cap sent through
-#: one more direction round + a finish round (~28s) instead of four
+#: one more bisection round + a finish round (~28s) instead of four
 #: parallel ~3s finish tasks (same-window A/B in OPTIMIZATION_r06.md).
 #: Never promotes a cell that could stress executor memory: 2.5x the
 #: 64k threshold is ~16% of the 2^20-vertex per-executor design bound.
-PROMOTE_CAP = float(os.environ.get("TILER_PROMOTE_CAP", "2.5"))
+PROMOTE_CAP = 2.5
+
+#: largest row count a prefix sum collects to the driver; bigger (or
+#: unbounded) frames take the two-phase distributed path
+DRIVER_COLLECT_MAX_ROWS = 65536
 
 
 def _sorted_cell_arrays(vdf: pd.DataFrame, edf: pd.DataFrame):
@@ -144,7 +124,7 @@ def _sorted_cell_arrays(vdf: pd.DataFrame, edf: pd.DataFrame):
 
 
 def _make_finish_kernel(max_cell_size: int, rate: float, thread_budget: int | None = None):
-    """Mode 3: complete the recursion for one small cell.
+    """Mode 2: complete the recursion for one small cell.
     ``thread_budget``: driver's cores-per-concurrent-task estimate for
     the big-cell round pool inside recursive_bisection."""
 
@@ -251,8 +231,15 @@ def _make_multilevel_finish_kernel(levels_desc: list[int], cell_sizes_desc: list
     return kernel
 
 
-def _make_bisect_kernel(rate: float):
-    """Mode 2: one bisection per cell, 10 directions in-process."""
+def _make_bisect_kernel(rate: float, thread_budget: int):
+    """Mode 1: one bisection per cell, the 10 direction jobs in-process
+    on at most ``thread_budget`` threads (the driver's
+    cores-per-concurrent-cell estimate).
+
+    A cell may hold several connected components: its whole-cell flow
+    gives the same cut as a union of per-component flows, because the
+    flags are the unique minimal min cut of any max flow
+    (Picard-Queyranne) and no augmenting path crosses components."""
 
     def kernel(key, vdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
         root, path = int(key[0]), int(key[1])
@@ -260,7 +247,9 @@ def _make_bisect_kernel(rate: float):
         assert (path << 1) < 2**62, (
             f"cell path {path} << 1 overflows the int64 heap path"
         )
-        side, st = bisect_once(ids, lat, lon, tails, heads, rate)
+        side, st = bisect_once(
+            ids, lat, lon, tails, heads, rate, jobs_workers=thread_budget
+        )
         return pd.DataFrame(
             {
                 "root": np.int64(root),
@@ -280,205 +269,26 @@ def _make_bisect_kernel(rate: float):
     return kernel
 
 
-def _make_cc_roles_kernel(rate: float):
-    """Connected components + per-job source/sink roles of one cell in
-    ONE pass (component id = min original vertex id, deterministic).
-    Enables the exact (cell x direction x component) decomposition:
-    max-flow value and residual reachability decompose by component
-    because no augmenting path crosses components.
-
-    Round 6 folded the per-job 25%-extremes ROLE computation in here
-    (packed 2 bits per job into ``rolepack``): the kernel already holds
-    the whole cell, so the 10 global (proj asc, vertex_id asc) ranks
-    are 10 stable argsorts — replacing the Spark-side 10x crossJoin +
-    rank window + two joins that previously built ``act10`` (the
-    dominant fixed cost of a direction round). The selection is
-    bit-identical to ``pick_sources_sinks`` (same float64 a*lon+b*lat,
-    same stable argsort, k = int(n*rate) truncation)."""
-    from ..kernel.inertial import direction_jobs
-
-    jobs = direction_jobs()
-
-    def kernel(key, vdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        from ..kernel import cc_min_label
-
-        root, path = int(key[0]), int(key[1])
-        vdf = vdf.sort_values("vertex_id")
-        ids = vdf["vertex_id"].to_numpy(np.int64)
-        lat = vdf["lat"].to_numpy(np.float64)
-        lon = vdf["lon"].to_numpy(np.float64)
-        n = len(ids)
-        label = np.arange(n, dtype=np.int64)
-        if len(edf):
-            lt = np.searchsorted(ids, edf["tail"].to_numpy(np.int64))
-            lh = np.searchsorted(ids, edf["head"].to_numpy(np.int64))
-            label = cc_min_label(n, lt, lh)
-        # label indices are positions of ascending ids -> min position
-        # IS the min original vertex id of the component
-        comp = ids[label]
-        k = int(n * rate)
-        assert 2 * k <= n, "source/sink rate must keep the sets disjoint"
-        rolepack = np.zeros(n, dtype=np.int64)
-        if k > 0:
-            for j, (a, b) in enumerate(jobs):
-                proj = a * lon + b * lat
-                order = np.argsort(proj, kind="stable")  # ties -> id
-                rolepack[order[:k]] |= np.int64(1) << (2 * j)
-                rolepack[order[n - k :]] |= np.int64(2) << (2 * j)
-        return pd.DataFrame(
-            {
-                "root": np.int64(root),
-                "path": np.int64(path),
-                "vertex_id": ids,
-                "lat": lat,
-                "lon": lon,
-                "comp": comp,
-                "rolepack": rolepack,
-            }
-        )
-
-    return kernel
-
-
-def _make_direction_kernel(thread_budget: int = 10):
-    """Mode 1: one (cell, component) pair per group — the 10 direction
-    jobs run INSIDE the group on a thread pool (the compiled Dinic
-    releases the GIL), each a single min-cut on this component with the
-    GLOBAL per-cell 25% source/sink selection restricted to it
-    (membership precomputed by the cc+roles kernel as 2 bits/job; the
-    frozen (proj asc, vertex_id asc) rank order is reconstructed from
-    the same float64 projection — restricting a global total order to a
-    subset preserves it). Shipping one (cell x component) group instead
-    of ten (cell x component x job) copies cuts the cogroup shuffle
-    10x; the per-job cut sides come back packed into bit j of
-    ``sidespack`` plus one stat row per job.
-
-    Exactness: augmenting paths never cross components, so the whole
-    cell's max-flow value is the sum of per-component values, and the
-    residual-reachable set (the cut flags) is the union — and the flags
-    are independent of WHICH max flow is found (the source-side reachable
-    set of any max flow is the unique minimal min cut, Picard-Queyranne),
-    so per-component arc ordering cannot change the result vs the
-    reference's whole-cell run (inertial_flow.go:134-149)."""
-    from ..kernel.inertial import direction_jobs
-
-    jobs = direction_jobs()
-
-    def kernel(key, vdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        root, path, comp = int(key[0]), int(key[1]), int(key[2])
-        vdf = vdf.sort_values("vertex_id")
-        ids = vdf["vertex_id"].to_numpy(np.int64)
-        lat = vdf["lat"].to_numpy(np.float64)
-        lon = vdf["lon"].to_numpy(np.float64)
-        rolepack = vdf["rolepack"].to_numpy(np.int64)
-        n = len(ids)
-        if len(edf):
-            edf = edf.sort_values(["tail", "edge_id"])
-            lt = np.searchsorted(ids, edf["tail"].to_numpy(np.int64))
-            lh = np.searchsorted(ids, edf["head"].to_numpy(np.int64))
-        else:
-            lt = lh = np.empty(0, dtype=np.int64)
-        graph = FlowGraph.from_directed_edges(n, lt, lh)
-
-        def run_job(job: int) -> tuple:
-            a, b = jobs[job]
-            proj = a * lon + b * lat
-            role = (rolepack >> (2 * job)) & 3
-            src_mask = role == 1
-            snk_mask = role == 2
-            # sources ascending / sinks descending global (proj, id)
-            # rank, restricted to this component (ids ascending ->
-            # stable argsort ties resolve by id, the frozen rule;
-            # descending = reversed ascending, helper.go:164-171)
-            sources = np.flatnonzero(src_mask)[
-                np.argsort(proj[src_mask], kind="stable")
-            ]
-            sinks = np.flatnonzero(snk_mask)[
-                np.argsort(proj[snk_mask], kind="stable")
-            ][::-1]
-            if len(sources) == 0:
-                flags = np.zeros(n, dtype=bool)
-                part_two, cut = n, 0
-            else:
-                flags, part_two, cut, _ = min_cut(graph, sources, sinks)
-            return flags, part_two, cut
-
-        # ``thread_budget`` is the driver's cores-per-concurrent-group
-        # estimate: with several big cells in flight, a full 10-thread
-        # pool PER TASK oversubscribes the host (round-6 500k profile:
-        # multi-cell direction rounds ran FASTER at local[8] than
-        # local[32] purely from thread contention)
-        workers = max(1, min(len(jobs), thread_budget))
-        if n >= 2048 and workers > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            graph.base_csr()  # build the shared CSR once, not per thread
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                results = list(pool.map(run_job, range(len(jobs))))
-        else:
-            results = [run_job(j) for j in range(len(jobs))]
-
-        sidespack = np.zeros(n, dtype=np.int64)
-        for j, (flags, _p2, _cut) in enumerate(results):
-            sidespack |= (~flags).astype(np.int64) << j
-        vrows = pd.DataFrame(
-            {
-                "root": np.int64(root),
-                "path": np.int64(path),
-                "comp": np.int64(comp),
-                "vertex_id": ids,
-                "lat": lat,
-                "lon": lon,
-                "sidespack": sidespack,
-                "job": np.int32(-1),
-                "cut_edges": np.int32(-1),
-                "part_two": np.int32(-1),
-            }
-        )
-        srows = pd.DataFrame(
-            {
-                "root": np.int64(root),
-                "path": np.int64(path),
-                "comp": np.int64(comp),
-                "vertex_id": np.int64(-1),
-                "lat": 0.0,
-                "lon": 0.0,
-                "sidespack": np.int64(0),
-                "job": np.arange(len(jobs), dtype=np.int32),
-                "cut_edges": np.array(
-                    [r[2] for r in results], dtype=np.int32
-                ),
-                "part_two": np.array(
-                    [r[1] for r in results], dtype=np.int32
-                ),
-            }
-        )
-        return pd.concat([vrows, srows], ignore_index=True)
-
-    return kernel
-
-
-def _direction_control_rows(
-    wrows, level: int, rnd: int, max_cell_size: int
+def _bisect_control_rows(
+    prows, level: int, rnd: int, max_cell_size: int
 ) -> tuple[list, list, list]:
     """Literal control rows (metrics, still-oversized child sizes,
-    empty-cell counts) from the collected per-cell winner set — LITERAL
-    rows on purpose: they cut the cross-round crossJoin lineage whose
-    Catalyst sizeInBytes stats otherwise compound into BigIntegers (see
-    the argmin comment in _run_level)."""
+    empty-cell counts) from the collected per-parent stat rows of a
+    bisection round — LITERAL rows on purpose: they keep the driver's
+    sizes mirror live and cut the cross-round lineage of the control
+    frames (see the bounded-collect comment in _run_level)."""
     mrows, srows, erows = [], [], []
-    for r in wrows:
-        root, path = int(r["root"]), int(r["path"])
+    for r in prows:
+        root, path = int(r["root"]), int(r["parent_path"])
         n_cell, p2 = int(r["n"]), int(r["part_two"])
         mrows.append(
             (
                 level, rnd, root, path, n_cell, int(r["cut_edges"]),
-                p2, int(r["job"]), 1 if p2 == n_cell else 0,
-                "direction",
+                p2, int(r["best_job"]), int(r["n_empty"]), "cell",
             )
         )
-        if p2 == n_cell:
-            erows.append((root, 1))
+        if r["n_empty"]:
+            erows.append((root, int(r["n_empty"])))
         if n_cell - p2 >= max_cell_size:
             srows.append((root, path * 2, n_cell - p2))
         if p2 >= max_cell_size:
@@ -524,7 +334,7 @@ def _exclusive_cumsum_by_key(
     prefix-sum a handful of rows (round-6 gap profiling). Identical
     offsets: ascending-``key`` order either way."""
     spark = df.sparkSession
-    if n_rows_hint is not None and n_rows_hint <= 65536:
+    if n_rows_hint is not None and n_rows_hint <= DRIVER_COLLECT_MAX_ROWS:
         rows = sorted(df.collect(), key=lambda r: r[key])
         acc, out_rows = 0, []
         for r in rows:
@@ -602,25 +412,25 @@ def _run_level(
     DataFrame — between rounds it holds only still-oversized children,
     so neither the driver nor the frame grows with TOTAL cell count.
     The driver touches O(1) scalars per round (active/big counts, max
-    path) plus, in direction-parallel mode only, O(active x 10) argmin
-    rows where active < parallelism by construction. Lineage metrics
-    and empty-cell bookkeeping are DataFrames too.
+    path) plus, while fewer than ``parallelism`` cells are big, one
+    stat row per bisected cell. Lineage metrics and empty-cell
+    bookkeeping are DataFrames too.
 
     Returns (assignment, empties_df (root, n_empty)).
 
     ``sizes_rows`` — optional driver-side Python mirror of ``sizes_df``
     as [(root, path, n), ...]. Only carried while it stays BOUNDED: the
-    top level enters with one literal row, and in direction-parallel
-    mode the still-oversized children come back through the (bounded <
-    parallelism) argmin collect, so the mirror costs O(active) driver
-    memory — never O(#cells). Any round that derives sizes lazily
-    (mode-2 cell bisection, checkpoint resume, level entry from
+    top level enters with one literal row, and while fewer than
+    ``parallelism`` cells are bisected the still-oversized children come
+    back through the bounded per-cell stat collect, so the mirror costs
+    O(active) driver memory — never O(#cells). Any round that derives
+    sizes lazily (many big cells, checkpointing, level entry from
     relabel) drops the mirror and the DataFrame path takes over. With
     the mirror live, the per-round mode decision and the active/big
-    splits are pure Python — two fewer driver-blocking jobs per round
-    (the sizes agg + the big-cell collect)."""
+    splits are pure Python — no sizes aggregation job per round."""
     spark = assign.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
+    sc = spark.sparkContext
+    parallelism = sc.defaultParallelism
     ckpt_parts = max(parallelism, 2)
     schemas = {
         "assign": ASSIGN_SCHEMA,
@@ -631,8 +441,15 @@ def _run_level(
     empties_df = spark.createDataFrame([], EMPTIES_SCHEMA)
     level_metric_frames: list[DataFrame] = []
     level_unpersist: list[DataFrame] = []
+
+    def budget(n_cells: int) -> int:
+        # cores per concurrent kernel task: each task's thread pool gets
+        # its fair slice of the host instead of 10 threads apiece
+        return max(1, parallelism // max(1, min(n_cells, parallelism)))
+
     rnd = 0
     while True:
+        sc.setJobDescription(f"tiler: level={level} round={rnd}")
         if checkpoint is not None and checkpoint.has_round(level, rnd):
             # resume: replay this round from its durable snapshot
             assign, sizes_df, empties_df, m = checkpoint.load_round_dfs(
@@ -643,6 +460,7 @@ def _run_level(
             rnd += 1
             continue
         _t_phase = time.time()
+        one_cell = None  # (root, path) of round 0's only cell
         if sizes_rows is not None:
             act_rows = (
                 sizes_rows
@@ -655,28 +473,10 @@ def _run_level(
             assert max(r[1] for r in act_rows) < 2**61, (
                 "heap-numbered cell path near int64 overflow"
             )
-            small_rows = [r for r in act_rows if r[2] < local_threshold]
-            big_rows = [r for r in act_rows if r[2] >= local_threshold]
-            # promote rule: when every remaining big cell is < 2x the
-            # finish threshold, one more distributed bisection round
-            # would only produce children that all finish locally next
-            # round — skip the round and finish the borderline cells
-            # in-kernel now (straggler bound: a 2x-threshold task).
-            # Collapses the trailing dribble of the bisection prefix
-            # (50k docs: rounds/level 6 -> 4 measured at the default
-            # threshold) without ever promoting a cell that could
-            # stress executor memory.
-            if (
-                PROMOTE_ENABLED
-                and big_rows
-                and max(r[2] for r in big_rows) < PROMOTE_CAP * local_threshold
-            ):
-                small_rows, big_rows = act_rows, []
-            n_big = len(big_rows)
-            n_small = len(small_rows)
-            active = spark.createDataFrame(act_rows, SIZES_SCHEMA)
-            small_df = spark.createDataFrame(small_rows, SIZES_SCHEMA) if small_rows else None
-            big_df = spark.createDataFrame(big_rows, SIZES_SCHEMA) if big_rows else None
+            max_n = max(r[2] for r in act_rows)
+            n_big = sum(1 for r in act_rows if r[2] >= local_threshold)
+            if rnd == 0 and n_active == 1:
+                one_cell = tuple(act_rows[0][:2])
         else:
             active = (
                 sizes_df  # round 0: every parent cell, any size
@@ -686,6 +486,7 @@ def _run_level(
             agg = active.groupBy().agg(
                 F.count("*").alias("n_active"),
                 F.sum((F.col("n") >= local_threshold).cast("int")).alias("n_big"),
+                F.max("root").alias("max_root"),
                 F.max("path").alias("max_path"),
                 F.max("n").alias("max_n"),
             ).first()
@@ -696,61 +497,71 @@ def _run_level(
             assert int(agg["max_path"]) < 2**61, (
                 "heap-numbered cell path near int64 overflow"
             )
+            max_n = int(agg["max_n"])
             n_big = int(agg["n_big"] or 0)
-            n_small = n_active - n_big
-            if (
-                PROMOTE_ENABLED
-                and n_big
-                and int(agg["max_n"]) < PROMOTE_CAP * local_threshold
-            ):
-                # promote rule (see the mirror path above): borderline
-                # big cells finish in-kernel instead of costing a round
-                n_big, n_small = 0, n_active
-                small_df = active
-                big_df = None
-            else:
-                small_df = active.filter(F.col("n") < local_threshold)
-                big_df = active.filter(F.col("n") >= local_threshold)
-            big_rows = None
+            if rnd == 0 and n_active == 1:
+                one_cell = (int(agg["max_root"]), int(agg["max_path"]))
+        # promote rule: when every remaining big cell is < PROMOTE_CAP x
+        # the finish threshold, one more distributed bisection round
+        # would only produce children that all finish locally next round
+        # — skip the round and finish the borderline cells in-kernel now.
+        # Collapses the trailing dribble of the bisection prefix (50k
+        # docs: rounds/level 6 -> 4 measured at the default threshold)
+        # without ever promoting a cell that could stress executor memory.
+        if n_big and max_n < PROMOTE_CAP * local_threshold:
+            n_big = 0
+        n_small = n_active - n_big
+        if sizes_rows is not None:
+            active = spark.createDataFrame(act_rows, SIZES_SCHEMA)
+        small_df = active.filter(F.col("n") < local_threshold) if n_big else active
+        big_df = active.filter(F.col("n") >= local_threshold)
         if os.environ.get("TILER_DEBUG"):
             print(f"[tiler]   sizes prep took {time.time() - _t_phase:.2f}s", flush=True)
         _t_round = time.time()
-        # label the round's jobs (guide §1.5) — stages submitted from
-        # futures otherwise render as anonymous CompletableFuture
-        # callsites in the UI/REST, which cost real attribution effort
-        # during this round's profiling
-        spark.sparkContext.setJobDescription(
+        sc.setJobDescription(
             f"tiler: level={level} round={rnd} small={n_small} big={n_big}"
         )
 
-        inactive = assign.join(
-            F.broadcast(active.select("root", "path")), ["root", "path"], "left_anti"
+        # round 0 activates every cell: no inactive cells to carry over
+        frames = (
+            []
+            if rnd == 0
+            else [
+                assign.join(
+                    F.broadcast(active.select("root", "path")),
+                    ["root", "path"],
+                    "left_anti",
+                ).select("root", "path", "vertex_id", "lat", "lon")
+            ]
         )
-        frames = [inactive.select("root", "path", "vertex_id", "lat", "lon")]
         sizes_frames: list[DataFrame] = []  # still-oversized children
         empties_frames: list[DataFrame] = []
         metric_parts: list[DataFrame] = []
-        deferred_wbest: DataFrame | None = None
-        to_unpersist = []  # cell-mode outputs: lazy metric frames read
-        # them at level end, so they stay cached until then
-        round_unpersist = []  # direction-mode outputs: the control
-        # frames are literal rows, so nothing references these after the
-        # round's assignment checkpoint — freeing them per round bounds
-        # cache growth to O(1) rounds instead of O(rounds) (the 10x
-        # job-duplicated frames are the big ones; at 200k docs the
-        # level-end policy OOM'd a 24g heap at local[8])
+        to_unpersist = []  # kernel outputs the lazy control frames read
 
-        def run_cell_mode(keys_df, kernel, is_bisect):
-            kdf = F.broadcast(keys_df.select("root", "path"))
-            act = assign.join(kdf, ["root", "path"], "inner")
-            e_act = _label_edges(edges, act)
+        def run_kernel(keys_df, kernel):
+            if one_cell is not None:
+                # the only cell holds every vertex and edge: tag the
+                # edges with its literal key instead of two joins
+                act = assign
+                e_act = edges.select(
+                    "edge_id", "tail", "head",
+                    F.lit(one_cell[0]).cast("long").alias("root"),
+                    F.lit(one_cell[1]).cast("long").alias("path"),
+                )
+            else:
+                act = assign.join(
+                    F.broadcast(keys_df.select("root", "path")),
+                    ["root", "path"],
+                    "inner",
+                )
+                e_act = _label_edges(edges, act)
             out = (
                 act.groupBy("root", "path")
                 .cogroup(e_act.groupBy("root", "path"))
                 .applyInPandas(kernel, schema=KERNEL_OUT_SCHEMA)
                 .persist()
             )
-            to_unpersist.append(out)
             frames.append(out.select("root", "path", "vertex_id", "lat", "lon"))
             per_parent = out.groupBy("root", "parent_path").agg(
                 F.first("n").alias("n"),
@@ -759,6 +570,10 @@ def _run_level(
                 F.first("best_job").alias("best_job"),
                 F.first("n_empty").alias("n_empty"),
             )
+            return out, per_parent
+
+        def lazy_controls(out, per_parent, is_bisect):
+            to_unpersist.append(out)
             metric_parts.append(
                 per_parent.select(
                     F.lit(level).cast("int").alias("level"),
@@ -801,227 +616,22 @@ def _run_level(
                 sizes_frames.append(ch.filter(F.col("n") >= max_cell_size))
 
         if n_small:
-            run_cell_mode(
-                small_df,
-                _make_finish_kernel(
-                    max_cell_size,
-                    rate,
-                    thread_budget=max(
-                        1, parallelism // max(1, min(n_small, parallelism))
-                    ),
+            lazy_controls(
+                *run_kernel(
+                    small_df,
+                    _make_finish_kernel(max_cell_size, rate, budget(n_small)),
                 ),
                 False,
             )
-
+        bounded = None  # (kernel output, per-parent stats) collected below
         if n_big:
-            # adaptive physical strategy (AQE-style): when the active big
-            # cells cannot fill the cluster on their own, fan each one out
-            # into (direction x component) tasks; once there are enough
-            # cells to saturate, the plain per-cell kernel is cheaper
-            # (no 10x duplication / CC / role-window overhead). Results
-            # are identical either way (equivalence suite covers both).
-            if n_big < parallelism:
-                # mode 1: (cell x direction x component) groups — the 10
-                # inertial jobs fan out as tasks AND each job decomposes
-                # exactly by connected component (see _make_direction_kernel).
-                # The big-cell set here is bounded by `parallelism` BY
-                # CONSTRUCTION (mode 2 takes over past it), so driver
-                # state stays O(cluster), never O(#cells); with the
-                # Python sizes mirror live it is already in hand and no
-                # collect job runs at all.
-                if big_rows is None:
-                    big_rows = big_df.collect()
-                big_sizes = {(int(r[0]), int(r[1])): int(r[2]) for r in big_rows}
-                big_keys = list(big_sizes)
-                kdf = F.broadcast(
-                    spark.createDataFrame(big_keys, "root long, path long")
-                )
-                act = assign.join(kdf, ["root", "path"], "inner")
-                e_act = _label_edges(edges, act)
-                # ALWAYS decompose by connected component here. The CC
-                # pass is not just task fan-out: min-cut cost grows
-                # superlinearly with subgraph size, so running Dinic
-                # per component is fundamentally cheaper
-                # than one full-cell run even when the (cell x direction)
-                # tasks already saturate the cluster. (Round-2 lesson:
-                # gating this on task count — `n_big * 10 < parallelism`
-                # — caused a 2.5x flagship regression the moment 4 big
-                # cells were active; the one cogroup pass + two joins it
-                # saves are noise next to the kernel time it costs.)
-                cc = (
-                    act.groupBy("root", "path")
-                    .cogroup(e_act.groupBy("root", "path"))
-                    .applyInPandas(
-                        _make_cc_roles_kernel(rate), schema=CC_OUT_SCHEMA
-                    )
-                    .persist()
-                )
-                round_unpersist.append(cc)
-                if os.environ.get("TILER_DEBUG"):
-                    _t = time.time()
-                    cc.count()
-                    print(f"[tiler]   cc pass took {time.time() - _t:.1f}s", flush=True)
-
-                # per-cell totals for the argmin's balance term
-                ksrc = F.broadcast(
-                    spark.createDataFrame(
-                        [(r, p, s) for (r, p), s in big_sizes.items()],
-                        "root long, path long, n long",
-                    )
-                )
-                # ONE (cell x component) group carries every vertex and
-                # edge exactly once — the 10 direction jobs run on a
-                # thread pool inside the kernel (the compiled Dinic
-                # releases the GIL), so the former 10x crossJoin
-                # duplication of both cogroup sides is gone entirely.
-                # re-alias every column (fresh expr ids) — cc feeds
-                # both cogroup sides and would otherwise trip the
-                # ambiguous self-join check
-                cc_e = cc.select(
-                    F.col("root").alias("root"),
-                    F.col("path").alias("path"),
-                    F.col("vertex_id").alias("tail"),
-                    F.col("comp").alias("comp"),
-                )
-                e_comp = e_act.join(cc_e, ["root", "path", "tail"]).select(
-                    "root", "path", "comp", "edge_id", "tail", "head"
-                )
-                # cores available per concurrent kernel task: n_big
-                # groups (components ~1 on geometric knn cells) share
-                # the host, so each task's direction pool gets its
-                # fair slice instead of 10 threads apiece
-                budget = max(1, parallelism // max(1, min(n_big, parallelism)))
-                out = (
-                    cc.select(
-                        "root", "path", "comp", "vertex_id",
-                        "lat", "lon", "rolepack",
-                    )
-                    .groupBy("root", "path", "comp")
-                    .cogroup(e_comp.groupBy("root", "path", "comp"))
-                    .applyInPandas(
-                        _make_direction_kernel(thread_budget=budget),
-                        schema=DIR_OUT_SCHEMA,
-                    )
-                    .persist()
-                )
-                round_unpersist.append(out)
-                if os.environ.get("TILER_DEBUG"):
-                    _t = time.time()
-                    out.count()
-                    print(f"[tiler]   direction kernel took {time.time() - _t:.1f}s", flush=True)
-                # frozen argmin (cut, balance, job) per cell (SURVEY.md
-                # §7) — the per-cell reduction runs DISTRIBUTED via
-                # lexicographic struct-min (all integer fields, exact);
-                # the winner set is then COLLECTED (bounded: <= active
-                # cells < parallelism rows BY CONSTRUCTION) and the
-                # tiny control frames (sizes/metrics/empties) rebuilt
-                # from literal rows. Round-2 lesson: deriving those
-                # frames LAZILY from this plan chains the crossJoin
-                # lineage across rounds, and Catalyst's sizeInBytes
-                # stats (a PRODUCT over join children) compound into
-                # BigIntegers with thousands of digits — the driver
-                # then spends MINUTES per round in BigInteger.multiply
-                # during planning. Literal rows cut the lineage; the
-                # one collect job runs against the persisted kernel
-                # output and is O(active) rows.
-                per_job = (
-                    out.filter(F.col("job") >= 0)  # per-(comp, job) stat rows
-                    .groupBy("root", "path", "job")
-                    .agg(
-                        F.sum("cut_edges").cast("long").alias("cut_edges"),
-                        F.sum("part_two").cast("long").alias("part_two"),
-                    )
-                    .join(ksrc.select("root", "path", "n"), ["root", "path"])
-                    .withColumn(
-                        "balance",
-                        F.abs(
-                            F.floor(F.col("n") / 2).cast("long")
-                            - F.col("part_two")
-                        ),
-                    )
-                )
-                wbest = (
-                    per_job.groupBy("root", "path")
-                    .agg(
-                        F.min(
-                            F.struct(
-                                "cut_edges", "balance", "job", "part_two", "n"
-                            )
-                        ).alias("b")
-                    )
-                    .select(
-                        "root",
-                        "path",
-                        F.col("b.job").alias("job"),
-                        F.col("b.cut_edges").alias("cut_edges"),
-                        F.col("b.part_two").alias("part_two"),
-                        F.col("b.n").alias("n"),
-                    )
-                )
-                if checkpoint is None:
-                    # DEFER the winner collect: broadcast the (persisted)
-                    # lazy winner set straight into the chosen-side join,
-                    # so the round's single materialization — the
-                    # assignment checkpoint — computes kernels AND argmin
-                    # in one action; the bounded winner collect then reads
-                    # the cache afterwards to rebuild the literal control
-                    # frames. One fewer full driver round-trip per round.
-                    # (Under checkpointing the control frames must exist
-                    # BEFORE the snapshot write, so the eager path below
-                    # stays.) Columns re-aliased for fresh expr ids —
-                    # `out` feeds both sides of this join.
-                    wbest = wbest.persist()
-                    deferred_wbest = wbest
-                    wdf = F.broadcast(
-                        wbest.select(
-                            F.col("root").alias("root"),
-                            F.col("path").alias("path"),
-                            F.col("job").alias("job"),
-                        )
-                    )
-                else:
-                    _t_phase = time.time()
-                    wrows = wbest.collect()  # bounded by parallelism
-                    if os.environ.get("TILER_DEBUG"):
-                        print(
-                            f"[tiler]   argmin collect ({len(wrows)} winners) took "
-                            f"{time.time() - _t_phase:.2f}s",
-                            flush=True,
-                        )
-                    wdf = F.broadcast(
-                        spark.createDataFrame(
-                            [(int(r["root"]), int(r["path"]), int(r["job"])) for r in wrows],
-                            "root long, path long, job int",
-                        )
-                    )
-                # vertex rows carry all 10 cut sides packed; the winning
-                # job's bit selects the child side
-                chosen = (
-                    out.filter(F.col("job") < 0)
-                    .drop("job")
-                    .join(wdf, ["root", "path"], "inner")
-                )
-                side = F.expr("shiftright(sidespack, job) & 1")
-                frames.append(
-                    chosen.select(
-                        "root",
-                        ((F.col("path") * 2) + side.cast("long")).alias("path"),
-                        "vertex_id",
-                        "lat",
-                        "lon",
-                    )
-                )
-                if checkpoint is not None:
-                    mrows, srows, erows = _direction_control_rows(
-                        wrows, level, rnd, max_cell_size
-                    )
-                    metric_parts.append(spark.createDataFrame(mrows, METRICS_SCHEMA))
-                    if srows:
-                        sizes_frames.append(spark.createDataFrame(srows, SIZES_SCHEMA))
-                    if erows:
-                        empties_frames.append(spark.createDataFrame(erows, EMPTIES_SCHEMA))
+            out, per_parent = run_kernel(
+                big_df, _make_bisect_kernel(rate, budget(n_big))
+            )
+            if sizes_rows is not None and n_big < parallelism and checkpoint is None:
+                bounded = (out, per_parent)
             else:
-                run_cell_mode(big_df, _make_bisect_kernel(rate), True)
+                lazy_controls(out, per_parent, True)
 
         new_assign = frames[0]
         for fr in frames[1:]:
@@ -1051,25 +661,18 @@ def _run_level(
             )
             metrics_frames.append(round_metrics)
             sizes_rows = None
-            for df in to_unpersist + round_unpersist:
+            for df in to_unpersist:
                 df.unpersist()
         else:
-            # ONE eager materialization per round (the assignment):
-            # computing it caches the persisted kernel outputs AND (via
-            # the broadcast of the deferred winner set) runs the argmin
-            # inside the same action; the tiny sizes/empties/metrics
-            # frames stay LAZY against the cache and are folded into one
-            # job at level end — no per-round fixed-latency job tax.
+            # ONE eager materialization of the round's kernels (the
+            # assignment); the tiny sizes/empties/metrics frames stay
+            # LAZY against the cached kernel outputs and are folded into
+            # one job at level end — no per-round fixed-latency job tax.
             # The coalesce caps the stored partition count: each round's
             # union otherwise ADDS its children's partitions to the
             # checkpointed set, and by round 6 every scan of the
             # assignment was paying 300+ task launches (profiled round-3
             # tail: checkpoint cost grew 1.1s -> 4.0s across rounds).
-            # Cell-mode outputs stay cached until level end (lazy metric
-            # frames read them); direction-mode outputs are freed NOW —
-            # their control frames are literal rows, so nothing
-            # references them past this checkpoint and keeping O(rounds)
-            # of 10x-duplicated cache OOMs small heaps at scale.
             _t_phase = time.time()
             assign = new_assign.coalesce(ckpt_parts).localCheckpoint(eager=True)
             if os.environ.get("TILER_DEBUG"):
@@ -1077,11 +680,21 @@ def _run_level(
                     f"[tiler]   assign checkpoint took {time.time() - _t_phase:.2f}s",
                     flush=True,
                 )
-            if deferred_wbest is not None:
-                _t_phase = time.time()
-                wrows = deferred_wbest.collect()  # cached by the broadcast
-                mrows, srows, erows = _direction_control_rows(
-                    wrows, level, rnd, max_cell_size
+            srows = []
+            if bounded is not None:
+                # bounded collect: fewer than `parallelism` cells were
+                # bisected, so their stat rows are few and come from the
+                # kernel output the checkpoint above just cached. The
+                # control frames are rebuilt from LITERAL rows. Round-2
+                # lesson: deriving them LAZILY round after round chains
+                # the lineage, and Catalyst's sizeInBytes stats (a
+                # PRODUCT over join children) compound into BigIntegers
+                # with thousands of digits — the driver then spends
+                # MINUTES per round in planning. Literal rows cut the
+                # lineage and keep the sizes mirror live.
+                out, per_parent = bounded
+                mrows, srows, erows = _bisect_control_rows(
+                    per_parent.collect(), level, rnd, max_cell_size
                 )
                 level_metric_frames.append(
                     spark.createDataFrame(mrows, METRICS_SCHEMA)
@@ -1094,35 +707,24 @@ def _run_level(
                     new_empties = new_empties.unionByName(
                         spark.createDataFrame(erows, EMPTIES_SCHEMA)
                     )
-                if os.environ.get("TILER_DEBUG"):
-                    print(
-                        f"[tiler]   deferred argmin ({len(wrows)} winners) took "
-                        f"{time.time() - _t_phase:.2f}s",
-                        flush=True,
-                    )
-                deferred_wbest.unpersist()
-            else:
-                srows = []
-            # Truncate the sizes/empties lineage whenever cell-mode
-            # contributed LAZY frames this round. Those frames reference
-            # the kernel output, which references this round's small/big
+                # nothing lazy reads it past this point
+                out.unpersist()
+            # Truncate the sizes/empties lineage whenever lazy frames
+            # were contributed this round. Those frames reference the
+            # kernel output, which references this round's small/big
             # split of the PREVIOUS sizes_df — more than one reference
             # per round, so while the plan object graph stays a small
             # DAG, everything that RENDERS the plan as a tree (the
             # explainString built for the SQL listener event on every
             # action) expands the sharing and grows O(2^rounds): at 200k
-            # docs / local[8] (cell-mode engages early there — the mode
-            # thresholds key off defaultParallelism) round ~10's
-            # checkpoint action OOM'd a 16g driver building a >40M-line
-            # plan string. Both frames are O(#active cells) rows and
-            # their inputs are already cached and materialized by the
-            # assignment checkpoint above, so this is a sub-second
-            # cache-read job — and it only runs in cell-mode rounds (the
-            # parallel tail); the latency-sensitive direction-mode
-            # prefix keeps its literal-rooted frames and single action.
-            # the per-round checkpoints are freed at LEVEL end (not per
-            # round): lazy cell-mode metric frames may recompute through
-            # them if the persisted kernel outputs are evicted, and a
+            # docs / local[8] round ~10's checkpoint action OOM'd a 16g
+            # driver building a >40M-line plan string. Both frames are
+            # O(#active cells) rows and their inputs are already cached
+            # and materialized by the assignment checkpoint above, so
+            # this is a sub-second cache-read job.
+            # The per-round checkpoints are freed at LEVEL end (not per
+            # round): lazy metric frames may recompute through them if
+            # the persisted kernel outputs are evicted, and a
             # truncated-lineage checkpoint cannot be rebuilt once its
             # blocks are dropped. O(rounds) metadata-scale block sets
             # per level, all released after the metrics materialize.
@@ -1136,15 +738,13 @@ def _run_level(
                 level_unpersist.append(empties_df)
             else:
                 empties_df = new_empties
-            level_metric_frames.append(round_metrics)
+            if metric_parts:
+                level_metric_frames.append(round_metrics)
             level_unpersist.extend(to_unpersist)
-            for df in round_unpersist:
-                df.unpersist()
             # refresh the Python mirror: valid only when every child
-            # size this round came from the bounded winner set (cell-mode
-            # bisection contributes lazy frames -> drop the mirror)
+            # size this round came from the bounded stat collect (lazy
+            # bisection frames -> drop the mirror)
             sizes_rows = None if sizes_frames else srows
-        spark.sparkContext.setJobDescription(None)
         if os.environ.get("TILER_DEBUG"):
             print(
                 f"[tiler] level={level} round={rnd} small={n_small} "
@@ -1152,6 +752,7 @@ def _run_level(
                 flush=True,
             )
         rnd += 1
+    sc.setJobDescription(f"tiler: level={level} end")
     if level_metric_frames:
         rm = level_metric_frames[0]
         for fr in level_metric_frames[1:]:
@@ -1242,12 +843,34 @@ def multilevel_partition(
     ``vertices``: (vertex_id long, lat double, lon double);
     ``edges``: (edge_id long, tail long, head long) — one row per
     undirected unit-capacity edge (the kernel adds both directions,
-    partition_graph.go:216-229).
+    partition_graph.go:216-229); both endpoints must be vertices.
 
     Returns (assignment (vertex_id, level, cell_id), num_cells per
     level incl. empty cells, metrics with per-bisection lineage).
+
+    Every Spark job run in here carries a ``tiler: ...`` job
+    description; the caller's description is restored on return.
     """
-    config = config or PartitionConfig()
+    sc = spark.sparkContext
+    caller_description = sc.getLocalProperty("spark.job.description")
+    try:
+        return _partition_levels(
+            spark, vertices, edges, config or PartitionConfig(),
+            local_recursion_threshold, checkpoint, n_vertices,
+        )
+    finally:
+        sc.setJobDescription(caller_description)
+
+
+def _partition_levels(
+    spark: SparkSession,
+    vertices: DataFrame,
+    edges: DataFrame,
+    config: PartitionConfig,
+    local_recursion_threshold: int,
+    checkpoint,
+    n_vertices: int | None,
+) -> tuple[DataFrame, list[int], DataFrame]:
     L = config.levels
     cell_sizes = config.cell_sizes
     rate = config.rate
@@ -1263,6 +886,8 @@ def multilevel_partition(
     # the persisted entity frame anyway) pass it through — the count
     # here only seeds sizes0, so re-counting was a pure driver-blocking
     # job per pipeline run (2.4-4s at 200k docs, round-6 gap timers)
+    sc = spark.sparkContext
+    sc.setJobDescription("tiler: count vertices")
     _t_dbg = time.time()
     n = vertices.count() if n_vertices is None else int(n_vertices)
     if n_vertices is None and os.environ.get("TILER_DEBUG"):
@@ -1289,6 +914,7 @@ def multilevel_partition(
             metrics_frames, sizes0, checkpoint, sizes_rows=[(0, 1, n)],
         )
         _t = time.time()
+        sc.setJobDescription(f"tiler: level={L - 1} relabel")
         labeled, c, empty_cells, level_sizes = _relabel_level(
             a, empties_df, spark.createDataFrame([], "root long"),
             n_roots_hint=1,  # the top level enters with the single root 0
@@ -1328,7 +954,7 @@ def multilevel_partition(
         mx = mx_bound
         if 0 < mx < local_recursion_threshold:
             _t_ml = time.time()
-            spark.sparkContext.setJobDescription(f"tiler: ml finish from level {level}")
+            sc.setJobDescription(f"tiler: ml finish from level {level}")
             lvls = list(range(level, -1, -1))
             sizes_desc = [cell_sizes[l] for l in lvls]
             unit = f"mlfinish_l{level}"
@@ -1410,7 +1036,6 @@ def multilevel_partition(
                         (F.col("offset") + F.col("local_cell")).alias("cell_id"),
                     )
                 )
-            spark.sparkContext.setJobDescription(None)
             if os.environ.get("TILER_DEBUG"):
                 print(
                     f"[tiler] ml finish (levels {lvls}) took {time.time() - _t_ml:.1f}s",
@@ -1428,6 +1053,7 @@ def multilevel_partition(
             a0, edges, u, rate, local_recursion_threshold, level,
             metrics_frames, level_sizes, checkpoint,
         )
+        sc.setJobDescription(f"tiler: level={level} relabel")
         labeled, c, empty_cells, level_sizes = _relabel_level(
             a, empties_df, empty_cells,
             # entering roots = the upper level's cells (incl. empties)
@@ -1451,5 +1077,6 @@ def multilevel_partition(
     for fr in metrics_frames[1:]:
         metrics = metrics.unionByName(fr)
     if checkpoint is not None:
+        sc.setJobDescription("tiler: finalize")
         checkpoint.finalize(result, num_cells, metrics)
     return result, num_cells, metrics

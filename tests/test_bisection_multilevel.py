@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from osm_inertial_flow_partitioner_spark.kernel import (
+    bisect_once,
     multilevel_partition_local,
     pack_cell_numbers,
     recursive_bisection,
@@ -77,6 +78,13 @@ def test_coords_aligned_rejects_misaligned_coordinates():
         multilevel_finish_local(
             ids, lat, lon, e["tail"], e["head"], [8, 4], coords_aligned=True
         )
+
+
+def test_bisect_once_rejects_edges_leaving_the_cell():
+    v, e = unit_square_grid(4)
+    ids = v["ids"][:-1]  # the last vertex's edges now leave the cell
+    with pytest.raises(AssertionError, match="not a vertex of the cell"):
+        bisect_once(ids, v["lat"][ids], v["lon"][ids], e["tail"], e["head"])
 
 
 def test_recursive_bisection_rejects_nonterminating_config():

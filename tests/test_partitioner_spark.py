@@ -101,3 +101,89 @@ def test_metrics_lineage_present(spark):
     assert len(m) >= 1
     cols = set(metrics.columns)
     assert {"level", "round", "root", "parent_path", "n", "cut_edges", "part_two"} <= cols
+
+
+def _disjoint_union(a, b, lon_shift):
+    """Vertices and edges of ``b`` appended to ``a`` with ids (and edge
+    ids) shifted past ``a``'s and longitudes shifted by ``lon_shift``."""
+    (va, ea), (vb, eb) = a, b
+    off = len(va["ids"])
+    ids = np.concatenate([va["ids"], vb["ids"] + off])
+    lat = np.concatenate([va["lat"], vb["lat"]])
+    lon = np.concatenate([va["lon"], vb["lon"] + lon_shift])
+    tails = np.concatenate([ea["tail"], eb["tail"] + off])
+    heads = np.concatenate([ea["head"], eb["head"] + off])
+    return (
+        {"ids": ids, "lat": lat, "lon": lon},
+        {"edge_id": np.arange(len(tails), dtype=np.int64), "tail": tails, "head": heads},
+    )
+
+
+def test_multi_component_root_equals_local(spark):
+    # round 0 cuts the whole two-component root in one per-cell kernel
+    # call (444 >= 2.5 x threshold, so it is not promoted to a finish):
+    # the whole-cell flow must match the local oracle exactly
+    fix = _disjoint_union(unit_square_grid(12), road_like_graph(300), 1.5)
+    cell_sizes = [16, 128]
+    expected, exp_cells, _ = _local_expected(fix, cell_sizes)
+    vdf, edf = _to_dfs(spark, fix)
+    result, num_cells, metrics = multilevel_partition(
+        spark, vdf, edf, PartitionConfig(cell_sizes=cell_sizes),
+        local_recursion_threshold=150,
+    )
+    got = {(r["vertex_id"], r["level"]): r["cell_id"] for r in result.collect()}
+    assert num_cells == exp_cells
+    assert got == expected
+    root_cut = metrics.filter("level = 1 and round = 0").collect()
+    assert [(r["n"], r["mode"]) for r in root_cut] == [(444, "cell")]
+
+
+def test_two_phase_prefix_sum_matches_collect(spark, monkeypatch):
+    # with no driver collect allowed, every prefix sum takes the
+    # two-phase path; the hybrid case above pins the collect path to
+    # the same local oracle
+    from osm_inertial_flow_partitioner_spark.operators import partitioner
+
+    monkeypatch.setattr(partitioner, "DRIVER_COLLECT_MAX_ROWS", 0)
+    fix = road_like_graph(400, seed=7)
+    cell_sizes = [16, 64, 256]
+    expected, exp_cells, _ = _local_expected(fix, cell_sizes)
+    vdf, edf = _to_dfs(spark, fix)
+    result, num_cells, _ = multilevel_partition(
+        spark, vdf, edf, PartitionConfig(cell_sizes=cell_sizes),
+        local_recursion_threshold=64,
+    )
+    got = {(r["vertex_id"], r["level"]): r["cell_id"] for r in result.collect()}
+    assert num_cells == exp_cells
+    assert got == expected
+
+
+def _job_descriptions(spark, group):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        d = store.job(jid).description()
+        out.append(d.get() if d.isDefined() else None)
+    return out
+
+
+def test_every_partitioner_job_is_labeled(spark):
+    vdf, edf = _to_dfs(spark, unit_square_grid(8))
+    sc = spark.sparkContext
+    sc.setJobGroup("partitioner-labels", "caller")
+    try:
+        # a bisection round, a finish round, the relabel, then the
+        # multi-level finish
+        multilevel_partition(
+            spark, vdf, edf, PartitionConfig(cell_sizes=[4, 16]),
+            local_recursion_threshold=20,
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    descriptions = _job_descriptions(spark, "partitioner-labels")
+    assert descriptions
+    assert [d for d in descriptions if not (d or "").startswith("tiler:")] == []
