@@ -79,6 +79,7 @@ from .operators.waygraph import (
 )
 from .sources.extract import knn_adjacency
 from .operators.turns import resolve_way_restrictions, turn_table
+from .session import local_frame
 from .sources.way_fixtures import (
     nodes_df,
     nodes_values_sql,
@@ -336,8 +337,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             offsets[pid] = acc
             acc += counts[pid]
         off = F.broadcast(
-            spark.createDataFrame(
-                [(int(p), int(o)) for p, o in offsets.items()], "pid int, offset long"
+            local_frame(
+                spark,
+                [(int(p), int(o)) for p, o in offsets.items()],
+                "pid int, offset long",
             )
         )
         wl = Window.partitionBy("pid").orderBy(F.asc("c_acctbal"), F.asc("c_custkey"))
@@ -514,8 +517,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def knn_lookup(spark, sf):
         p = _points(spark, sf).withColumnRenamed("point_id", "entity_id")
-        qdf = p.sparkSession.createDataFrame(
-            KNN_QUERY_POINTS, "query_id long, lat double, lon double"
+        qdf = local_frame(
+            p.sparkSession, KNN_QUERY_POINTS, "query_id long, lat double, lon double"
         )
         d = haversine_km(F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon"))
         w = Window.partitionBy("query_id").orderBy(

@@ -43,6 +43,9 @@ empty-cell bookkeeping, lineage metrics and the per-level relabel all
 live in DataFrames (per-root rank window + two-phase prefix sum over
 roots); the driver touches O(1) scalars per round, plus one stat row
 per bisected cell while fewer cells than ``parallelism`` are big.
+Literal control rows (active sizes, stat rows, empties, prefix-sum
+offsets) become Arrow local relations through ``session.local_frame``,
+so reading them starts no Spark job and no Python worker.
 """
 
 from __future__ import annotations
@@ -57,6 +60,7 @@ from pyspark.sql import functions as F
 
 from ..config import PartitionConfig
 from ..kernel.bisection import bisect_once, recursive_bisection
+from ..session import local_frame
 
 KERNEL_OUT_SCHEMA = (
     "root long, parent_path long, path long, vertex_id long, "
@@ -348,7 +352,8 @@ def _exclusive_cumsum_by_key(
             df.schema.fields + [StructField(out_col, LongType(), False)]
         )
         out = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [tuple(d[f.name] for f in schema.fields) for d in out_rows],
                 schema,
             )
@@ -371,8 +376,8 @@ def _exclusive_cumsum_by_key(
     if not offs:
         return part.withColumn(out_col, F.lit(0).cast("long")).drop("pid"), 0
     off_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offs.items()], "pid int, pidoff long"
+        local_frame(
+            spark, [(int(p), int(o)) for p, o in offs.items()], "pid int, pidoff long"
         )
     )
     w = (
@@ -438,7 +443,7 @@ def _run_level(
         "empties": EMPTIES_SCHEMA,
         "metrics": METRICS_SCHEMA,
     }
-    empties_df = spark.createDataFrame([], EMPTIES_SCHEMA)
+    empties_df = local_frame(spark, [], EMPTIES_SCHEMA)
     level_metric_frames: list[DataFrame] = []
     level_unpersist: list[DataFrame] = []
 
@@ -448,6 +453,12 @@ def _run_level(
         return max(1, parallelism // max(1, min(n_cells, parallelism)))
 
     rnd = 0
+    # every cell in ``assign`` is active this round: round 0 activates
+    # every cell, and a later round does when the round before it ran no
+    # finish kernel, carried no inactive cells and got every child of
+    # every bisected parent back from the bounded stat collect as
+    # oversized. Then the round has no inactive cells to carry over.
+    all_active = True
     while True:
         sc.setJobDescription(f"tiler: level={level} round={rnd}")
         if checkpoint is not None and checkpoint.has_round(level, rnd):
@@ -457,6 +468,7 @@ def _run_level(
             )
             metrics_frames.append(m)
             sizes_rows = None
+            all_active = False
             rnd += 1
             continue
         _t_phase = time.time()
@@ -512,7 +524,7 @@ def _run_level(
             n_big = 0
         n_small = n_active - n_big
         if sizes_rows is not None:
-            active = spark.createDataFrame(act_rows, SIZES_SCHEMA)
+            active = local_frame(spark, act_rows, SIZES_SCHEMA)
         small_df = active.filter(F.col("n") < local_threshold) if n_big else active
         big_df = active.filter(F.col("n") >= local_threshold)
         if os.environ.get("TILER_DEBUG"):
@@ -522,10 +534,9 @@ def _run_level(
             f"tiler: level={level} round={rnd} small={n_small} big={n_big}"
         )
 
-        # round 0 activates every cell: no inactive cells to carry over
         frames = (
             []
-            if rnd == 0
+            if all_active
             else [
                 assign.join(
                     F.broadcast(active.select("root", "path")),
@@ -639,7 +650,7 @@ def _run_level(
         new_sizes = (
             sizes_frames[0]
             if sizes_frames
-            else spark.createDataFrame([], SIZES_SCHEMA)
+            else local_frame(spark, [], SIZES_SCHEMA)
         )
         for fr in sizes_frames[1:]:
             new_sizes = new_sizes.unionByName(fr)
@@ -649,7 +660,7 @@ def _run_level(
         round_metrics = (
             metric_parts[0]
             if metric_parts
-            else spark.createDataFrame([], METRICS_SCHEMA)
+            else local_frame(spark, [], METRICS_SCHEMA)
         )
         for fr in metric_parts[1:]:
             round_metrics = round_metrics.unionByName(fr)
@@ -661,6 +672,7 @@ def _run_level(
             )
             metrics_frames.append(round_metrics)
             sizes_rows = None
+            all_active = False
             for df in to_unpersist:
                 df.unpersist()
         else:
@@ -680,7 +692,7 @@ def _run_level(
                     f"[tiler]   assign checkpoint took {time.time() - _t_phase:.2f}s",
                     flush=True,
                 )
-            srows = []
+            srows, every_child_big = [], False
             if bounded is not None:
                 # bounded collect: fewer than `parallelism` cells were
                 # bisected, so their stat rows are few and come from the
@@ -693,19 +705,21 @@ def _run_level(
                 # MINUTES per round in planning. Literal rows cut the
                 # lineage and keep the sizes mirror live.
                 out, per_parent = bounded
+                prows = per_parent.collect()
                 mrows, srows, erows = _bisect_control_rows(
-                    per_parent.collect(), level, rnd, max_cell_size
+                    prows, level, rnd, max_cell_size
                 )
+                every_child_big = len(srows) == 2 * len(prows)
                 level_metric_frames.append(
-                    spark.createDataFrame(mrows, METRICS_SCHEMA)
+                    local_frame(spark, mrows, METRICS_SCHEMA)
                 )
                 if srows:
                     new_sizes = new_sizes.unionByName(
-                        spark.createDataFrame(srows, SIZES_SCHEMA)
+                        local_frame(spark, srows, SIZES_SCHEMA)
                     )
                 if erows:
                     new_empties = new_empties.unionByName(
-                        spark.createDataFrame(erows, EMPTIES_SCHEMA)
+                        local_frame(spark, erows, EMPTIES_SCHEMA)
                     )
                 # nothing lazy reads it past this point
                 out.unpersist()
@@ -745,6 +759,7 @@ def _run_level(
             # size this round came from the bounded stat collect (lazy
             # bisection frames -> drop the mirror)
             sizes_rows = None if sizes_frames else srows
+            all_active = all_active and not n_small and every_child_big
         if os.environ.get("TILER_DEBUG"):
             print(
                 f"[tiler] level={level} round={rnd} small={n_small} "
@@ -908,7 +923,7 @@ def _partition_levels(
 
     top_u = cell_sizes[L - 1]
     if n > top_u:
-        sizes0 = spark.createDataFrame([(0, 1, n)], SIZES_SCHEMA)
+        sizes0 = local_frame(spark, [(0, 1, n)], SIZES_SCHEMA)
         a, empties_df = _run_level(
             assign, edges, top_u, rate, local_recursion_threshold, L - 1,
             metrics_frames, sizes0, checkpoint, sizes_rows=[(0, 1, n)],
@@ -916,7 +931,7 @@ def _partition_levels(
         _t = time.time()
         sc.setJobDescription(f"tiler: level={L - 1} relabel")
         labeled, c, empty_cells, level_sizes = _relabel_level(
-            a, empties_df, spark.createDataFrame([], "root long"),
+            a, empties_df, local_frame(spark, [], "root long"),
             n_roots_hint=1,  # the top level enters with the single root 0
         )
         if os.environ.get("TILER_DEBUG"):
@@ -927,8 +942,8 @@ def _partition_levels(
             "vertex_id", "lat", "lon", F.lit(0).cast("long").alias("cell_id")
         )
         c = 1
-        empty_cells = spark.createDataFrame([], "root long")
-        level_sizes = spark.createDataFrame([(0, 1, n)], SIZES_SCHEMA)
+        empty_cells = local_frame(spark, [], "root long")
+        level_sizes = local_frame(spark, [(0, 1, n)], SIZES_SCHEMA)
         mx_bound = n  # the single top cell holds exactly n vertices
     num_cells[L - 1] = c
     level_frames.append(
@@ -1072,7 +1087,7 @@ def _partition_levels(
     metrics = (
         metrics_frames[0]
         if metrics_frames
-        else spark.createDataFrame([], METRICS_SCHEMA)
+        else local_frame(spark, [], METRICS_SCHEMA)
     )
     for fr in metrics_frames[1:]:
         metrics = metrics.unionByName(fr)

@@ -17,10 +17,14 @@ from pyspark.sql import functions as F
 
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """(user_id, event_id, ts, session_id) with session_id = cumulative
-    count of gaps > gap_minutes per user (0-based), deterministic."""
+    count of gaps > gap_minutes per user (0-based), deterministic.
+
+    Gaps are compared in microseconds, so a gap of 30 min plus a
+    fraction of a second opens a new session."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("timestamp").cast("long") - F.lag(F.col("ts").cast("timestamp").cast("long"), 1).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = us - F.lag(us, 1).over(w)
+    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60 * 10**6), 1).otherwise(0)
     return (
         events.withColumn("is_new", is_new)
         .withColumn(

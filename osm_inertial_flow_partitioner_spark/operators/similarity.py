@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -298,8 +300,10 @@ def cosine_topk_ivf(
     if centroids is None:
         centroids = ivf_train(embeddings, n_centroids, iters, id_col, vec_col)
     cdf = F.broadcast(
-        spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centroids)], "cid int, cvec array<double>"
+        local_frame(
+            spark,
+            [(i, c) for i, c in enumerate(centroids)],
+            "cid int, cvec array<double>",
         )
     )
     # inverted-list assignment as a shuffle-free per-row argmin over

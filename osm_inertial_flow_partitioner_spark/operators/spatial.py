@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..functions.geo import cell_parent, grid_cell, grid_disk, haversine_km, lat_bin, lon_bin
+from ..session import local_frame
 from .topk import partial_topk
 
 
@@ -161,7 +162,8 @@ def make_polygons_df(spark, polys: Iterable[dict], res: int = 6) -> DataFrame:
                 sorted(cells),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "boundary_id long, name string, rings_lat array<array<double>>, "
         "rings_lon array<array<double>>, covering_cells array<long>",

@@ -55,26 +55,6 @@ class RoundCheckpoint:
     def _dir(self, level: int, rnd: int) -> str:
         return os.path.join(self.root, f"level={level}", f"round={rnd}")
 
-    def snapshot_round(
-        self, assign: DataFrame, level: int, rnd: int, state: dict | None = None
-    ) -> DataFrame:
-        """Write the post-round assignment + driver state; return the
-        reloaded frame (lineage truncated at the durable snapshot)."""
-        d = self._dir(level, rnd)
-        assign.write.mode("overwrite").parquet(os.path.join(d, "assign"))
-        rows = self.spark.read.parquet(os.path.join(d, "assign"))
-        manifest = {
-            "level": level,
-            "round": rnd,
-            "rows": rows.count(),
-            "config_token": self.config_token,
-            "state": state or {},
-            "completed_at": time.time(),
-        }
-        with open(os.path.join(d, "manifest.json"), "w") as f:
-            json.dump(manifest, f)
-        return rows
-
     def snapshot_round_dfs(
         self,
         level: int,
@@ -165,17 +145,9 @@ class RoundCheckpoint:
         with open(p) as f:
             return json.load(f).get("config_token") == self.config_token
 
-    def load_round(self, level: int, rnd: int) -> tuple[DataFrame, dict]:
-        d = self._dir(level, rnd)
-        with open(os.path.join(d, "manifest.json")) as f:
-            manifest = json.load(f)
-        return (
-            self.spark.read.parquet(os.path.join(d, "assign")),
-            manifest.get("state", {}),
-        )
-
-    # kept for inspection/back-compat
     def latest(self) -> tuple[int, int] | None:
+        """(level, round) of the last completed round snapshot, for
+        inspection; None when there is none."""
         best = None
         if not os.path.isdir(self.root):
             return None
@@ -194,9 +166,6 @@ class RoundCheckpoint:
                     if best is None or key > best[0]:
                         best = (key, (level, rnd))
         return best[1] if best else None
-
-    def load(self, level: int, rnd: int) -> DataFrame:
-        return self.load_round(level, rnd)[0]
 
     def finalize(self, result: DataFrame, num_cells: list[int], metrics: DataFrame):
         """Durable final assignment + per-bisection lineage/metrics."""

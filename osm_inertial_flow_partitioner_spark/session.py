@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -81,3 +84,28 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A literal frame of ``rows`` (tuples in ``schema`` order) kept by
+    Spark as a driver-side Arrow ``LocalRelation``.
+
+    ``spark.createDataFrame(list_of_rows, schema)`` pickles the rows
+    into a Python RDD, so every action that reads the frame runs
+    ``defaultParallelism`` Python-worker tasks (350-450 ms for two rows
+    at local[4]). An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation`` that is read without a Spark job. The table is
+    built here from the rows, not through pandas: an empty pandas frame
+    silently takes the pickled path, while a zero-row table stays a
+    zero-row ``LocalRelation``. The schema is kept exactly: names,
+    types and nullability."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

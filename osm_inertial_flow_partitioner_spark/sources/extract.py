@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geo import grid_cell, grid_disk, haversine_km
 from ..operators.topk import partial_topk
+from ..session import local_frame
 
 GEO_PATTERN = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
 
@@ -86,8 +87,10 @@ def extract_entities(
         offsets[pid] = acc
         acc += counts[pid]
     off_df = F.broadcast(
-        part.sparkSession.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "pid int, offset long"
+        local_frame(
+            part.sparkSession,
+            [(int(p), int(o)) for p, o in offsets.items()],
+            "pid int, offset long",
         )
     )
     w = Window.partitionBy("pid").orderBy("url", "pos")

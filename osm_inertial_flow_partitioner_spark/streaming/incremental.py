@@ -84,7 +84,9 @@ def run_stream_to_staging(
 # ---------------------------------------------------------------------------
 # Custom stateful operator: streaming sessionization
 # (applyInPandasWithState) — the streaming twin of
-# operators/sessionize.py::sessionize with identical gap semantics.
+# operators/sessionize.py::sessionize. It buffers whole seconds, so its
+# gaps match the batch twin's only on whole-second timestamps: the batch
+# twin compares microseconds.
 # ---------------------------------------------------------------------------
 
 SESSION_OUT_SCHEMA = (
