@@ -36,9 +36,6 @@ class PartitionConfig:
 
     cell_sizes: list[int] = field(default_factory=lambda: list(DEFAULT_CELL_SIZES))
     rate: float = SOURCE_SINK_RATE
-    checkpoint_dir: str | None = None  # per-round snapshot + lineage/metrics
-    # Spark-side knobs
-    shuffle_partitions: int | None = None  # None -> leave session setting
 
     @property
     def levels(self) -> int:

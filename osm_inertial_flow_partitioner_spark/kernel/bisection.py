@@ -26,6 +26,7 @@ identical to the reference's; only the labels are canonicalized.
 from __future__ import annotations
 
 import os
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -110,21 +111,145 @@ class BisectionResult:
     cells: list[np.ndarray] = field(default_factory=list)
     stats: list[CutStats] = field(default_factory=list)
 
-    def assignment(self, num_vertices_hint: int | None = None) -> dict[int, int]:
-        out: dict[int, int] = {}
-        for cid, cell in enumerate(self.cells):
-            for v in cell.tolist():
-                out[v] = cid
-        return out
+
+def aligned_coords(
+    vertex_ids, lat_by_vertex, lon_by_vertex, coords_aligned: bool
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(ascending ids, lat, lon) with the coordinates aligned to the ids.
+
+    ``lat_by_vertex``/``lon_by_vertex`` may be dense arrays indexed by
+    original vertex id, or dicts — or, with ``coords_aligned=True``,
+    arrays already aligned to ``np.sort(vertex_ids)`` (the cogroup
+    kernels hold exactly that, so no dict build / id-indexed gather)."""
+    ids = np.sort(np.asarray(vertex_ids, dtype=np.int64))
+    if coords_aligned:
+        lat = np.asarray(lat_by_vertex, dtype=np.float64)
+        lon = np.asarray(lon_by_vertex, dtype=np.float64)
+        assert len(lat) == len(lon) == len(ids), (
+            "coords_aligned: lat/lon must align to np.sort(vertex_ids)"
+        )
+    elif isinstance(lat_by_vertex, dict):
+        lat = np.array([lat_by_vertex[int(v)] for v in ids], dtype=np.float64)
+        lon = np.array([lon_by_vertex[int(v)] for v in ids], dtype=np.float64)
+    else:
+        lat = np.asarray(lat_by_vertex, dtype=np.float64)[ids]
+        lon = np.asarray(lon_by_vertex, dtype=np.float64)[ids]
+    return ids, lat, lon
 
 
-def _edges_within(
-    cell: np.ndarray, tails: np.ndarray, heads: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Keep edges with both endpoints in ``cell`` (J3 semi-join filter),
-    preserving the (tail, edge id) order of the input arrays."""
-    member = np.isin(tails, cell) & np.isin(heads, cell)
-    return tails[member], heads[member]
+def work_item(ids, lat, lon, tails, heads) -> tuple:
+    """The work item of one cell: (ascending original ids, lat, lon,
+    local tails, local heads). Edges leaving the cell are dropped (the
+    J3 semi-join, as in buildInitialPartitionGraph) and the (tail, edge
+    id) order of the input is kept."""
+    tails = np.asarray(tails, dtype=np.int64)
+    heads = np.asarray(heads, dtype=np.int64)
+    member = np.isin(tails, ids) & np.isin(heads, ids)
+    return (
+        ids, lat, lon,
+        np.searchsorted(ids, tails[member]),
+        np.searchsorted(ids, heads[member]),
+    )
+
+
+def _bisect_item(item, rate: float) -> tuple[CutStats, tuple, tuple]:
+    """Bisect one work item; returns (stats, side-one child, side-two
+    child), each child a work item of its own."""
+    cell, lat_c, lon_c, lt, lh = item
+    side, stats = _bisect_local(len(cell), lat_c, lon_c, lt, lh, rate)
+    # split the parent's edges by the side of BOTH endpoints — cross-cut
+    # edges drop, exactly the J3 filter of the child
+    st = side[lt]
+    same = st == side[lh]
+    one_e = same & (st == 0)
+    two_e = same & (st == 1)
+    # local indices remap to each child by cumulative rank of its side —
+    # monotone in parent-local index, hence in original id, so the
+    # frozen ascending order is preserved
+    one_v = side == 0
+    two_v = ~one_v
+    new1 = np.cumsum(one_v) - 1
+    new2 = np.cumsum(two_v) - 1
+    return (
+        stats,
+        (cell[one_v], lat_c[one_v], lon_c[one_v], new1[lt[one_e]], new1[lh[one_e]]),
+        (cell[two_v], lat_c[two_v], lon_c[two_v], new2[lt[two_e]], new2[lh[two_e]]),
+    )
+
+
+def _run_now(fn, *args) -> Future:
+    """The inline executor: run ``fn`` on the calling thread."""
+    fut: Future = Future()
+    fut.set_result(fn(*args))
+    return fut
+
+
+def bisection_tree(
+    item, max_cell_size: int, rate: float, workers: int | None = None
+) -> tuple[list[tuple], int, list[CutStats]]:
+    """Single-process Partition() (recursiveBisection.go:37-66) of one
+    work item: re-bisect every side of size >= ``max_cell_size``.
+
+    Returns (final non-empty work items ordered by min original id,
+    number of empty cells, stats in round-by-round generation order).
+
+    Cells are independent (identical cut set to the reference FIFO), so
+    the bisection TREE runs as a task DAG: each child is submitted the
+    moment its parent finishes, and one slow branch never barriers the
+    others. A big entering cell (>= 32768 vertices — the raised finish
+    threshold hands a whole level's recursion to ONE Spark task) runs
+    the DAG on a pool of ``workers`` threads (None = min(16,
+    cpu_count); the compiled Dinic releases the GIL); a smaller one, the
+    many-concurrent-tasks regime, runs it on the inline executor. Stats
+    are sorted by the (round, heap index) key — children 2h/2h+1 of
+    increasing parent h sort ascending, which IS the round-by-round
+    generation order — so the sequence does not depend on the executor.
+    Without a C compiler the pool runs the GIL-bound numpy engine: same
+    results, no speedup."""
+    if max_cell_size <= 3:
+        raise ValueError(
+            "max_cell_size <= 3 does not terminate in the reference "
+            "(int(n*0.25) == 0 endpoints on an oversized cell)"
+        )
+    if workers is None:
+        workers = min(16, os.cpu_count() or 4)
+    pool = (
+        ThreadPoolExecutor(max_workers=workers)
+        if len(item[0]) >= 32768 and workers > 1
+        else None
+    )
+    submit = _run_now if pool is None else pool.submit
+    pending: dict = {}
+    recorded: list[tuple[int, int, CutStats]] = []
+    finals: list[tuple] = []
+    n_empty = 0
+    try:
+        # per-cell direction jobs keep the size-gated auto policy of
+        # best_inertial_cut: the mild oversubscription measured FASTER
+        # than budgeting the inner pool by active-cell count
+        pending[submit(_bisect_item, item, rate)] = (0, 1)
+        while pending:
+            done, _ = wait(list(pending), return_when=FIRST_COMPLETED)
+            for fut in done:
+                rnd, hidx = pending.pop(fut)
+                stats, *children = fut.result()
+                stats.round = rnd
+                recorded.append((rnd, hidx, stats))
+                for ci, child in enumerate(children):
+                    if len(child[0]) == 0:
+                        n_empty += 1  # empty side still consumes a cell id
+                    elif len(child[0]) < max_cell_size:
+                        finals.append(child)
+                    else:
+                        pending[submit(_bisect_item, child, rate)] = (
+                            rnd + 1, 2 * hidx + ci,
+                        )
+    finally:
+        if pool is not None:
+            pool.shutdown(wait=False, cancel_futures=True)
+    recorded.sort(key=lambda t: (t[0], t[1]))
+    finals.sort(key=lambda c: int(c[0][0]))  # min original id (ascending arrays)
+    return finals, n_empty, [s for _, _, s in recorded]
 
 
 def recursive_bisection(
@@ -138,167 +263,22 @@ def recursive_bisection(
     pool_workers: int | None = None,
     coords_aligned: bool = False,
 ) -> BisectionResult:
-    """Single-process Partition() (recursiveBisection.go:37-66), executed
-    as rounds (identical cut set to the FIFO queue — each bisection is
-    independent of the others).
+    """Partition() of one cell through ``bisection_tree``.
 
-    ``pool_workers`` caps the big-cell round pool (None = min(16,
+    ``pool_workers`` caps the big-cell DAG pool (None = min(16,
     cpu_count)); the Spark driver passes its cores-per-concurrent-task
     estimate so several promoted finish tasks don't oversubscribe the
-    host.
-
-    ``lat_by_vertex``/``lon_by_vertex`` may be dense arrays indexed by
-    original vertex id, or dicts — or, with ``coords_aligned=True``,
-    arrays already aligned to ``np.sort(vertex_ids)`` (the cogroup
-    kernels hold exactly that, so no dict build / id-indexed gather).
-    ``tails``/``heads`` use original ids sorted by (tail, edge id) and
-    may contain edges leaving the cell (they are filtered here, as in
+    host. Coordinates are read as in ``aligned_coords``. ``tails``/
+    ``heads`` use original ids sorted by (tail, edge id) and may contain
+    edges leaving the cell (they are filtered here, as in
     buildInitialPartitionGraph).
     """
-    if max_cell_size <= 3:
-        raise ValueError(
-            "max_cell_size <= 3 does not terminate in the reference "
-            "(int(n*0.25) == 0 endpoints on an oversized cell)"
-        )
-
-    vertex_ids = np.sort(np.asarray(vertex_ids, dtype=np.int64))
-    # Align coordinates to the sorted root ids ONCE — the former per-cell
-    # dict/dense lookup paid a Python loop (or a huge-index gather) per
-    # cell per round; a positional searchsorted gather is pure numpy.
-    if coords_aligned:
-        root_lat = np.asarray(lat_by_vertex, dtype=np.float64)
-        root_lon = np.asarray(lon_by_vertex, dtype=np.float64)
-        assert len(root_lat) == len(root_lon) == len(vertex_ids), (
-            "coords_aligned: lat/lon must align to np.sort(vertex_ids)"
-        )
-    elif isinstance(lat_by_vertex, dict):
-        root_lat = np.array(
-            [lat_by_vertex[int(v)] for v in vertex_ids], dtype=np.float64
-        )
-        root_lon = np.array(
-            [lon_by_vertex[int(v)] for v in vertex_ids], dtype=np.float64
-        )
-    else:
-        root_lat = np.asarray(lat_by_vertex, dtype=np.float64)[vertex_ids]
-        root_lon = np.asarray(lon_by_vertex, dtype=np.float64)[vertex_ids]
-
-    result = BisectionResult()
-    final_nonempty: list[np.ndarray] = []
-    n_empty = 0
-    # Work items carry (original ids ascending, lat, lon, local tails,
-    # local heads): a child's edges AND their local indices derive from
-    # its parent's via the cut-side split below, so the former per-cell
-    # `_edges_within` rescan of the FULL root edge list every round —
-    # O(E log n) x 2^round — and the per-cell original-id searchsorted
-    # remaps (bisect_once + the side gathers; the dominant numpy cost
-    # of a big finish kernel after the flow search was compiled) are
-    # both one O(n + E_parent) split per bisection.
-    t0, h0 = _edges_within(vertex_ids, tails, heads)
-    lt0 = np.searchsorted(vertex_ids, t0)
-    lh0 = np.searchsorted(vertex_ids, h0)
-    active: list[tuple] = [(vertex_ids, root_lat, root_lon, lt0, lh0)]
-
-    workers = (
-        min(16, os.cpu_count() or 4) if pool_workers is None else pool_workers
+    ids, lat, lon = aligned_coords(
+        vertex_ids, lat_by_vertex, lon_by_vertex, coords_aligned
     )
-
-    def bisect_cell(item, jobs_workers):
-        cell, lat_c, lon_c, lt, lh = item
-        n_c = len(cell)
-        side, stats = _bisect_local(
-            n_c, lat_c, lon_c, lt, lh, rate, jobs_workers=jobs_workers
-        )
-        # split the parent's edges by the side of BOTH endpoints —
-        # cross-cut edges drop, exactly what _edges_within(child) kept
-        st = side[lt]
-        sh = side[lh]
-        same = st == sh
-        one_e = same & (st == 0)
-        two_e = same & (st == 1)
-        # local indices remap to each child by cumulative rank of its
-        # side — monotone in parent-local index, hence in original id,
-        # so the frozen ascending order is preserved
-        one_v = side == 0
-        two_v = ~one_v
-        new1 = np.cumsum(one_v) - 1
-        new2 = np.cumsum(two_v) - 1
-        return (
-            stats,
-            (cell[one_v], lat_c[one_v], lon_c[one_v], new1[lt[one_e]], new1[lh[one_e]]),
-            (cell[two_v], lat_c[two_v], lon_c[two_v], new2[lt[two_e]], new2[lh[two_e]]),
-        )
-
-    # Cells are independent (identical cut set to the reference FIFO);
-    # for a big entering cell — the raised finish threshold hands a
-    # whole level's recursion to ONE Spark task — the bisection TREE is
-    # executed as a task DAG on a thread pool: each child is submitted
-    # the moment its parent finishes (the compiled Dinic releases the
-    # GIL), so one slow branch no longer barriers the whole round (the
-    # former per-round pool.map lost ~15-20% of the wall to stragglers).
-    # Stats are re-sorted to the exact BFS order afterwards via the
-    # (round, heap index) key — children 2h/2h+1 of increasing parent h
-    # sort ascending, which IS the old round-by-round generation order —
-    # so the emitted sequence is bit-identical to the serial loop.
-    # Small entering cells (the many-concurrent-tasks regime, e.g. the
-    # multilevel finish) stay fully serial — no pool, no
-    # oversubscription. Without a C compiler the pool runs the GIL-bound
-    # numpy engine: same results, no speedup.
-    if len(vertex_ids) >= 32768 and workers > 1:
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
-        pool = ThreadPoolExecutor(max_workers=workers)
-        try:
-            # per-cell direction jobs keep the size-gated auto policy
-            # (10-way pool on >= PARALLEL_JOBS_MIN_N cells): the mild
-            # oversubscription measured FASTER than budgeting the inner
-            # pool by active-cell count — the C kernel releases the GIL
-            # and idle-thread cost is noise next to barrier loss.
-            pending: dict = {}
-            recorded: list[tuple[int, int, CutStats]] = []
-
-            def submit(item, rnd: int, hidx: int) -> None:
-                fut = pool.submit(bisect_cell, item, None)
-                pending[fut] = (rnd, hidx)
-
-            submit(active[0], 0, 1)
-            while pending:
-                done, _ = wait(list(pending), return_when=FIRST_COMPLETED)
-                for fut in done:
-                    rnd, hidx = pending.pop(fut)
-                    stats, one_item, two_item = fut.result()
-                    stats.round = rnd
-                    recorded.append((rnd, hidx, stats))
-                    for ci, part in enumerate((one_item, two_item)):
-                        if len(part[0]) == 0:
-                            n_empty += 1  # empty side still consumes an id
-                        elif len(part[0]) < max_cell_size:
-                            final_nonempty.append(part[0])
-                        else:
-                            submit(part, rnd + 1, 2 * hidx + ci)
-            recorded.sort(key=lambda t: (t[0], t[1]))
-            result.stats.extend(s for _, _, s in recorded)
-        finally:
-            pool.shutdown(wait=False, cancel_futures=True)
-    else:
-        rnd = 0
-        while active:
-            outs = [bisect_cell(item, None) for item in active]
-            nxt: list[tuple] = []
-            for stats, one_item, two_item in outs:
-                stats.round = rnd
-                result.stats.append(stats)
-                for part in (one_item, two_item):
-                    if len(part[0]) == 0:
-                        n_empty += 1  # empty side still consumes a cell id
-                    elif len(part[0]) < max_cell_size:
-                        final_nonempty.append(part[0])
-                    else:
-                        nxt.append(part)
-            active = nxt
-            rnd += 1
-
-    final_nonempty.sort(key=lambda c: int(c[0]))  # min original id (ascending arrays)
-    result.cells = final_nonempty + [
-        np.empty(0, dtype=np.int64) for _ in range(n_empty)
-    ]
-    return result
+    finals, n_empty, stats = bisection_tree(
+        work_item(ids, lat, lon, tails, heads), max_cell_size, rate,
+        pool_workers,
+    )
+    empty = np.empty(0, dtype=np.int64)
+    return BisectionResult([f[0] for f in finals] + [empty] * n_empty, stats)

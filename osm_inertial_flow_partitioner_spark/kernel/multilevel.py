@@ -26,7 +26,13 @@ import math
 import numpy as np
 
 from ..config import SOURCE_SINK_RATE
-from .bisection import CutStats, recursive_bisection
+from .bisection import (
+    CutStats,
+    aligned_coords,
+    bisection_tree,
+    recursive_bisection,
+    work_item,
+)
 
 
 def multilevel_partition_local(
@@ -104,104 +110,39 @@ def multilevel_finish_local(
 
     ``cell_sizes_desc`` lists the remaining levels' max cell sizes from
     the current level DOWN to level 0 (e.g. [U_2, U_1, U_0]). Per level,
-    per parent: ``recursive_bisection`` already emits children in the
-    frozen relabel order (non-empty by min original vertex id, then
-    empties — SURVEY.md §7), and an EMPTY parent contributes 2 empty
-    children in place (Partition on an empty graph,
-    multilevel_partitioner.go:59-68); concatenating children in parent
-    order therefore reproduces ``multilevel_partition_local``'s (and the
-    distributed relabel's) numbering exactly, offset by the count of
-    cells in preceding entering cells (added by the Spark driver).
+    per parent: ``bisection_tree`` already emits children in the frozen
+    relabel order (non-empty by min original vertex id, then empties —
+    SURVEY.md §7), and an EMPTY parent contributes 2 empty children in
+    place (Partition on an empty graph, multilevel_partitioner.go:59-68);
+    concatenating children in parent order therefore reproduces
+    ``multilevel_partition_local``'s (and the distributed relabel's)
+    numbering exactly, offset by the count of cells in preceding
+    entering cells (added by the Spark driver).
 
-    ``coords_aligned=True`` marks ``lat_by_vertex``/``lon_by_vertex`` as
-    arrays aligned to ``np.sort(vertex_ids)`` (the cogroup kernel's
-    natural layout; avoids per-parent dict rebuilds).
-
-    Edges are bucketed by parent cell ONCE per level: the former
-    per-parent ``recursive_bisection(cell, ..., tails, heads)`` call
-    re-scanned the FULL entering-cell edge list per parent (O(P x E) —
-    at the bench's 124k-vertex root the level-0 pass paid ~90 full
-    np.isin scans of a 250k-edge array, round 6), while one stable
-    grouping by (parent of tail == parent of head) is O(E log E) total
-    and preserves the per-parent (tail, edge id) order.
+    Coordinates are read as in ``bisection.aligned_coords``. Each final
+    cell comes back from ``bisection_tree`` as a work item that already
+    carries its own edges in local indices, so it seeds the next level
+    as-is: the entering cell's edges are filtered and remapped once.
 
     Returns one list of cells (ascending-id arrays; empty arrays are
     empty cells) per level, in ``cell_sizes_desc`` order.
     """
-    ids0 = np.sort(np.asarray(vertex_ids, dtype=np.int64))
-    if coords_aligned:
-        lat0 = np.asarray(lat_by_vertex, dtype=np.float64)
-        lon0 = np.asarray(lon_by_vertex, dtype=np.float64)
-        assert len(lat0) == len(lon0) == len(ids0), (
-            "coords_aligned: lat/lon must align to np.sort(vertex_ids)"
-        )
-    elif isinstance(lat_by_vertex, dict):
-        lat0 = np.array([lat_by_vertex[int(v)] for v in ids0], dtype=np.float64)
-        lon0 = np.array([lon_by_vertex[int(v)] for v in ids0], dtype=np.float64)
-    else:
-        lat0 = np.asarray(lat_by_vertex, dtype=np.float64)[ids0]
-        lon0 = np.asarray(lon_by_vertex, dtype=np.float64)[ids0]
-    tails = np.asarray(tails, dtype=np.int64)
-    heads = np.asarray(heads, dtype=np.int64)
-    # keep only edges inside the entering cell (and their positions for
-    # the coord gathers below); order preserved
-    inside = np.isin(tails, ids0) & np.isin(heads, ids0)
-    tails, heads = tails[inside], heads[inside]
-
-    cells = [ids0]
-    cell_edges: list[tuple[np.ndarray, np.ndarray]] = [(tails, heads)]
+    ids, lat, lon = aligned_coords(
+        vertex_ids, lat_by_vertex, lon_by_vertex, coords_aligned
+    )
+    items = [work_item(ids, lat, lon, tails, heads)]
+    empty = tuple(a[:0] for a in items[0])
     per_level: list[list[np.ndarray]] = []
     for u in cell_sizes_desc:
-        new_cells: list[np.ndarray] = []
-        new_edges: list[tuple[np.ndarray, np.ndarray]] = []
-        for cell, (t_c, h_c) in zip(cells, cell_edges):
-            if len(cell) == 0:
-                new_cells.extend(
-                    [np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)]
-                )
-                new_edges.extend([(t_c, h_c), (t_c, h_c)])  # empty arrays
+        children: list[tuple] = []
+        for item in items:
+            if len(item[0]) == 0:
+                children.extend([empty, empty])
                 continue
-            pos = np.searchsorted(ids0, cell)
-            res = recursive_bisection(
-                cell, lat0[pos], lon0[pos], t_c, h_c, u, rate,
-                coords_aligned=True,
-            )
-            new_cells.extend(res.cells)
-            # bucket this parent's edges by CHILD cell in one pass:
-            # child index per vertex (children are disjoint subsets of
-            # the parent), then both-endpoints-same-child grouping via
-            # one stable argsort — per-child (tail, edge id) order is
-            # preserved, identical to _edges_within(child)
-            nz = [c for c in res.cells if len(c)]
-            if len(t_c) and nz:
-                cat = np.concatenate(nz)
-                cidx = np.repeat(np.arange(len(nz), dtype=np.int64),
-                                 [len(c) for c in nz])
-                order = np.argsort(cat, kind="stable")
-                sc, scid = cat[order], cidx[order]
-                ct = scid[np.searchsorted(sc, t_c)]
-                ch = scid[np.searchsorted(sc, h_c)]
-                same = ct == ch
-                ti, hi, ci = t_c[same], h_c[same], ct[same]
-                grp = np.argsort(ci, kind="stable")
-                ti, hi, ci = ti[grp], hi[grp], ci[grp]
-                bounds = np.searchsorted(ci, np.arange(len(nz) + 1))
-                nz_edges = [
-                    (ti[bounds[j]:bounds[j + 1]], hi[bounds[j]:bounds[j + 1]])
-                    for j in range(len(nz))
-                ]
-            else:
-                nz_edges = [
-                    (np.empty(0, np.int64), np.empty(0, np.int64))
-                ] * len(nz)
-            it = iter(nz_edges)
-            empty_e = (np.empty(0, np.int64), np.empty(0, np.int64))
-            new_edges.extend(
-                next(it) if len(c) else empty_e for c in res.cells
-            )
-        per_level.append(new_cells)
-        cells = new_cells
-        cell_edges = new_edges
+            finals, n_empty, _ = bisection_tree(item, u, rate)
+            children.extend(finals + [empty] * n_empty)
+        per_level.append([c[0] for c in children])
+        items = children
     return per_level
 
 

@@ -38,14 +38,17 @@ recursiveBisection.go:127-136 — have no vertex rows; the kernel reports
 them via n_empty, carried as a DataFrame). Per-round snapshots +
 lineage/metrics via plans/checkpoint.py.
 
-Driver memory is independent of total cell count: per-cell sizes,
-empty-cell bookkeeping, lineage metrics and the per-level relabel all
-live in DataFrames (per-root rank window + two-phase prefix sum over
-roots); the driver touches O(1) scalars per round, plus one stat row
-per bisected cell while fewer cells than ``parallelism`` are big.
-Literal control rows (active sizes, stat rows, empties, prefix-sum
-offsets) become Arrow local relations through ``session.local_frame``,
-so reading them starts no Spark job and no Python worker.
+Driver memory is independent of total cell count: the sizes a level
+enters with, finish-kernel metrics, empty-cell bookkeeping and the
+per-level relabel live in DataFrames (per-root rank window + two-phase
+prefix sum over roots). The driver holds one stat row per bisected
+cell: a bisected cell has >= ``local_recursion_threshold`` vertices, so
+a round collects at most n_vertices / threshold rows (15k at 10^9
+vertices and the default threshold), and the next round's sizes are
+the at most twice as many oversized children. Literal control rows
+(active sizes, stat rows, empties, prefix-sum offsets) become Arrow
+local relations through ``session.local_frame``, so reading them starts
+no Spark job and no Python worker.
 """
 
 from __future__ import annotations
@@ -67,6 +70,9 @@ KERNEL_OUT_SCHEMA = (
     "lat double, lon double, "
     "n int, cut_edges int, part_two int, best_job int, n_empty int"
 )
+
+#: the per-parent stat columns of a kernel output row
+STAT_COLUMNS = ("n", "cut_edges", "part_two", "best_job", "n_empty")
 
 ML_FINISH_SCHEMA = (
     "root long, level int, local_cell long, vertex_id long, n_cells long"
@@ -108,8 +114,9 @@ DEFAULT_LOCAL_RECURSION_THRESHOLD = int(
 #: 64k threshold is ~16% of the 2^20-vertex per-executor design bound.
 PROMOTE_CAP = 2.5
 
-#: largest row count a prefix sum collects to the driver; bigger (or
-#: unbounded) frames take the two-phase distributed path
+#: largest row count a prefix sum collects to the driver (bigger or
+#: unbounded frames take the two-phase distributed path), and the most
+#: cells one round may bisect: their stat rows are always collected
 DRIVER_COLLECT_MAX_ROWS = 65536
 
 
@@ -130,7 +137,7 @@ def _sorted_cell_arrays(vdf: pd.DataFrame, edf: pd.DataFrame):
 def _make_finish_kernel(max_cell_size: int, rate: float, thread_budget: int | None = None):
     """Mode 2: complete the recursion for one small cell.
     ``thread_budget``: driver's cores-per-concurrent-task estimate for
-    the big-cell round pool inside recursive_bisection."""
+    the big-cell DAG pool inside recursive_bisection."""
 
     def kernel(key, vdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
         root, path = int(key[0]), int(key[1])
@@ -278,9 +285,11 @@ def _bisect_control_rows(
 ) -> tuple[list, list, list]:
     """Literal control rows (metrics, still-oversized child sizes,
     empty-cell counts) from the collected per-parent stat rows of a
-    bisection round — LITERAL rows on purpose: they keep the driver's
-    sizes mirror live and cut the cross-round lineage of the control
-    frames (see the bounded-collect comment in _run_level)."""
+    bisection round. LITERAL on purpose: deriving them lazily round
+    after round chains the lineage, and Catalyst's sizeInBytes stats (a
+    PRODUCT over join children) compound into BigIntegers with
+    thousands of digits — the driver then spends MINUTES per round in
+    planning (round-2 lesson)."""
     mrows, srows, erows = [], [], []
     for r in prows:
         root, path = int(r["root"]), int(r["parent_path"])
@@ -298,6 +307,59 @@ def _bisect_control_rows(
         if p2 >= max_cell_size:
             srows.append((root, path * 2 + 1, p2))
     return mrows, srows, erows
+
+
+def _round_plan(spark, sizes, rnd: int, local_threshold: int):
+    """The round decision, from either source of the active cell sizes
+    (root, path, n): driver rows, or a DataFrame (round 0 of a level
+    entered from a relabel — O(#cells) rows — and the round after a
+    replayed snapshot). Both hold exactly the round's active cells:
+    every parent cell at round 0, the still-oversized children after.
+
+    Returns None when no cell is active, else (active frame, #small
+    cells, #big cells, the (root, path) of round 0's only cell or
+    None)."""
+    if isinstance(sizes, DataFrame):
+        agg = sizes.groupBy().agg(
+            F.count("*"),
+            F.sum((F.col("n") >= local_threshold).cast("int")),
+            F.max("root"),
+            F.max("path"),
+            F.max("n"),
+        ).first()
+        n_active, n_big, max_root, max_path, max_n = (int(x or 0) for x in agg)
+    else:
+        n_active = len(sizes)
+        n_big = sum(1 for r in sizes if r[2] >= local_threshold)
+        max_root, max_path, max_n = (
+            max((r[i] for r in sizes), default=0) for i in range(3)
+        )
+    if n_active == 0:
+        return None
+    # every bisection round appends >= 1 bit to the heap path
+    assert max_path < 2**61, "heap-numbered cell path near int64 overflow"
+    # promote rule: when every remaining big cell is < PROMOTE_CAP x the
+    # finish threshold, one more distributed bisection round would only
+    # produce children that all finish locally next round — skip the
+    # round and finish the borderline cells in-kernel now. Collapses the
+    # trailing dribble of the bisection prefix (50k docs: rounds/level
+    # 6 -> 4 measured at the default threshold) without ever promoting a
+    # cell that could stress executor memory.
+    if n_big and max_n < PROMOTE_CAP * local_threshold:
+        n_big = 0
+    # a bisected cell holds >= local_threshold vertices, so the stat
+    # rows collected per round number at most n_vertices / threshold
+    if n_big > DRIVER_COLLECT_MAX_ROWS:
+        raise ValueError(
+            f"{n_big} cells of >= local_recursion_threshold="
+            f"{local_threshold} vertices are bisected in one round, more "
+            f"than the {DRIVER_COLLECT_MAX_ROWS} stat rows the driver "
+            "collects; raise local_recursion_threshold"
+        )
+    if not isinstance(sizes, DataFrame):
+        sizes = local_frame(spark, sizes, SIZES_SCHEMA)
+    one_cell = (max_root, max_path) if rnd == 0 and n_active == 1 else None
+    return sizes, n_active - n_big, n_big, one_cell
 
 
 def _label_edges(edges: DataFrame, active: DataFrame) -> DataFrame:
@@ -404,35 +466,25 @@ def _run_level(
     local_threshold: int,
     level: int,
     metrics_frames: list,
-    sizes_df: DataFrame,
+    sizes,
     checkpoint=None,
-    sizes_rows: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Bisection rounds for one level. Round 0 bisects every cell
     (Partition() runs per parent unconditionally,
     multilevel_partitioner.go:59-68); later rounds only cells with
     count >= max_cell_size.
 
-    ``sizes_df`` (root, path, n) carries the per-cell sizes as a
-    DataFrame — between rounds it holds only still-oversized children,
-    so neither the driver nor the frame grows with TOTAL cell count.
-    The driver touches O(1) scalars per round (active/big counts, max
-    path) plus, while fewer than ``parallelism`` cells are big, one
-    stat row per bisected cell. Lineage metrics and empty-cell
-    bookkeeping are DataFrames too.
+    ``sizes`` (root, path, n) holds the round's active cells: driver
+    rows, or a DataFrame at round 0 of a level entered from a relabel
+    (O(#cells) rows there). ``_round_plan`` turns either into the round
+    decision. Every later round's sizes are the still-oversized
+    children, rebuilt as literal rows from the bisection kernel's
+    collected per-parent stat rows by ``_bisect_control_rows``: a
+    bisected cell holds >= ``local_threshold`` vertices, so a round
+    collects at most n_vertices / threshold stat rows. Finish-kernel
+    metrics and empty-cell bookkeeping stay DataFrames.
 
-    Returns (assignment, empties_df (root, n_empty)).
-
-    ``sizes_rows`` — optional driver-side Python mirror of ``sizes_df``
-    as [(root, path, n), ...]. Only carried while it stays BOUNDED: the
-    top level enters with one literal row, and while fewer than
-    ``parallelism`` cells are bisected the still-oversized children come
-    back through the bounded per-cell stat collect, so the mirror costs
-    O(active) driver memory — never O(#cells). Any round that derives
-    sizes lazily (many big cells, checkpointing, level entry from
-    relabel) drops the mirror and the DataFrame path takes over. With
-    the mirror live, the per-round mode decision and the active/big
-    splits are pure Python — no sizes aggregation job per round."""
+    Returns (assignment, empties_df (root, n_empty))."""
     spark = assign.sparkSession
     sc = spark.sparkContext
     parallelism = sc.defaultParallelism
@@ -456,77 +508,25 @@ def _run_level(
     # every cell in ``assign`` is active this round: round 0 activates
     # every cell, and a later round does when the round before it ran no
     # finish kernel, carried no inactive cells and got every child of
-    # every bisected parent back from the bounded stat collect as
-    # oversized. Then the round has no inactive cells to carry over.
+    # every bisected parent back as oversized. Then the round has no
+    # inactive cells to carry over.
     all_active = True
     while True:
         sc.setJobDescription(f"tiler: level={level} round={rnd}")
         if checkpoint is not None and checkpoint.has_round(level, rnd):
             # resume: replay this round from its durable snapshot
-            assign, sizes_df, empties_df, m = checkpoint.load_round_dfs(
+            assign, sizes, empties_df, m = checkpoint.load_round_dfs(
                 level, rnd, schemas
             )
             metrics_frames.append(m)
-            sizes_rows = None
             all_active = False
             rnd += 1
             continue
         _t_phase = time.time()
-        one_cell = None  # (root, path) of round 0's only cell
-        if sizes_rows is not None:
-            act_rows = (
-                sizes_rows
-                if rnd == 0
-                else [r for r in sizes_rows if r[2] >= max_cell_size]
-            )
-            n_active = len(act_rows)
-            if n_active == 0:
-                break
-            assert max(r[1] for r in act_rows) < 2**61, (
-                "heap-numbered cell path near int64 overflow"
-            )
-            max_n = max(r[2] for r in act_rows)
-            n_big = sum(1 for r in act_rows if r[2] >= local_threshold)
-            if rnd == 0 and n_active == 1:
-                one_cell = tuple(act_rows[0][:2])
-        else:
-            active = (
-                sizes_df  # round 0: every parent cell, any size
-                if rnd == 0
-                else sizes_df.filter(F.col("n") >= max_cell_size)
-            )
-            agg = active.groupBy().agg(
-                F.count("*").alias("n_active"),
-                F.sum((F.col("n") >= local_threshold).cast("int")).alias("n_big"),
-                F.max("root").alias("max_root"),
-                F.max("path").alias("max_path"),
-                F.max("n").alias("max_n"),
-            ).first()
-            n_active = int(agg["n_active"] or 0)
-            if n_active == 0:
-                break
-            # every bisection round appends >= 1 bit to the heap path
-            assert int(agg["max_path"]) < 2**61, (
-                "heap-numbered cell path near int64 overflow"
-            )
-            max_n = int(agg["max_n"])
-            n_big = int(agg["n_big"] or 0)
-            if rnd == 0 and n_active == 1:
-                one_cell = (int(agg["max_root"]), int(agg["max_path"]))
-        # promote rule: when every remaining big cell is < PROMOTE_CAP x
-        # the finish threshold, one more distributed bisection round
-        # would only produce children that all finish locally next round
-        # — skip the round and finish the borderline cells in-kernel now.
-        # Collapses the trailing dribble of the bisection prefix (50k
-        # docs: rounds/level 6 -> 4 measured at the default threshold)
-        # without ever promoting a cell that could stress executor memory.
-        if n_big and max_n < PROMOTE_CAP * local_threshold:
-            n_big = 0
-        n_small = n_active - n_big
-        if sizes_rows is not None:
-            active = local_frame(spark, act_rows, SIZES_SCHEMA)
-        small_df = active.filter(F.col("n") < local_threshold) if n_big else active
-        big_df = active.filter(F.col("n") >= local_threshold)
+        plan = _round_plan(spark, sizes, rnd, local_threshold)
+        if plan is None:
+            break
+        active, n_small, n_big, one_cell = plan
         if os.environ.get("TILER_DEBUG"):
             print(f"[tiler]   sizes prep took {time.time() - _t_phase:.2f}s", flush=True)
         _t_round = time.time()
@@ -545,10 +545,6 @@ def _run_level(
                 ).select("root", "path", "vertex_id", "lat", "lon")
             ]
         )
-        sizes_frames: list[DataFrame] = []  # still-oversized children
-        empties_frames: list[DataFrame] = []
-        metric_parts: list[DataFrame] = []
-        to_unpersist = []  # kernel outputs the lazy control frames read
 
         def run_kernel(keys_df, kernel):
             if one_cell is not None:
@@ -575,114 +571,40 @@ def _run_level(
             )
             frames.append(out.select("root", "path", "vertex_id", "lat", "lon"))
             per_parent = out.groupBy("root", "parent_path").agg(
-                F.first("n").alias("n"),
-                F.first("cut_edges").alias("cut_edges"),
-                F.first("part_two").alias("part_two"),
-                F.first("best_job").alias("best_job"),
-                F.first("n_empty").alias("n_empty"),
+                *(F.first(c).alias(c) for c in STAT_COLUMNS)
             )
             return out, per_parent
 
-        def lazy_controls(out, per_parent, is_bisect):
-            to_unpersist.append(out)
-            metric_parts.append(
-                per_parent.select(
-                    F.lit(level).cast("int").alias("level"),
-                    F.lit(rnd).cast("int").alias("round"),
-                    "root",
-                    "parent_path",
-                    "n",
-                    "cut_edges",
-                    "part_two",
-                    "best_job",
-                    "n_empty",
-                    F.lit("cell").alias("mode"),
-                )
+        new_empties = empties_df
+        finish_out = fin = None
+        if n_small:
+            # finish rows are one per small cell (O(#cells) at a lower
+            # level): their metrics and empties stay lazy
+            finish_out, fin = run_kernel(
+                active.filter(F.col("n") < local_threshold) if n_big else active,
+                _make_finish_kernel(max_cell_size, rate, budget(n_small)),
             )
-            empties_frames.append(
-                per_parent.filter(F.col("n_empty") > 0).select(
+            new_empties = new_empties.unionByName(
+                fin.filter(F.col("n_empty") > 0).select(
                     "root", F.col("n_empty").cast("long").alias("n_empty")
                 )
             )
-            if is_bisect:
-                # children sizes derive from the cut metrics — no
-                # counting job, and only oversized children are kept
-                ch = per_parent.select(
-                    "root",
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                (F.col("parent_path") * 2).alias("path"),
-                                (F.col("n") - F.col("part_two"))
-                                .cast("long")
-                                .alias("n"),
-                            ),
-                            F.struct(
-                                (F.col("parent_path") * 2 + 1).alias("path"),
-                                F.col("part_two").cast("long").alias("n"),
-                            ),
-                        )
-                    ).alias("c"),
-                ).select("root", F.col("c.path").alias("path"), F.col("c.n").alias("n"))
-                sizes_frames.append(ch.filter(F.col("n") >= max_cell_size))
-
-        if n_small:
-            lazy_controls(
-                *run_kernel(
-                    small_df,
-                    _make_finish_kernel(max_cell_size, rate, budget(n_small)),
-                ),
-                False,
-            )
-        bounded = None  # (kernel output, per-parent stats) collected below
         if n_big:
-            out, per_parent = run_kernel(
-                big_df, _make_bisect_kernel(rate, budget(n_big))
+            big_out, big_stats = run_kernel(
+                active.filter(F.col("n") >= local_threshold),
+                _make_bisect_kernel(rate, budget(n_big)),
             )
-            if sizes_rows is not None and n_big < parallelism and checkpoint is None:
-                bounded = (out, per_parent)
-            else:
-                lazy_controls(out, per_parent, True)
 
         new_assign = frames[0]
         for fr in frames[1:]:
             new_assign = new_assign.unionByName(fr)
-        new_sizes = (
-            sizes_frames[0]
-            if sizes_frames
-            else local_frame(spark, [], SIZES_SCHEMA)
-        )
-        for fr in sizes_frames[1:]:
-            new_sizes = new_sizes.unionByName(fr)
-        new_empties = empties_df
-        for fr in empties_frames:
-            new_empties = new_empties.unionByName(fr)
-        round_metrics = (
-            metric_parts[0]
-            if metric_parts
-            else local_frame(spark, [], METRICS_SCHEMA)
-        )
-        for fr in metric_parts[1:]:
-            round_metrics = round_metrics.unionByName(fr)
-        if checkpoint is not None:
-            assign, sizes_df, empties_df, round_metrics = (
-                checkpoint.snapshot_round_dfs(
-                    level, rnd, new_assign, new_sizes, new_empties, round_metrics
-                )
-            )
-            metrics_frames.append(round_metrics)
-            sizes_rows = None
-            all_active = False
-            for df in to_unpersist:
-                df.unpersist()
-        else:
+        if checkpoint is None:
             # ONE eager materialization of the round's kernels (the
-            # assignment); the tiny sizes/empties/metrics frames stay
-            # LAZY against the cached kernel outputs and are folded into
-            # one job at level end — no per-round fixed-latency job tax.
-            # The coalesce caps the stored partition count: each round's
-            # union otherwise ADDS its children's partitions to the
-            # checkpointed set, and by round 6 every scan of the
+            # assignment); the finish metrics stay LAZY against the
+            # cached kernel output and are folded into one job at level
+            # end. The coalesce caps the stored partition count: each
+            # round's union otherwise ADDS its children's partitions to
+            # the checkpointed set, and by round 6 every scan of the
             # assignment was paying 300+ task launches (profiled round-3
             # tail: checkpoint cost grew 1.1s -> 4.0s across rounds).
             _t_phase = time.time()
@@ -692,74 +614,54 @@ def _run_level(
                     f"[tiler]   assign checkpoint took {time.time() - _t_phase:.2f}s",
                     flush=True,
                 )
-            srows, every_child_big = [], False
-            if bounded is not None:
-                # bounded collect: fewer than `parallelism` cells were
-                # bisected, so their stat rows are few and come from the
-                # kernel output the checkpoint above just cached. The
-                # control frames are rebuilt from LITERAL rows. Round-2
-                # lesson: deriving them LAZILY round after round chains
-                # the lineage, and Catalyst's sizeInBytes stats (a
-                # PRODUCT over join children) compound into BigIntegers
-                # with thousands of digits — the driver then spends
-                # MINUTES per round in planning. Literal rows cut the
-                # lineage and keep the sizes mirror live.
-                out, per_parent = bounded
-                prows = per_parent.collect()
-                mrows, srows, erows = _bisect_control_rows(
-                    prows, level, rnd, max_cell_size
+        prows = big_stats.collect() if n_big else []
+        mrows, sizes, erows = _bisect_control_rows(prows, level, rnd, max_cell_size)
+        round_metrics = local_frame(spark, mrows, METRICS_SCHEMA)
+        if finish_out is not None:
+            round_metrics = round_metrics.unionByName(
+                fin.select(
+                    F.lit(level).cast("int").alias("level"),
+                    F.lit(rnd).cast("int").alias("round"),
+                    "root", "parent_path", *STAT_COLUMNS,
+                    F.lit("cell").alias("mode"),
                 )
-                every_child_big = len(srows) == 2 * len(prows)
-                level_metric_frames.append(
-                    local_frame(spark, mrows, METRICS_SCHEMA)
-                )
-                if srows:
-                    new_sizes = new_sizes.unionByName(
-                        local_frame(spark, srows, SIZES_SCHEMA)
-                    )
-                if erows:
-                    new_empties = new_empties.unionByName(
-                        local_frame(spark, erows, EMPTIES_SCHEMA)
-                    )
-                # nothing lazy reads it past this point
-                out.unpersist()
-            # Truncate the sizes/empties lineage whenever lazy frames
-            # were contributed this round. Those frames reference the
-            # kernel output, which references this round's small/big
-            # split of the PREVIOUS sizes_df — more than one reference
-            # per round, so while the plan object graph stays a small
-            # DAG, everything that RENDERS the plan as a tree (the
-            # explainString built for the SQL listener event on every
-            # action) expands the sharing and grows O(2^rounds): at 200k
-            # docs / local[8] round ~10's checkpoint action OOM'd a 16g
-            # driver building a >40M-line plan string. Both frames are
-            # O(#active cells) rows and their inputs are already cached
-            # and materialized by the assignment checkpoint above, so
-            # this is a sub-second cache-read job.
-            # The per-round checkpoints are freed at LEVEL end (not per
-            # round): lazy metric frames may recompute through them if
-            # the persisted kernel outputs are evicted, and a
-            # truncated-lineage checkpoint cannot be rebuilt once its
-            # blocks are dropped. O(rounds) metadata-scale block sets
-            # per level, all released after the metrics materialize.
-            if sizes_frames:
-                sizes_df = new_sizes.localCheckpoint(eager=True)
-                level_unpersist.append(sizes_df)
-            else:
-                sizes_df = new_sizes
-            if empties_frames:
-                empties_df = new_empties.localCheckpoint(eager=True)
-                level_unpersist.append(empties_df)
-            else:
-                empties_df = new_empties
-            if metric_parts:
-                level_metric_frames.append(round_metrics)
-            level_unpersist.extend(to_unpersist)
-            # refresh the Python mirror: valid only when every child
-            # size this round came from the bounded stat collect (lazy
-            # bisection frames -> drop the mirror)
-            sizes_rows = None if sizes_frames else srows
-            all_active = all_active and not n_small and every_child_big
+            )
+        if erows:
+            new_empties = new_empties.unionByName(
+                local_frame(spark, erows, EMPTIES_SCHEMA)
+            )
+        if checkpoint is not None:
+            assign, _, empties_df, round_metrics = checkpoint.snapshot_round_dfs(
+                level, rnd, new_assign,
+                local_frame(spark, sizes, SIZES_SCHEMA), new_empties,
+                round_metrics,
+            )
+            metrics_frames.append(round_metrics)
+            if finish_out is not None:
+                finish_out.unpersist()
+        else:
+            level_metric_frames.append(round_metrics)
+            if finish_out is not None:
+                # Truncate the empties lineage: the lazy finish frame
+                # references the kernel output, which references this
+                # round's split of the previous sizes, so everything
+                # that RENDERS the plan as a tree (the explainString
+                # built for the SQL listener event on every action)
+                # grows O(2^rounds) — at 200k docs / local[8] round ~10
+                # OOM'd a 16g driver building a >40M-line plan string.
+                # Its input is cached and materialized by the assignment
+                # checkpoint above, so this is a sub-second cache read.
+                # The finish output and these checkpoints are freed at
+                # LEVEL end: the lazy metrics may recompute through
+                # them, and a truncated-lineage checkpoint cannot be
+                # rebuilt once its blocks are dropped.
+                new_empties = new_empties.localCheckpoint(eager=True)
+                level_unpersist.extend([new_empties, finish_out])
+            empties_df = new_empties
+        if n_big:
+            # nothing lazy reads it past this point
+            big_out.unpersist()
+        all_active = all_active and not n_small and len(sizes) == 2 * len(prows)
         if os.environ.get("TILER_DEBUG"):
             print(
                 f"[tiler] level={level} round={rnd} small={n_small} "
@@ -899,8 +801,9 @@ def _partition_levels(
         )
     # callers that already hold the vertex count (run_pipeline counts
     # the persisted entity frame anyway) pass it through — the count
-    # here only seeds sizes0, so re-counting was a pure driver-blocking
-    # job per pipeline run (2.4-4s at 200k docs, round-6 gap timers)
+    # here only seeds the top level's sizes row, so re-counting was a
+    # pure driver-blocking job per pipeline run (2.4-4s at 200k docs,
+    # round-6 gap timers)
     sc = spark.sparkContext
     sc.setJobDescription("tiler: count vertices")
     _t_dbg = time.time()
@@ -923,10 +826,9 @@ def _partition_levels(
 
     top_u = cell_sizes[L - 1]
     if n > top_u:
-        sizes0 = local_frame(spark, [(0, 1, n)], SIZES_SCHEMA)
         a, empties_df = _run_level(
             assign, edges, top_u, rate, local_recursion_threshold, L - 1,
-            metrics_frames, sizes0, checkpoint, sizes_rows=[(0, 1, n)],
+            metrics_frames, [(0, 1, n)], checkpoint,
         )
         _t = time.time()
         sc.setJobDescription(f"tiler: level={L - 1} relabel")
@@ -943,7 +845,7 @@ def _partition_levels(
         )
         c = 1
         empty_cells = local_frame(spark, [], "root long")
-        level_sizes = local_frame(spark, [(0, 1, n)], SIZES_SCHEMA)
+        level_sizes = [(0, 1, n)]
         mx_bound = n  # the single top cell holds exactly n vertices
     num_cells[L - 1] = c
     level_frames.append(

@@ -84,15 +84,18 @@ def run_stream_to_staging(
 # ---------------------------------------------------------------------------
 # Custom stateful operator: streaming sessionization
 # (applyInPandasWithState) — the streaming twin of
-# operators/sessionize.py::sessionize. It buffers whole seconds, so its
-# gaps match the batch twin's only on whole-second timestamps: the batch
-# twin compares microseconds.
+# operators/sessionize.py::sessionize. Like the batch twin it buffers
+# and compares event times in microseconds; the emitted start_ts/end_ts
+# are whole seconds.
 # ---------------------------------------------------------------------------
 
 SESSION_OUT_SCHEMA = (
     "user_id long, session_id long, start_ts long, end_ts long, n_events long"
 )
 SESSION_STATE_SCHEMA = "start long, last long, sid long, n long, buf array<long>"
+
+#: microseconds per second: event times are buffered in microseconds
+_US = 10**6
 
 
 def _make_session_fn(gap_sec: int, state_ttl_sec: int):
@@ -101,15 +104,16 @@ def _make_session_fn(gap_sec: int, state_ttl_sec: int):
     import pandas as pd
 
     cols = ["user_id", "session_id", "start_ts", "end_ts", "n_events"]
+    gap_us = gap_sec * _US
 
     def fn(key, pdf_iter, state):
         user_id = int(key[0])
         wm_ms = state.getCurrentWatermarkMs()
-        wm = wm_ms // 1000
-        new_ts: list[int] = []
+        wm = wm_ms // 1000  # the watermark's whole second
+        new_ts: list[int] = []  # event times in microseconds
         if not state.hasTimedOut:
             for pdf in pdf_iter:
-                new_ts.extend(int(x) for x in pdf["ts_long"])
+                new_ts.extend(int(x) for x in pdf["ts_us"])
         if state.exists:
             start, last, sid, n, buf = state.get
             buf = sorted(list(buf) + new_ts)
@@ -123,17 +127,19 @@ def _make_session_fn(gap_sec: int, state_ttl_sec: int):
             buf = sorted(new_ts)
             anchor = None
         out = []
-        # FINALIZE only events strictly below the watermark: any future
-        # arrival has ts >= watermark, so the relative order of the
-        # finalized prefix can never change — this is what makes the
-        # result independent of micro-batch arrival order. Later events
-        # stay buffered in state until the watermark passes them.
-        cut = bisect.bisect_left(buf, wm)
+        # FINALIZE only events strictly below the watermark's whole
+        # second: any future arrival has ts >= watermark, so the
+        # relative order of the finalized prefix can never change — this
+        # is what makes the result independent of micro-batch arrival
+        # order. Later events stay buffered in state until the watermark
+        # passes them. A session a finalized event closes (last + gap <
+        # t < wm) thus has end_ts + gap < wm in whole seconds too.
+        cut = bisect.bisect_left(buf, wm * _US)
         safe, buf = buf[:cut], buf[cut:]
         for t in safe:
-            if last is None or t - last > gap_sec:
+            if last is None or t - last > gap_us:
                 if last is not None:
-                    out.append((user_id, sid, start, last, n))
+                    out.append((user_id, sid, start // _US, last // _US, n))
                 sid += 1
                 start = t
                 n = 0
@@ -142,29 +148,30 @@ def _make_session_fn(gap_sec: int, state_ttl_sec: int):
         if last is not None:
             anchor = last
             # tail close, watermark-proved complete: no event can extend
-            # the open session once last + gap < wm STRICTLY (future
-            # arrivals are >= wm; Spark's event-time timeout uses the
-            # same strict predicate). Successor-closed sessions above
-            # satisfy end + gap < t_next < wm automatically, so the
-            # emitted set is exactly {batch sessions: end + gap < wm}.
-            if last + gap_sec < wm:
-                out.append((user_id, sid, start, last, n))
+            # the open session once end_ts + gap < wm STRICTLY in whole
+            # seconds (then last + gap < wm in microseconds, future
+            # arrivals are >= wm, and Spark's event-time timeout uses
+            # the same strict predicate). Successor-closed sessions
+            # above satisfy it too, so the emitted set is exactly
+            # {batch sessions: end_ts + gap < wm}.
+            if last // _US + gap_sec < wm:
+                out.append((user_id, sid, start // _US, last // _US, n))
                 start = last = None
                 n = 0
         if last is not None:  # open (not-yet-provably-complete) session
             state.update((start, last, sid, n, buf))
-            wake_ms = (last + gap_sec) * 1000
+            wake_ms = (last // _US + gap_sec) * 1000
             if buf:
-                wake_ms = min(wake_ms, buf[0] * 1000)
+                wake_ms = min(wake_ms, buf[0] // _US * 1000)
             state.setTimeoutTimestamp(max(wake_ms, wm_ms + 1))
         elif buf:  # only buffered future events; wake when wm passes one
             state.update((-1, anchor if anchor is not None else buf[0], sid, 0, buf))
-            state.setTimeoutTimestamp(max(buf[0] * 1000, wm_ms + 1))
+            state.setTimeoutTimestamp(max(buf[0] // _US * 1000, wm_ms + 1))
         elif sid >= 0 and anchor is not None:
             # sentinel: keep the per-user session counter so numbering
             # stays monotone across flushes; expires after
             # state_ttl_sec of event-time inactivity — bounded state
-            ttl_ms = (anchor + gap_sec + state_ttl_sec) * 1000
+            ttl_ms = (anchor + gap_us + state_ttl_sec * _US) // 1000
             if ttl_ms <= wm_ms:
                 state.remove()
             else:
@@ -208,7 +215,7 @@ def streaming_sessionize(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     ev = events_stream.withWatermark("ts", watermark).select(
-        "user_id", F.col("ts").cast("timestamp").cast("long").alias("ts_long"),
+        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.col("ts"),
     )
     return ev.groupBy("user_id").applyInPandasWithState(

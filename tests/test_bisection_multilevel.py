@@ -37,9 +37,9 @@ def test_recursive_bisection_grid():
 
 
 def test_recursive_bisection_dag_pool_matches_serial():
-    """The task-DAG thread-pool scheduler (engaged for cells >= 32768)
-    must reproduce the serial loop's cells AND stats sequence exactly —
-    the round-6 restructure reorders execution, never results. Also
+    """The task-DAG scheduler on its thread pool (engaged for cells >=
+    32768) must reproduce the inline executor's cells AND stats
+    sequence exactly — the pool reorders execution, never results. Also
     pins the aligned-coords fast path against the dict path."""
     v, e = road_like_graph(40_000, seed=23)
     ids = v["ids"]

@@ -2,6 +2,9 @@
 applyInPandas partitioner must produce byte-identical (vertex_id, level,
 cell_id) rows to the single-process oracle, at any parallelism."""
 
+import os
+from collections import Counter
+
 import numpy as np
 import pytest
 
@@ -73,6 +76,26 @@ def test_distributed_equals_local(spark, fixture, cell_sizes, threshold):
     got = {(r["vertex_id"], r["level"]): r["cell_id"] for r in rows}
     assert num_cells == exp_cells
     assert got == expected
+    # control rows: every bisection row is one of the oracle's cuts; a
+    # finish row (the whole recursion of a small cell) reports no cut
+    v, e = fix
+    _, _, stats = multilevel_partition_local(
+        v["ids"], v["lat"], v["lon"], e["tail"], e["head"], cell_sizes
+    )
+    oracle = Counter(
+        (s.round, s.n, s.cut_edges, s.part_two, s.best_job) for s in stats
+    )
+    cuts, lower = Counter(), 0
+    for r in metrics.filter("mode = 'cell'").collect():
+        key = (r["round"], r["n"], r["cut_edges"], r["part_two"], r["best_job"])
+        if r["best_job"] < 0:
+            assert key[2:] == (-1, -1, -1)
+        else:
+            cuts[key] += 1
+            lower += r["level"] < len(cell_sizes) - 1
+    assert not cuts - oracle
+    if threshold == 4:
+        assert lower, "no lower level ran a distributed bisection round"
 
 
 def test_packed_cell_numbers_match_local(spark):
@@ -139,12 +162,18 @@ def test_multi_component_root_equals_local(spark):
 
 
 def test_two_phase_prefix_sum_matches_collect(spark, monkeypatch):
-    # with no driver collect allowed, every prefix sum takes the
-    # two-phase path; the hybrid case above pins the collect path to
-    # the same local oracle
+    # without a row-count hint every prefix sum takes the two-phase
+    # path; the hybrid case above pins the collect path to the same
+    # local oracle
     from osm_inertial_flow_partitioner_spark.operators import partitioner
 
-    monkeypatch.setattr(partitioner, "DRIVER_COLLECT_MAX_ROWS", 0)
+    prefix_sum = partitioner._exclusive_cumsum_by_key
+    monkeypatch.setattr(
+        partitioner, "_exclusive_cumsum_by_key",
+        lambda df, key, value, out_col, n_rows_hint=None: prefix_sum(
+            df, key, value, out_col
+        ),
+    )
     fix = road_like_graph(400, seed=7)
     cell_sizes = [16, 64, 256]
     expected, exp_cells, _ = _local_expected(fix, cell_sizes)
@@ -156,6 +185,56 @@ def test_two_phase_prefix_sum_matches_collect(spark, monkeypatch):
     got = {(r["vertex_id"], r["level"]): r["cell_id"] for r in result.collect()}
     assert num_cells == exp_cells
     assert got == expected
+
+
+def test_resume_through_bisection_round(spark, tmp_path):
+    # level 1 bisects in rounds 0 and 1 the cells the relabel hands it,
+    # then finishes them. A crash in round 1 leaves round 0's snapshot
+    # only: resume replays that bisection round and recomputes the rest
+    # from its sizes, byte-identical to an unchecked run
+    import glob
+
+    from osm_inertial_flow_partitioner_spark.plans.checkpoint import (
+        RoundCheckpoint,
+    )
+
+    vdf, edf = _to_dfs(spark, road_like_graph(400, seed=7))
+    cfg = PartitionConfig(cell_sizes=[16, 64, 256])
+
+    def run(checkpoint=None):
+        result, num_cells, metrics = multilevel_partition(
+            spark, vdf, edf, cfg, local_recursion_threshold=64,
+            checkpoint=checkpoint,
+        )
+        return (
+            sorted(map(tuple, result.collect())),
+            num_cells,
+            sorted(map(tuple, metrics.collect())),
+        )
+
+    plain = run()
+    ck_dir = str(tmp_path / "ck")
+    assert run(RoundCheckpoint(spark, ck_dir)) == plain
+    # (round, bisected?) of level 1's metrics rows
+    level1 = {(r[1], r[7] >= 0) for r in plain[2] if r[0] == 1}
+    last = max(rnd for rnd, _ in level1)
+    assert {(0, True), (1, True), (last, False)} <= level1
+    later = [f"{ck_dir}/level=1/round={rnd}/manifest.json" for rnd in range(1, last + 1)]
+    for manifest in later + glob.glob(f"{ck_dir}/unit=*/manifest.json"):
+        os.remove(manifest)
+    assert run(RoundCheckpoint(spark, ck_dir)) == plain
+
+
+def test_too_many_big_cells_for_the_stat_collect(spark, monkeypatch):
+    from osm_inertial_flow_partitioner_spark.operators import partitioner
+
+    monkeypatch.setattr(partitioner, "DRIVER_COLLECT_MAX_ROWS", 0)
+    vdf, edf = _to_dfs(spark, road_like_graph(400, seed=7))
+    with pytest.raises(ValueError, match="local_recursion_threshold"):
+        multilevel_partition(
+            spark, vdf, edf, PartitionConfig(cell_sizes=[16, 64, 256]),
+            local_recursion_threshold=64,
+        )
 
 
 def _job_descriptions(spark, group):

@@ -190,6 +190,11 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
                 ts = (base + pd.Timedelta(hours=2 * s + user, minutes=5 * k)).to_pydatetime()
                 rows.append((eid, ts, user))
                 eid += 1
+    # sub-second gaps: 1799.75 s stays in the session; 1800.5 s opens a
+    # new one, although both ends lie 1800 whole seconds apart
+    for sec in (0.25, 1800.0, 3600.5, 3900.5):
+        rows.append((eid, (base + pd.Timedelta(hours=4, seconds=sec)).to_pydatetime(), 4))
+        eid += 1
     events = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
     src = str(tmp_path / "events_src")
     events.repartition(3).write.parquet(src)
@@ -221,6 +226,7 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
     # STRICTLY below it (Spark's own event-time-timeout predicate)
     watermark = max(hi for (_, hi, _) in agg.values()) - 3600
     expected = {k: v for k, v in agg.items() if v[1] + 30 * 60 < watermark}
+    assert [expected[(4, s)][2] for s in (0, 1)] == [2, 2]
 
     assert got == expected
 
