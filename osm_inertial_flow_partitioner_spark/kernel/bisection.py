@@ -266,9 +266,7 @@ def recursive_bisection(
     """Partition() of one cell through ``bisection_tree``.
 
     ``pool_workers`` caps the big-cell DAG pool (None = min(16,
-    cpu_count)); the Spark driver passes its cores-per-concurrent-task
-    estimate so several promoted finish tasks don't oversubscribe the
-    host. Coordinates are read as in ``aligned_coords``. ``tails``/
+    cpu_count)). Coordinates are read as in ``aligned_coords``. ``tails``/
     ``heads`` use original ids sorted by (tail, edge id) and may contain
     edges leaving the cell (they are filtered here, as in
     buildInitialPartitionGraph).

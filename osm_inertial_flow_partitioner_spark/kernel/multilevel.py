@@ -22,6 +22,7 @@ low bits; values stay < 2^63 for the reference config (<= ~60 bits).
 from __future__ import annotations
 
 import math
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 
@@ -103,46 +104,56 @@ def multilevel_finish_local(
     cell_sizes_desc: list[int],
     rate: float = SOURCE_SINK_RATE,
     coords_aligned: bool = False,
-) -> list[list[np.ndarray]]:
-    """Complete the recursion for ONE entering cell across all remaining
-    levels in a single local pass (the multi-level local finish: one
-    distributed cogroup instead of one per level).
+    workers: int | None = None,
+) -> list[list[tuple[list[np.ndarray], int]]]:
+    """Complete the recursion for ONE cell across its own level and
+    every level below in a single local pass (the Spark finish kernel).
 
-    ``cell_sizes_desc`` lists the remaining levels' max cell sizes from
-    the current level DOWN to level 0 (e.g. [U_2, U_1, U_0]). Per level,
-    per parent: ``bisection_tree`` already emits children in the frozen
+    ``cell_sizes_desc`` lists the levels' max cell sizes from the cell's
+    own level DOWN to level 0 (e.g. [U_2, U_1, U_0]). Per level, per
+    parent: ``bisection_tree`` already emits children in the frozen
     relabel order (non-empty by min original vertex id, then empties —
     SURVEY.md §7), and an EMPTY parent contributes 2 empty children in
     place (Partition on an empty graph, multilevel_partitioner.go:59-68);
     concatenating children in parent order therefore reproduces
     ``multilevel_partition_local``'s (and the distributed relabel's)
-    numbering exactly, offset by the count of cells in preceding
-    entering cells (added by the Spark driver).
+    numbering exactly, offset by the count of cells in preceding cells
+    (added by the Spark driver).
 
     Coordinates are read as in ``bisection.aligned_coords``. Each final
     cell comes back from ``bisection_tree`` as a work item that already
     carries its own edges in local indices, so it seeds the next level
     as-is: the entering cell's edges are filtered and remapped once.
 
-    Returns one list of cells (ascending-id arrays; empty arrays are
-    empty cells) per level, in ``cell_sizes_desc`` order.
+    ``workers`` is the thread budget (None = one tree at a time, each
+    with ``bisection_tree``'s default pool): the k independent
+    per-parent trees of a level run on up to ``workers`` threads at
+    once, each with ``workers // k`` threads for its own DAG pool, so
+    the one tree of the cell's own level gets all of them.
+
+    Returns, per level in ``cell_sizes_desc`` order, one
+    (non-empty children as ascending-id arrays, number of empty
+    children) pair per parent, parents in the frozen order.
     """
     ids, lat, lon = aligned_coords(
         vertex_ids, lat_by_vertex, lon_by_vertex, coords_aligned
     )
     items = [work_item(ids, lat, lon, tails, heads)]
     empty = tuple(a[:0] for a in items[0])
-    per_level: list[list[np.ndarray]] = []
+    per_level: list[list[tuple[list[np.ndarray], int]]] = []
     for u in cell_sizes_desc:
-        children: list[tuple] = []
-        for item in items:
+        inner = workers if workers is None else max(1, workers // len(items))
+
+        def tree(item):
             if len(item[0]) == 0:
-                children.extend([empty, empty])
-                continue
-            finals, n_empty, _ = bisection_tree(item, u, rate)
-            children.extend(finals + [empty] * n_empty)
-        per_level.append([c[0] for c in children])
-        items = children
+                return [], 2
+            finals, n_empty, _ = bisection_tree(item, u, rate, inner)
+            return finals, n_empty
+
+        with ThreadPoolExecutor(max(1, min(workers or 1, len(items)))) as pool:
+            trees = list(pool.map(tree, items))
+        per_level.append([([f[0] for f in finals], ne) for finals, ne in trees])
+        items = [c for finals, ne in trees for c in finals + [empty] * ne]
     return per_level
 
 

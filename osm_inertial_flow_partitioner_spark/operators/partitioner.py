@@ -7,7 +7,7 @@ iteration is ONE distributed job: every oversized cell is bisected in
 parallel by a numpy kernel inside cogrouped ``applyInPandas``. Cut
 semantics are identical because each cell's bisection is independent.
 
-Three execution modes, chosen per round from driver-side cell counts:
+Two execution modes, chosen per round from driver-side cell counts:
 
 1. **per-cell bisection** (big cells): one cogroup group per cell; the
    10 inertial direction jobs (`inertial_flow.go:123-132`) run inside
@@ -16,13 +16,14 @@ Three execution modes, chosen per round from driver-side cell counts:
    and many cells do not oversubscribe the host; the frozen
    (cut, balance, job) argmin is taken in-process, as the reference
    takes it (`inertial_flow.go:107-168`);
-2. **local finish** (cell below ``local_recursion_threshold``): the
-   kernel runs the *entire remaining recursion* of its cell locally in
-   one call (the reference itself is a local recursion), collapsing
-   O(log n) rounds into one pass;
-3. **ml-finish** (every entering cell of a level below the threshold):
-   one kernel call per cell completes ALL remaining levels, instead of
-   one distributed pass + relabel per level.
+2. **finish** (cell below ``local_recursion_threshold``): the kernel
+   runs the *entire remaining recursion* of its cell locally in one
+   call — its own level and every level below, since the reference
+   partitions each parent cell on its own
+   (multilevel_partitioner.go:59-68). A vertex it finishes carries its
+   lower-level cells on its assignment row, so at every lower level it
+   is an inactive cell that only the relabel touches, and a level whose
+   every cell was finished above runs no round at all.
 
 Scale design (100 TB / 10^9+ vertices): parallelism unit = cell; a max
 cell of 2^20 vertices fits one executor (reference main.go:21). Per
@@ -62,7 +63,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import PartitionConfig
-from ..kernel.bisection import bisect_once, recursive_bisection
+from ..kernel.bisection import bisect_once
+from ..kernel.multilevel import multilevel_finish_local
 from ..session import local_frame
 
 KERNEL_OUT_SCHEMA = (
@@ -74,11 +76,27 @@ KERNEL_OUT_SCHEMA = (
 #: the per-parent stat columns of a kernel output row
 STAT_COLUMNS = ("n", "cut_edges", "part_two", "best_job", "n_empty")
 
-ML_FINISH_SCHEMA = (
-    "root long, level int, local_cell long, vertex_id long, n_cells long"
+#: the finish kernel's extra columns: the two lower-level arrays of
+#: ASSIGN_SCHEMA, and the finished cell's empty cells at each level below
+FINISH_OUT_SCHEMA = KERNEL_OUT_SCHEMA + (
+    ", lower_keys array<long>, lower_empties array<int>, sub_empties array<int>"
 )
 
-ASSIGN_SCHEMA = "root long, path long, vertex_id long, lat double, lon double"
+#: A vertex that a finish kernel completed carries its cells at the
+#: levels below in two arrays, nearest level first: ``lower_keys`` (the
+#: cell's min vertex id, unique as cells are disjoint) and
+#: ``lower_empties`` (the number of empty cells among the children of
+#: that cell's parent). Entering a level moves the head of
+#: ``lower_keys`` into ``path``; the level's relabel adds the head of
+#: ``lower_empties`` to the root's empty cells and drops it. Live
+#: vertices carry empty arrays.
+ASSIGN_SCHEMA = (
+    "root long, path long, vertex_id long, lat double, lon double, "
+    "lower_keys array<long>, lower_empties array<int>"
+)
+ASSIGN_COLUMNS = (
+    "root", "path", "vertex_id", "lat", "lon", "lower_keys", "lower_empties"
+)
 SIZES_SCHEMA = "root long, path long, n long"
 EMPTIES_SCHEMA = "root long, n_empty long"
 METRICS_SCHEMA = (
@@ -134,46 +152,56 @@ def _sorted_cell_arrays(vdf: pd.DataFrame, edf: pd.DataFrame):
     return ids, lat, lon, tails, heads
 
 
-def _make_finish_kernel(max_cell_size: int, rate: float, thread_budget: int | None = None):
-    """Mode 2: complete the recursion for one small cell.
-    ``thread_budget``: driver's cores-per-concurrent-task estimate for
-    the big-cell DAG pool inside recursive_bisection."""
+def _no_lower_levels() -> list:
+    """The lower-level arrays of a live vertex (ASSIGN_SCHEMA)."""
+    return [
+        F.array().cast("array<long>").alias("lower_keys"),
+        F.array().cast("array<int>").alias("lower_empties"),
+    ]
+
+
+def _make_finish_kernel(
+    cell_sizes_desc: list[int], rate: float, thread_budget: int
+):
+    """Mode 2: complete the recursion of one small cell at its own level
+    (``cell_sizes_desc[0]``) and every level below, in one
+    ``multilevel_finish_local`` call on at most ``thread_budget``
+    threads (the driver's cores-per-concurrent-task estimate)."""
 
     def kernel(key, vdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
         root, path = int(key[0]), int(key[1])
         ids, lat, lon, tails, heads = _sorted_cell_arrays(vdf, edf)
-        _t0 = time.time()
-        res = recursive_bisection(
-            ids, lat, lon, tails, heads, max_cell_size, rate,
-            pool_workers=thread_budget, coords_aligned=True,
+        [(nonempty, n_empty)], *lower = multilevel_finish_local(
+            ids, lat, lon, tails, heads, cell_sizes_desc, rate,
+            coords_aligned=True, workers=thread_budget,
         )
-        if os.environ.get("TILER_DEBUG"):
-            print(
-                f"[finish-kernel] root={root} path={path} n={len(ids)} "
-                f"m={len(tails)} cells={len(res.cells)} "
-                f"took={time.time() - _t0:.1f}s",
-                flush=True,
-            )
-        nonempty = [c for c in res.cells if len(c)]
-        n_empty = len(res.cells) - len(nonempty)
-        bits = max(int(np.ceil(np.log2(len(res.cells) + 1))), 1)
+        bits = max(int(np.ceil(np.log2(len(nonempty) + n_empty + 1))), 1)
         # heap path gains `bits` low bits here (plus 1 bit per earlier
         # bisection round); overflow would silently alias distinct cells
         assert (path << bits) < 2**62, (
             f"cell path {path} << {bits} overflows the int64 heap path"
         )
         # cells are disjoint ascending subsets of ``ids``: one positional
-        # gather builds the whole output (the former per-cell np.isin
-        # re-sorted the full id set once per cell)
-        cat = np.concatenate(nonempty) if nonempty else np.empty(0, np.int64)
+        # gather builds the whole output
+        cat = np.concatenate(nonempty)
         pos = np.searchsorted(ids, cat)
         paths = np.repeat(
-            np.array(
-                [np.int64((path << bits) | i) for i in range(len(nonempty))],
-                dtype=np.int64,
-            ),
+            (np.int64(path) << bits) | np.arange(len(nonempty), dtype=np.int64),
             [len(c) for c in nonempty],
         )
+        # per vertex in ``ids`` order, one column per level below: the
+        # cell's min id, and its parent's empty-cell count
+        keys = np.empty((len(ids), len(lower)), dtype=np.int64)
+        parent_empties = np.empty((len(ids), len(lower)), dtype=np.int32)
+        for j, parents in enumerate(lower):
+            cells = [c for finals, _ in parents for c in finals]
+            sizes = [len(c) for c in cells]
+            at = np.searchsorted(ids, np.concatenate(cells))
+            keys[at, j] = np.repeat([c[0] for c in cells], sizes)
+            parent_empties[at, j] = np.repeat(
+                [ne for finals, ne in parents for _ in finals], sizes
+            )
+        sub_empties = [sum(ne for _, ne in parents) for parents in lower]
         return pd.DataFrame(
             {
                 "root": np.full(len(cat), root, dtype=np.int64),
@@ -187,57 +215,11 @@ def _make_finish_kernel(max_cell_size: int, rate: float, thread_budget: int | No
                 "part_two": np.full(len(cat), -1, dtype=np.int32),
                 "best_job": np.full(len(cat), -1, dtype=np.int32),
                 "n_empty": np.full(len(cat), n_empty, dtype=np.int32),
+                "lower_keys": list(keys[pos]),
+                "lower_empties": list(parent_empties[pos]),
+                "sub_empties": [sub_empties] * len(cat),
             }
         )
-
-    return kernel
-
-
-def _make_multilevel_finish_kernel(levels_desc: list[int], cell_sizes_desc: list[int], rate: float):
-    """Multi-level local finish: ONE task completes every remaining
-    level for one entering cell (kernel/multilevel.py::
-    multilevel_finish_local) — collapsing L_f per-level distributed
-    passes into a single cogroup. Emits long-form
-    (root, level, local_cell, vertex_id, n_cells) where local_cell is
-    the frozen within-root numbering and n_cells the root's total cell
-    count at that level INCLUDING empties (the driver turns these into
-    global ids with a per-level prefix sum over roots)."""
-    from ..kernel.multilevel import multilevel_finish_local
-
-    def kernel(key, vdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        root = int(key[0])
-        ids, lat, lon, tails, heads = _sorted_cell_arrays(vdf, edf)
-        per_level = multilevel_finish_local(
-            ids, lat, lon, tails, heads, cell_sizes_desc, rate,
-            coords_aligned=True,
-        )
-        frames = []
-        for li, cells in enumerate(per_level):
-            n_cells = len(cells)
-            nz = [(cid, c) for cid, c in enumerate(cells) if len(c)]
-            cat = (
-                np.concatenate([c for _, c in nz])
-                if nz
-                else np.empty(0, np.int64)
-            )
-            cids = np.repeat(
-                np.array([cid for cid, _ in nz], dtype=np.int64),
-                [len(c) for _, c in nz],
-            )
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "root": np.full(len(cat), root, dtype=np.int64),
-                        "level": np.full(
-                            len(cat), levels_desc[li], dtype=np.int32
-                        ),
-                        "local_cell": cids,
-                        "vertex_id": cat,
-                        "n_cells": np.full(len(cat), n_cells, dtype=np.int64),
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
 
     return kernel
 
@@ -282,15 +264,16 @@ def _make_bisect_kernel(rate: float, thread_budget: int):
 
 def _bisect_control_rows(
     prows, level: int, rnd: int, max_cell_size: int
-) -> tuple[list, list, list]:
+) -> tuple[list, list, list, int]:
     """Literal control rows (metrics, still-oversized child sizes,
-    empty-cell counts) from the collected per-parent stat rows of a
-    bisection round. LITERAL on purpose: deriving them lazily round
-    after round chains the lineage, and Catalyst's sizeInBytes stats (a
-    PRODUCT over join children) compound into BigIntegers with
-    thousands of digits — the driver then spends MINUTES per round in
-    planning (round-2 lesson)."""
-    mrows, srows, erows = [], [], []
+    empty-cell counts) and the number of final non-empty children — the
+    cells left live for the next level — from the collected per-parent
+    stat rows of a bisection round. LITERAL on purpose: deriving them
+    lazily round after round chains the lineage, and Catalyst's
+    sizeInBytes stats (a PRODUCT over join children) compound into
+    BigIntegers with thousands of digits — the driver then spends
+    MINUTES per round in planning (round-2 lesson)."""
+    mrows, srows, erows, live = [], [], [], 0
     for r in prows:
         root, path = int(r["root"]), int(r["parent_path"])
         n_cell, p2 = int(r["n"]), int(r["part_two"])
@@ -302,14 +285,15 @@ def _bisect_control_rows(
         )
         if r["n_empty"]:
             erows.append((root, int(r["n_empty"])))
-        if n_cell - p2 >= max_cell_size:
-            srows.append((root, path * 2, n_cell - p2))
-        if p2 >= max_cell_size:
-            srows.append((root, path * 2 + 1, p2))
-    return mrows, srows, erows
+        for side, n_side in enumerate((n_cell - p2, p2)):
+            if n_side >= max_cell_size:
+                srows.append((root, path * 2 + side, n_side))
+            elif n_side:
+                live += 1
+    return mrows, srows, erows, live
 
 
-def _round_plan(spark, sizes, rnd: int, local_threshold: int):
+def _round_plan(spark, sizes, all_active: bool, local_threshold: int):
     """The round decision, from either source of the active cell sizes
     (root, path, n): driver rows, or a DataFrame (round 0 of a level
     entered from a relabel — O(#cells) rows — and the round after a
@@ -317,8 +301,8 @@ def _round_plan(spark, sizes, rnd: int, local_threshold: int):
     every parent cell at round 0, the still-oversized children after.
 
     Returns None when no cell is active, else (active frame, #small
-    cells, #big cells, the (root, path) of round 0's only cell or
-    None)."""
+    cells, #big cells, the (root, path) of the only cell when it holds
+    every vertex of the assignment — ``all_active`` — else None)."""
     if isinstance(sizes, DataFrame):
         agg = sizes.groupBy().agg(
             F.count("*"),
@@ -358,7 +342,7 @@ def _round_plan(spark, sizes, rnd: int, local_threshold: int):
         )
     if not isinstance(sizes, DataFrame):
         sizes = local_frame(spark, sizes, SIZES_SCHEMA)
-    one_cell = (max_root, max_path) if rnd == 0 and n_active == 1 else None
+    one_cell = (max_root, max_path) if all_active and n_active == 1 else None
     return sizes, n_active - n_big, n_big, one_cell
 
 
@@ -413,12 +397,13 @@ def _exclusive_cumsum_by_key(
         schema = StructType(
             df.schema.fields + [StructField(out_col, LongType(), False)]
         )
-        out = F.broadcast(
-            local_frame(
-                spark,
-                [tuple(d[f.name] for f in schema.fields) for d in out_rows],
-                schema,
-            )
+        # no broadcast hint: the consumers also filter and explode this
+        # frame, where a hint only draws a HintErrorLogger warning, and
+        # its joins broadcast the small local relation anyway
+        out = local_frame(
+            spark,
+            [tuple(d[f.name] for f in schema.fields) for d in out_rows],
+            schema,
         )
         return out, acc
     nparts = max(spark.sparkContext.defaultParallelism, 2)
@@ -461,18 +446,19 @@ def _exclusive_cumsum_by_key(
 def _run_level(
     assign: DataFrame,
     edges: DataFrame,
-    max_cell_size: int,
+    cell_sizes: list[int],
     rate: float,
     local_threshold: int,
     level: int,
     metrics_frames: list,
     sizes,
     checkpoint=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Bisection rounds for one level. Round 0 bisects every cell
+    all_active: bool = True,
+) -> tuple[DataFrame, DataFrame, int, bool]:
+    """Bisection rounds for one level. Round 0 bisects every live cell
     (Partition() runs per parent unconditionally,
     multilevel_partitioner.go:59-68); later rounds only cells with
-    count >= max_cell_size.
+    count >= the level's max cell size.
 
     ``sizes`` (root, path, n) holds the round's active cells: driver
     rows, or a DataFrame at round 0 of a level entered from a relabel
@@ -483,12 +469,17 @@ def _run_level(
     bisected cell holds >= ``local_threshold`` vertices, so a round
     collects at most n_vertices / threshold stat rows. Finish-kernel
     metrics and empty-cell bookkeeping stay DataFrames.
+    ``all_active``: every vertex of ``assign`` is in a cell of
+    ``sizes`` (False when vertices finished above ride along).
 
-    Returns (assignment, empties_df (root, n_empty))."""
+    Returns (assignment, empties_df (root, n_empty), the number of
+    final cells left live for the next level, whether a finish kernel
+    ran)."""
     spark = assign.sparkSession
     sc = spark.sparkContext
     parallelism = sc.defaultParallelism
     ckpt_parts = max(parallelism, 2)
+    max_cell_size = cell_sizes[level]
     schemas = {
         "assign": ASSIGN_SCHEMA,
         "sizes": SIZES_SCHEMA,
@@ -498,6 +489,8 @@ def _run_level(
     empties_df = local_frame(spark, [], EMPTIES_SCHEMA)
     level_metric_frames: list[DataFrame] = []
     level_unpersist: list[DataFrame] = []
+    empties_ckpt = None
+    live, finished = 0, False
 
     def budget(n_cells: int) -> int:
         # cores per concurrent kernel task: each task's thread pool gets
@@ -505,25 +498,25 @@ def _run_level(
         return max(1, parallelism // max(1, min(n_cells, parallelism)))
 
     rnd = 0
-    # every cell in ``assign`` is active this round: round 0 activates
-    # every cell, and a later round does when the round before it ran no
-    # finish kernel, carried no inactive cells and got every child of
-    # every bisected parent back as oversized. Then the round has no
+    # ``all_active`` stays true while every cell in ``assign`` is active:
+    # a round keeps it when it ran no finish kernel and got every child
+    # of every bisected parent back as oversized. Then the round has no
     # inactive cells to carry over.
-    all_active = True
     while True:
         sc.setJobDescription(f"tiler: level={level} round={rnd}")
         if checkpoint is not None and checkpoint.has_round(level, rnd):
             # resume: replay this round from its durable snapshot
-            assign, sizes, empties_df, m = checkpoint.load_round_dfs(
+            assign, sizes, empties_df, m, state = checkpoint.load_round_dfs(
                 level, rnd, schemas
             )
             metrics_frames.append(m)
+            live += state["live"]
+            finished = finished or state["finished"]
             all_active = False
             rnd += 1
             continue
         _t_phase = time.time()
-        plan = _round_plan(spark, sizes, rnd, local_threshold)
+        plan = _round_plan(spark, sizes, all_active, local_threshold)
         if plan is None:
             break
         active, n_small, n_big, one_cell = plan
@@ -542,11 +535,11 @@ def _run_level(
                     F.broadcast(active.select("root", "path")),
                     ["root", "path"],
                     "left_anti",
-                ).select("root", "path", "vertex_id", "lat", "lon")
+                ).select(*ASSIGN_COLUMNS)
             ]
         )
 
-        def run_kernel(keys_df, kernel):
+        def run_kernel(keys_df, kernel, schema, stat_columns):
             if one_cell is not None:
                 # the only cell holds every vertex and edge: tag the
                 # edges with its literal key instead of two joins
@@ -564,14 +557,14 @@ def _run_level(
                 )
                 e_act = _label_edges(edges, act)
             out = (
-                act.groupBy("root", "path")
+                act.select("root", "path", "vertex_id", "lat", "lon")
+                .groupBy("root", "path")
                 .cogroup(e_act.groupBy("root", "path"))
-                .applyInPandas(kernel, schema=KERNEL_OUT_SCHEMA)
+                .applyInPandas(kernel, schema=schema)
                 .persist()
             )
-            frames.append(out.select("root", "path", "vertex_id", "lat", "lon"))
             per_parent = out.groupBy("root", "parent_path").agg(
-                *(F.first(c).alias(c) for c in STAT_COLUMNS)
+                *(F.first(c).alias(c) for c in stat_columns)
             )
             return out, per_parent
 
@@ -582,8 +575,13 @@ def _run_level(
             # level): their metrics and empties stay lazy
             finish_out, fin = run_kernel(
                 active.filter(F.col("n") < local_threshold) if n_big else active,
-                _make_finish_kernel(max_cell_size, rate, budget(n_small)),
+                _make_finish_kernel(
+                    cell_sizes[level::-1], rate, budget(n_small)
+                ),
+                FINISH_OUT_SCHEMA,
+                (*STAT_COLUMNS, "sub_empties"),
             )
+            frames.append(finish_out.select(*ASSIGN_COLUMNS))
             new_empties = new_empties.unionByName(
                 fin.filter(F.col("n_empty") > 0).select(
                     "root", F.col("n_empty").cast("long").alias("n_empty")
@@ -593,6 +591,13 @@ def _run_level(
             big_out, big_stats = run_kernel(
                 active.filter(F.col("n") >= local_threshold),
                 _make_bisect_kernel(rate, budget(n_big)),
+                KERNEL_OUT_SCHEMA,
+                STAT_COLUMNS,
+            )
+            frames.append(
+                big_out.select(
+                    "root", "path", "vertex_id", "lat", "lon", *_no_lower_levels()
+                )
             )
 
         new_assign = frames[0]
@@ -615,14 +620,31 @@ def _run_level(
                     flush=True,
                 )
         prows = big_stats.collect() if n_big else []
-        mrows, sizes, erows = _bisect_control_rows(prows, level, rnd, max_cell_size)
+        mrows, sizes, erows, round_live = _bisect_control_rows(
+            prows, level, rnd, max_cell_size
+        )
+        live += round_live
+        finished = finished or bool(n_small)
         round_metrics = local_frame(spark, mrows, METRICS_SCHEMA)
         if finish_out is not None:
+            # a finished cell's own-level row, then one round-0 row per
+            # level below with that level's empty cells in its subtree
+            per_level = fin.select(
+                "*",
+                F.posexplode(
+                    F.concat(F.array("n_empty"), "sub_empties")
+                ).alias("depth", "level_empties"),
+            )
             round_metrics = round_metrics.unionByName(
-                fin.select(
-                    F.lit(level).cast("int").alias("level"),
-                    F.lit(rnd).cast("int").alias("round"),
-                    "root", "parent_path", *STAT_COLUMNS,
+                per_level.select(
+                    (F.lit(level) - F.col("depth")).cast("int").alias("level"),
+                    F.when(F.col("depth") == 0, rnd)
+                    .otherwise(0)
+                    .cast("int")
+                    .alias("round"),
+                    "root", "parent_path", "n", "cut_edges", "part_two",
+                    "best_job",
+                    F.col("level_empties").alias("n_empty"),
                     F.lit("cell").alias("mode"),
                 )
             )
@@ -635,6 +657,7 @@ def _run_level(
                 level, rnd, new_assign,
                 local_frame(spark, sizes, SIZES_SCHEMA), new_empties,
                 round_metrics,
+                {"live": round_live, "finished": bool(n_small)},
             )
             metrics_frames.append(round_metrics)
             if finish_out is not None:
@@ -651,12 +674,19 @@ def _run_level(
                 # OOM'd a 16g driver building a >40M-line plan string.
                 # Its input is cached and materialized by the assignment
                 # checkpoint above, so this is a sub-second cache read.
-                # The finish output and these checkpoints are freed at
-                # LEVEL end: the lazy metrics may recompute through
-                # them, and a truncated-lineage checkpoint cannot be
-                # rebuilt once its blocks are dropped.
+                # The finish output is freed at LEVEL end, once the lazy
+                # metrics that may recompute through it are checkpointed.
+                # The previous empties checkpoint is freed as soon as
+                # this one (built from it) is materialized; the level's
+                # last one stays for the relabel, as a truncated-lineage
+                # checkpoint cannot be rebuilt once its blocks are dropped.
+                # DataFrame.unpersist does not reach a local checkpoint's
+                # blocks: they belong to the RDD under its LogicalRDD plan.
                 new_empties = new_empties.localCheckpoint(eager=True)
-                level_unpersist.extend([new_empties, finish_out])
+                if empties_ckpt is not None:
+                    empties_ckpt._jdf.logicalPlan().rdd().unpersist(False)
+                empties_ckpt = new_empties
+                level_unpersist.append(finish_out)
             empties_df = new_empties
         if n_big:
             # nothing lazy reads it past this point
@@ -675,10 +705,9 @@ def _run_level(
         for fr in level_metric_frames[1:]:
             rm = rm.unionByName(fr)
         metrics_frames.append(rm.localCheckpoint(eager=True))
-    empties_df = empties_df.localCheckpoint(eager=True)
     for df in level_unpersist:
         df.unpersist()
-    return assign, empties_df
+    return assign, empties_df, live, finished
 
 
 def _relabel_level(
@@ -690,32 +719,45 @@ def _relabel_level(
     """Frozen numbering, fully DISTRIBUTED (the driver sees one scalar):
     per parent root (in root-id order): non-empty cells by min original
     vertex id, then that root's empty cells; empty roots contribute 2
-    empty child cells in place.
+    empty child cells in place. A root whose vertices a finish kernel
+    completed above this level adds the empty count its vertices carry.
 
     Plan shape: one groupBy for per-cell meta, a per-root rank window
     (parallel across roots), and a two-phase exclusive prefix sum over
     roots for the cross-root id offsets — no single-partition window,
-    no O(#cells) driver collect.
+    no O(#cells) driver collect. The labeled assignment is
+    checkpointed: the next level and the caller's result both read it.
 
     Returns (labeled assignment, num_cells, empty-cell ids as a
     DataFrame(root) for the next level, per-cell sizes DataFrame
-    (root=cell_id, path=1, n) seeding the next level)."""
+    (root=cell_id, path=1, n) of the live cells, seeding the next
+    level)."""
+    # finished above this level: this level's entry still heads the
+    # vertex's lower_empties (entering the level took its lower_keys one)
+    pre = F.size("lower_empties") > F.size("lower_keys")
     meta = assign.groupBy("root", "path").agg(
-        F.min("vertex_id").alias("min_vid"), F.count("*").alias("n")
+        F.min("vertex_id").alias("min_vid"),
+        F.count("*").alias("n"),
+        F.max(F.when(pre, F.get("lower_empties", 0))).alias("pre_em"),
     )
-    ne_counts = meta.groupBy("root").agg(F.count("*").alias("n_ne"))
-    em = empties_df.groupBy("root").agg(F.sum("n_empty").alias("n_em"))
+    # one row per entering root: its non-empty cells, then its empty
+    # ones — reported by the level's kernels, carried by vertices
+    # finished above, or 2 in place of an empty root (Partition(empty
+    # cell) -> 2 empty children)
     roots = (
-        ne_counts.join(em, "root", "full")
-        .na.fill({"n_ne": 0, "n_em": 0})
-        .select("root", "n_ne", "n_em")
+        meta.select("root", "min_vid", "pre_em")
+        .unionByName(empties_df, allowMissingColumns=True)
         .unionByName(
-            # Partition(empty cell) -> 2 empty children, in place
-            empty_roots_df.select(
-                "root",
-                F.lit(0).cast("long").alias("n_ne"),
-                F.lit(2).cast("long").alias("n_em"),
-            )
+            empty_roots_df.select("root", F.lit(2).cast("long").alias("n_empty")),
+            allowMissingColumns=True,
+        )
+        .groupBy("root")
+        .agg(
+            F.count("min_vid").alias("n_ne"),
+            (
+                F.coalesce(F.sum("n_empty"), F.lit(0))
+                + F.coalesce(F.max("pre_em"), F.lit(0))
+            ).alias("n_em"),
         )
         .withColumn("total", F.col("n_ne") + F.col("n_em"))
     )
@@ -723,12 +765,17 @@ def _relabel_level(
         roots, "root", "total", "offset", n_rows_hint=n_roots_hint
     )
     wr = Window.partitionBy("root").orderBy(F.asc("min_vid"))
-    cells = meta.join(roots.select("root", "offset"), "root").withColumn(
-        "cell_id", F.col("offset") + F.row_number().over(wr) - 1
+    cells = (
+        meta.join(roots.select("root", "offset"), "root")
+        .withColumn("cell_id", F.col("offset") + F.row_number().over(wr) - 1)
+        .select("root", "path", "cell_id")
     )
-    labeled = assign.join(cells.select("root", "path", "cell_id"), ["root", "path"]).select(
-        "vertex_id", "lat", "lon", "cell_id"
-    )
+    labeled = assign.join(cells, ["root", "path"]).select(
+        "vertex_id", "lat", "lon", "cell_id", "lower_keys",
+        F.when(pre, F.slice("lower_empties", 2, F.size("lower_empties")))
+        .otherwise(F.col("lower_empties"))
+        .alias("lower_empties"),
+    ).localCheckpoint(eager=True)
     empty_cells = roots.filter(F.col("n_em") > 0).select(
         F.explode(
             F.sequence(
@@ -737,10 +784,10 @@ def _relabel_level(
             )
         ).alias("root")
     )
-    level_sizes = cells.select(
-        F.col("cell_id").alias("root"),
-        F.lit(1).cast("long").alias("path"),
-        F.col("n").cast("long").alias("n"),
+    level_sizes = (
+        labeled.filter(F.size("lower_keys") == 0)
+        .groupBy(F.col("cell_id").alias("root"))
+        .agg(F.lit(1).cast("long").alias("path"), F.count("*").alias("n"))
     )
     return labeled, int(num_cells), empty_cells, level_sizes
 
@@ -811,177 +858,54 @@ def _partition_levels(
     if n_vertices is None and os.environ.get("TILER_DEBUG"):
         print(f"[tiler] vertices count took {time.time() - _t_dbg:.1f}s", flush=True)
     metrics_frames: list[DataFrame] = []
-
-    assign = vertices.select(
-        "vertex_id",
-        "lat",
-        "lon",
-        F.lit(0).cast("long").alias("root"),
-        F.lit(1).cast("long").alias("path"),
-    )
     edges = edges.select("edge_id", "tail", "head")
 
+    # the level above the top: one cell holding every vertex
+    labeled = vertices.select(
+        "vertex_id", "lat", "lon",
+        F.lit(0).cast("long").alias("cell_id"),
+        *_no_lower_levels(),
+    )
+    empty_cells = local_frame(spark, [], "root long")
+    level_sizes = [(0, 1, n)]
+    live, finished = 1, False
     level_frames: list[DataFrame] = []
     num_cells: list[int] = [0] * L
-
-    top_u = cell_sizes[L - 1]
-    if n > top_u:
-        a, empties_df = _run_level(
-            assign, edges, top_u, rate, local_recursion_threshold, L - 1,
-            metrics_frames, [(0, 1, n)], checkpoint,
-        )
-        _t = time.time()
-        sc.setJobDescription(f"tiler: level={L - 1} relabel")
-        labeled, c, empty_cells, level_sizes = _relabel_level(
-            a, empties_df, local_frame(spark, [], "root long"),
-            n_roots_hint=1,  # the top level enters with the single root 0
-        )
-        if os.environ.get("TILER_DEBUG"):
-            print(f"[tiler] relabel level={L-1} took {time.time() - _t:.1f}s", flush=True)
-        mx_bound = top_u - 1  # bisection only stops once every cell < U
-    else:
-        labeled = assign.select(
-            "vertex_id", "lat", "lon", F.lit(0).cast("long").alias("cell_id")
-        )
-        c = 1
-        empty_cells = local_frame(spark, [], "root long")
-        level_sizes = [(0, 1, n)]
-        mx_bound = n  # the single top cell holds exactly n vertices
-    num_cells[L - 1] = c
-    level_frames.append(
-        labeled.select("vertex_id", F.lit(L - 1).alias("level"), "cell_id")
-    )
-
-    current = labeled
-    for level in range(L - 2, -1, -1):
-        u = cell_sizes[level]
-        # multi-level local finish: once EVERY entering cell fits the
-        # local-recursion threshold, one cogroup pass completes ALL
-        # remaining levels (each task runs the full lower recursion for
-        # one cell) instead of one distributed pass + relabel per level.
-        # Under checkpointing the collapsed pass is its own named
-        # resumable unit (snapshots are per (level, round); the collapsed
-        # pass spans several levels, so it gets a unit snapshot instead
-        # — resumable runs keep the fast path).
-        # every cell the level above emitted is < that level's max size
-        # BY CONSTRUCTION (its bisection loop only stops when no cell
-        # >= U), so the ml-finish decision needs no distributed max —
-        # the former one-row agg here still cost a full driver-blocking
-        # job per level through the lazy relabel lineage (round 6)
-        mx = mx_bound
-        if 0 < mx < local_recursion_threshold:
-            _t_ml = time.time()
-            sc.setJobDescription(f"tiler: ml finish from level {level}")
-            lvls = list(range(level, -1, -1))
-            sizes_desc = [cell_sizes[l] for l in lvls]
-            unit = f"mlfinish_l{level}"
-            if checkpoint is not None and checkpoint.has_unit(unit):
-                out = checkpoint.load_unit(unit, ML_FINISH_SCHEMA)
-            else:
-                a0 = current.select(
-                    "vertex_id", "lat", "lon",
-                    F.col("cell_id").alias("root"),
-                    F.lit(1).cast("long").alias("path"),
-                )
-                e_act = _label_edges(edges, a0)
-                out = (
-                    a0.groupBy("root", "path")
-                    .cogroup(e_act.groupBy("root", "path"))
-                    .applyInPandas(
-                        _make_multilevel_finish_kernel(lvls, sizes_desc, rate),
-                        schema=ML_FINISH_SCHEMA,
-                    )
-                )
-                out = (
-                    checkpoint.snapshot_unit(unit, out)
-                    if checkpoint is not None
-                    else out.localCheckpoint(eager=True)
-                )
-                if os.environ.get("TILER_DEBUG"):
-                    print(
-                        f"[tiler]   ml cogroup+checkpoint took {time.time() - _t_ml:.1f}s",
-                        flush=True,
-                    )
-            # per-bisection lineage is collapsed inside the finish kernel;
-            # keep the metrics contract with one summary row per
-            # (level, entering root): n vertices, empty-cell count,
-            # mode='ml_finish' (cut stats are intra-kernel, reported -1)
-            metrics_frames.append(
-                out.groupBy("level", "root")
-                .agg(
-                    F.count("*").alias("nv"),
-                    F.first("n_cells").alias("n_cells"),
-                    F.countDistinct("local_cell").alias("n_ne"),
-                )
-                .select(
-                    F.col("level").cast("int").alias("level"),
-                    F.lit(0).cast("int").alias("round"),
-                    "root",
-                    F.lit(-1).cast("long").alias("parent_path"),
-                    F.col("nv").cast("int").alias("n"),
-                    F.lit(-1).cast("int").alias("cut_edges"),
-                    F.lit(-1).cast("int").alias("part_two"),
-                    F.lit(-1).cast("int").alias("best_job"),
-                    (F.col("n_cells") - F.col("n_ne")).cast("int").alias("n_empty"),
-                    F.lit("ml_finish").alias("mode"),
-                )
+    for level in range(L - 1, -1, -1):
+        if level == L - 1 and n <= cell_sizes[level]:
+            # the top level partitions only when n > U_{L-1}
+            # (multilevel_partitioner.go:48-55)
+            num_cells[level] = 1
+            level_frames.append(
+                labeled.select("vertex_id", F.lit(level).alias("level"), "cell_id")
             )
-            for li, lvl in enumerate(lvls):
-                lvl_df = out.filter(F.col("level") == lvl)
-                meta = lvl_df.groupBy("root").agg(
-                    F.first("n_cells").alias("total")
-                )
-                # entering-empty cells double per level ("2 empty
-                # children in place"): 2^(li+1) id slots at depth li+1
-                roots = meta.unionByName(
-                    empty_cells.select(
-                        "root",
-                        F.lit(int(2 ** (li + 1))).cast("long").alias("total"),
-                    )
-                )
-                # entering-roots frame is bounded by the known upper
-                # level's cell count — bounded-collect prefix sum
-                roots, total_cells = _exclusive_cumsum_by_key(
-                    roots, "root", "total", "offset",
-                    n_rows_hint=num_cells[level + 1],
-                )
-                num_cells[lvl] = int(total_cells)
-                level_frames.append(
-                    lvl_df.join(roots.select("root", "offset"), "root").select(
-                        "vertex_id",
-                        F.lit(lvl).alias("level"),
-                        (F.col("offset") + F.col("local_cell")).alias("cell_id"),
-                    )
-                )
-            if os.environ.get("TILER_DEBUG"):
-                print(
-                    f"[tiler] ml finish (levels {lvls}) took {time.time() - _t_ml:.1f}s",
-                    flush=True,
-                )
-            break
-        a0 = current.select(
-            "vertex_id",
-            "lat",
-            "lon",
+            continue
+        a = labeled.select(
+            "vertex_id", "lat", "lon",
             F.col("cell_id").alias("root"),
-            F.lit(1).cast("long").alias("path"),
+            # a vertex finished above keeps its cell key at this level
+            F.coalesce(F.get("lower_keys", 0), F.lit(1).cast("long")).alias("path"),
+            F.slice("lower_keys", 2, F.size("lower_keys")).alias("lower_keys"),
+            "lower_empties",
         )
-        a, empties_df = _run_level(
-            a0, edges, u, rate, local_recursion_threshold, level,
-            metrics_frames, level_sizes, checkpoint,
-        )
+        if live:
+            a, empties_df, live, finished_here = _run_level(
+                a, edges, cell_sizes, rate, local_recursion_threshold, level,
+                metrics_frames, level_sizes, checkpoint, all_active=not finished,
+            )
+            finished = finished or finished_here
+        else:
+            # every cell was finished above: only the relabel runs
+            empties_df = local_frame(spark, [], EMPTIES_SCHEMA)
         sc.setJobDescription(f"tiler: level={level} relabel")
-        labeled, c, empty_cells, level_sizes = _relabel_level(
+        labeled, num_cells[level], empty_cells, level_sizes = _relabel_level(
             a, empties_df, empty_cells,
             # entering roots = the upper level's cells (incl. empties)
-            n_roots_hint=num_cells[level + 1],
+            n_roots_hint=num_cells[level + 1] if level < L - 1 else 1,
         )
-        num_cells[level] = c
         level_frames.append(
             labeled.select("vertex_id", F.lit(level).alias("level"), "cell_id")
         )
-        current = labeled
-        mx_bound = u - 1  # this level's bisection bound for the next decision
 
     result = level_frames[0]
     for fr in level_frames[1:]:

@@ -2,10 +2,12 @@
 
 The reference is a single batch process with no resume; the graft spec
 (north_rule) requires resumable rounds. Design: every bisection round
-snapshots the assignment table to a parquet snapshot directory plus a
-manifest recording (level, round, row count, and the driver state
-needed to continue: the cell-size map, empty-cell counts, and the
-round's lineage metrics). On an Iceberg-enabled cluster the same calls
+snapshots the assignment table, the next round's cell sizes, the
+empty-cell counts and the round's lineage metrics to a parquet snapshot
+directory, plus a manifest recording (level, round, row count, config
+token, and the driver's per-round scalars: the cells the round left
+live for the next level, and whether it ran a finish kernel). On an
+Iceberg-enabled cluster the same calls
 map to ``writeTo(...).createOrReplace()`` snapshots; parquet + manifest
 keeps the sandbox dependency-free while exercising identical resume
 logic (write-then-reload also truncates Spark lineage each round, which
@@ -15,7 +17,8 @@ Resume: re-invoke the partitioner with the same checkpoint — each
 (level, round) that already has a complete snapshot is REPLAYED from
 disk (assignment reloaded, driver state restored) instead of recomputed,
 then execution continues live from the first missing round. A config
-token guards against resuming across changed configurations. The final
+token guards against resuming across changed configurations or
+snapshot formats. The final
 assignment is byte-identical (tested in tests/test_pipeline_streaming.py).
 """
 
@@ -28,14 +31,20 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: version of the snapshot layout; bump it whenever a snapshot's schema
+#: or meaning changes, so that snapshots of an older layout miss. 2: the
+#: assignment carries each pre-finished vertex's lower-level cells.
+CHECKPOINT_FORMAT = 2
+
 
 def derive_config_token(cell_sizes, rate, local_recursion_threshold) -> str:
     """Deterministic token over everything that changes the assignment —
-    resuming a checkpoint dir written under a different configuration
-    must MISS (stale per-round snapshots would silently produce a wrong
-    final assignment otherwise)."""
+    resuming a checkpoint dir written under a different configuration or
+    snapshot format must MISS (stale per-round snapshots would silently
+    produce a wrong final assignment otherwise)."""
     payload = json.dumps(
         {
+            "format": CHECKPOINT_FORMAT,
             "cell_sizes": list(cell_sizes),
             "rate": rate,
             "local_recursion_threshold": local_recursion_threshold,
@@ -63,10 +72,12 @@ class RoundCheckpoint:
         sizes: DataFrame,
         empties: DataFrame,
         metrics: DataFrame,
+        state: dict,
     ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-        """Durable per-round state, ALL of it distributed DataFrames —
-        the driver never holds per-cell rows. Returns the reloaded
-        frames (lineage truncated at the snapshot)."""
+        """Durable per-round state: the per-cell rows as distributed
+        DataFrames — the driver never holds them — plus the driver's
+        few per-round scalars (``state``, kept in the manifest). Returns
+        the reloaded frames (lineage truncated at the snapshot)."""
         d = self._dir(level, rnd)
         parts = {"assign": assign, "sizes": sizes, "empties": empties, "metrics": metrics}
         out = {}
@@ -79,7 +90,7 @@ class RoundCheckpoint:
             "round": rnd,
             "rows": out["assign"].count(),
             "config_token": self.config_token,
-            "state": {},
+            "state": state,
             "completed_at": time.time(),
         }
         with open(os.path.join(d, "manifest.json"), "w") as f:
@@ -88,49 +99,17 @@ class RoundCheckpoint:
 
     def load_round_dfs(
         self, level: int, rnd: int, schemas: dict
-    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, dict]:
+        """The frames and the ``state`` of one round's snapshot."""
         d = self._dir(level, rnd)
-        return tuple(
-            self.spark.read.schema(schemas[name]).parquet(os.path.join(d, name))
-            for name in ("assign", "sizes", "empties", "metrics")
-        )
-
-    # -- named resumable units (e.g. the collapsed multi-level local
-    # finish, which is one cogroup pass covering several levels and so
-    # fits neither the (level, round) grid nor a per-level snapshot) --
-
-    def _unit_dir(self, name: str) -> str:
-        return os.path.join(self.root, f"unit={name}")
-
-    def has_unit(self, name: str) -> bool:
-        p = os.path.join(self._unit_dir(name), "manifest.json")
-        if not os.path.exists(p) or not self.config_token:
-            return False
-        with open(p) as f:
-            return json.load(f).get("config_token") == self.config_token
-
-    def snapshot_unit(self, name: str, df: DataFrame) -> DataFrame:
-        """Write one named durable unit; returns the reloaded frame
-        (write IS the materialization — lineage truncated at disk). The
-        manifest lands only after a complete write, so a kill mid-write
-        recomputes instead of replaying a torn snapshot."""
-        d = self._unit_dir(name)
-        p = os.path.join(d, "data")
-        df.write.mode("overwrite").parquet(p)
-        out = self.spark.read.schema(df.schema).parquet(p)
-        manifest = {
-            "unit": name,
-            "rows": out.count(),
-            "config_token": self.config_token,
-            "completed_at": time.time(),
-        }
-        with open(os.path.join(d, "manifest.json"), "w") as f:
-            json.dump(manifest, f)
-        return out
-
-    def load_unit(self, name: str, schema: str) -> DataFrame:
-        return self.spark.read.schema(schema).parquet(
-            os.path.join(self._unit_dir(name), "data")
+        with open(os.path.join(d, "manifest.json")) as f:
+            state = json.load(f)["state"]
+        return (
+            *(
+                self.spark.read.schema(schemas[name]).parquet(os.path.join(d, name))
+                for name in ("assign", "sizes", "empties", "metrics")
+            ),
+            state,
         )
 
     def has_round(self, level: int, rnd: int) -> bool:

@@ -53,7 +53,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE sizes post-shuffle partitions by BYTES, which starves
-        # compute-bound Python-kernel stages: the ml-finish cogroup
+        # compute-bound Python-kernel stages: a finish-kernel cogroup
         # (61 recursive-bisection kernels, ~6.5MB of shuffle data) was
         # coalesced to 5 tasks by the default 1MB minPartitionSize —
         # a 3-6x serialization of pure numpy compute (round-6 stage

@@ -193,7 +193,11 @@ def test_multilevel_finish_local_matches_full_oracle():
                 cell, v["lat"], v["lon"], e["tail"], e["head"],
                 [cell_sizes[lvl] for lvl in range(L - 2, level - 1, -1)],
             )
-            got_cells.extend(per_level[-1])
+            got_cells.extend(
+                c
+                for finals, n_empty in per_level[-1]
+                for c in finals + [np.empty(0, np.int64)] * n_empty
+            )
         exp = {
             c: set(ids[assign[level] == c].tolist())
             for c in range(num_cells[level])
@@ -203,3 +207,17 @@ def test_multilevel_finish_local_matches_full_oracle():
         assert {k: v_ for k, v_ in got.items() if v_} == {
             k: v_ for k, v_ in exp.items() if v_
         }
+
+
+def test_multilevel_finish_local_thread_budget_keeps_cells():
+    # a lower level's per-parent trees run on the thread budget; the
+    # cells and their order must not depend on it
+    v, e = road_like_graph(300, seed=11)
+    args = (v["ids"], v["lat"], v["lon"], e["tail"], e["head"], [128, 32, 8])
+    serial = multilevel_finish_local(*args)
+    threaded = multilevel_finish_local(*args, workers=3)
+    as_lists = [
+        [[([c.tolist() for c in finals], n_empty) for finals, n_empty in lvl] for lvl in res]
+        for res in (serial, threaded)
+    ]
+    assert as_lists[0] == as_lists[1] and len(serial[-1]) > 3

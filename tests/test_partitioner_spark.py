@@ -53,12 +53,45 @@ def _local_expected(fix, cell_sizes):
     return expected, num_cells, assign
 
 
+def _isolated_and_coincident(fix):
+    """``fix`` plus 3 vertices without edges, and with vertex 1 moved
+    onto vertex 0's point."""
+    v, e = fix
+    n = len(v["ids"])
+    lat = np.concatenate([v["lat"], [0.11, 0.52, 0.93]])
+    lon = np.concatenate([v["lon"], [0.87, 0.46, 0.05]])
+    lat[1], lon[1] = lat[0], lon[0]
+    return {"ids": np.arange(n + 3), "lat": lat, "lon": lon}, e
+
+
+def _finish_chains(metrics_rows) -> dict:
+    """(root, parent_path, n) of each finished cell -> the levels of its
+    rows: its own level, then every level below it pre-finished."""
+    chains: dict = {}
+    for r in metrics_rows:
+        if r["best_job"] < 0:
+            key = (r["root"], r["parent_path"], r["n"])
+            chains.setdefault(key, set()).add(r["level"])
+    return chains
+
+
 @pytest.mark.parametrize(
     "fixture,cell_sizes,threshold",
     [
         (lambda: unit_square_grid(16), [8, 32, 128], 1 << 15),  # local fast path
         (lambda: unit_square_grid(16), [8, 32, 128], 4),  # fully distributed rounds
         (lambda: road_like_graph(400, seed=7), [16, 64, 256], 64),  # hybrid
+        # a level-2 finish pre-finishes levels 1 and 0; level 1 then
+        # finishes its live cells next to the pre-finished ones
+        pytest.param(
+            lambda: road_like_graph(400, seed=7), [8, 16, 64, 256], 64,
+            id="prefinished-mix",
+        ),
+        pytest.param(
+            lambda: _isolated_and_coincident(road_like_graph(400, seed=7)),
+            [8, 16, 64, 256], 64,
+            id="prefinished-mix-isolated-coincident",
+        ),
     ],
 )
 def test_distributed_equals_local(spark, fixture, cell_sizes, threshold):
@@ -96,6 +129,19 @@ def test_distributed_equals_local(spark, fixture, cell_sizes, threshold):
     assert not cuts - oracle
     if threshold == 4:
         assert lower, "no lower level ran a distributed bisection round"
+    if len(cell_sizes) == 4:
+        chains = _finish_chains(metrics.collect())
+        assert any(len(levels) >= 3 for levels in chains.values()), (
+            "no finish pre-finished two lower levels"
+        )
+        tops = {max(levels) for levels in chains.values()}
+        mixed = {
+            lvl
+            for levels in chains.values()
+            for lvl in levels
+            if lvl < max(levels) and lvl in tops
+        }
+        assert mixed, "no level finished live cells next to pre-finished ones"
 
 
 def test_packed_cell_numbers_match_local(spark):
@@ -192,8 +238,6 @@ def test_resume_through_bisection_round(spark, tmp_path):
     # then finishes them. A crash in round 1 leaves round 0's snapshot
     # only: resume replays that bisection round and recomputes the rest
     # from its sizes, byte-identical to an unchecked run
-    import glob
-
     from osm_inertial_flow_partitioner_spark.plans.checkpoint import (
         RoundCheckpoint,
     )
@@ -219,9 +263,8 @@ def test_resume_through_bisection_round(spark, tmp_path):
     level1 = {(r[1], r[7] >= 0) for r in plain[2] if r[0] == 1}
     last = max(rnd for rnd, _ in level1)
     assert {(0, True), (1, True), (last, False)} <= level1
-    later = [f"{ck_dir}/level=1/round={rnd}/manifest.json" for rnd in range(1, last + 1)]
-    for manifest in later + glob.glob(f"{ck_dir}/unit=*/manifest.json"):
-        os.remove(manifest)
+    for rnd in range(1, last + 1):
+        os.remove(f"{ck_dir}/level=1/round={rnd}/manifest.json")
     assert run(RoundCheckpoint(spark, ck_dir)) == plain
 
 
@@ -253,8 +296,8 @@ def test_every_partitioner_job_is_labeled(spark):
     sc = spark.sparkContext
     sc.setJobGroup("partitioner-labels", "caller")
     try:
-        # a bisection round, a finish round, the relabel, then the
-        # multi-level finish
+        # a bisection round, a finish round that also completes level
+        # 0, then the relabels of both levels
         multilevel_partition(
             spark, vdf, edf, PartitionConfig(cell_sizes=[4, 16]),
             local_recursion_threshold=20,
@@ -266,3 +309,149 @@ def test_every_partitioner_job_is_labeled(spark):
     descriptions = _job_descriptions(spark, "partitioner-labels")
     assert descriptions
     assert [d for d in descriptions if not (d or "").startswith("tiler:")] == []
+
+
+def test_prefix_sum_frame_carries_no_hint(spark):
+    # the relabel filters and explodes the prefix-sum frame into the
+    # empty-cell ids; a broadcast hint there is not on a join, so Spark
+    # only logs a HintErrorLogger warning for it
+    from osm_inertial_flow_partitioner_spark.operators.partitioner import (
+        ASSIGN_SCHEMA,
+        EMPTIES_SCHEMA,
+        _relabel_level,
+    )
+    from osm_inertial_flow_partitioner_spark.session import local_frame
+
+    assign = local_frame(
+        spark,
+        [(0, 2, 5, 0.0, 0.0, [], []), (0, 3, 6, 1.0, 1.0, [], [])],
+        ASSIGN_SCHEMA,
+    )
+    _, num_cells, empty_cells, _ = _relabel_level(
+        assign,
+        local_frame(spark, [(0, 1)], EMPTIES_SCHEMA),
+        local_frame(spark, [(1,)], "root long"),
+        n_roots_hint=2,
+    )
+    assert num_cells == 5
+    assert sorted(r["root"] for r in empty_cells.collect()) == [2, 3, 4]
+    assert "ResolvedHint" not in empty_cells._jdf.queryExecution().analyzed().toString()
+
+
+def test_checkpoint_format_version_misses(spark, tmp_path, monkeypatch):
+    # snapshots written under another snapshot format must not replay
+    from osm_inertial_flow_partitioner_spark.plans import checkpoint as ckpt
+
+    vdf, edf = _to_dfs(spark, unit_square_grid(8))
+    cfg = PartitionConfig(cell_sizes=[4, 16])
+    ck = ckpt.RoundCheckpoint(spark, str(tmp_path))
+    multilevel_partition(spark, vdf, edf, cfg, local_recursion_threshold=20, checkpoint=ck)
+    assert ck.config_token == ckpt.derive_config_token(cfg.cell_sizes, cfg.rate, 20)
+    assert ck.has_round(1, 0)
+    monkeypatch.setattr(ckpt, "CHECKPOINT_FORMAT", ckpt.CHECKPOINT_FORMAT + 1)
+    other = ckpt.derive_config_token(cfg.cell_sizes, cfg.rate, 20)
+    assert other != ck.config_token
+    assert not ckpt.RoundCheckpoint(spark, str(tmp_path), other).has_round(1, 0)
+
+
+def _job_counts(spark, group) -> tuple[Counter, int]:
+    """Jobs per description (the round's ``small=… big=…`` counts
+    stripped) and tasks run, over one job group."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = sc._jsc.sc().statusStore()
+    jobs, tasks = Counter(), 0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        job = store.job(jid)
+        d = job.description()
+        jobs[d.get().split(" small=")[0] if d.isDefined() else None] += 1
+        tasks += job.numCompletedTasks()
+    return jobs, tasks
+
+
+#: Spark jobs per description and tasks of one partition + the caller's
+#: collects of assignment and metrics, at the session's cpus=4 and
+#: shuffle_partitions=8. The counts repeat run after run, except that
+#: AQE scheduling now and then adds one job (seen once in a full-suite
+#: run: 17 jobs for a 16-job round), so a run may exceed the table by
+#: one job of at most shuffle_partitions tasks; a job more in every
+#: round fails. One that earns a cut lowers its budget.
+JOB_BUDGETS = {
+    "threshold=4": (
+        lambda: unit_square_grid(16), [8, 32, 128], 4,
+        {
+            "tiler: count vertices": 2,
+            "tiler: level=2 round=0": 6,
+            "tiler: level=2 round=1": 10,
+            "tiler: level=2 end": 1,
+            "tiler: level=2 relabel": 8,
+            "tiler: level=1 round=0": 16,
+            "tiler: level=1 round=1": 10,
+            "tiler: level=1 end": 1,
+            "tiler: level=1 relabel": 8,
+            "tiler: level=0 round=0": 16,
+            "tiler: level=0 round=1": 9,
+            "tiler: level=0 round=2": 10,
+            "tiler: level=0 end": 2,
+            "tiler: level=0 relabel": 8,
+            "caller": 2,
+        },
+        380,
+    ),
+    "hybrid": (
+        lambda: road_like_graph(400, seed=7), [16, 64, 256], 64,
+        {
+            "tiler: count vertices": 2,
+            "tiler: level=2 round=0": 6,
+            "tiler: level=2 end": 1,
+            "tiler: level=2 relabel": 8,
+            "tiler: level=1 round=0": 16,
+            "tiler: level=1 round=1": 10,
+            "tiler: level=1 round=2": 10,
+            "tiler: level=1 end": 2,
+            "tiler: level=1 relabel": 8,
+            "tiler: level=0 round=0": 18,
+            "tiler: level=0 end": 2,
+            "tiler: level=0 relabel": 9,
+            "caller": 2,
+        },
+        285,
+    ),
+    "multi-component": (
+        lambda: _disjoint_union(unit_square_grid(12), road_like_graph(300), 1.5),
+        [16, 128], 150,
+        {
+            "tiler: count vertices": 2,
+            "tiler: level=1 round=0": 6,
+            "tiler: level=1 round=1": 9,
+            "tiler: level=1 end": 2,
+            "tiler: level=1 relabel": 8,
+            "tiler: level=0 relabel": 9,
+            "caller": 2,
+        },
+        117,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(JOB_BUDGETS))
+def test_job_budget(spark, name):
+    fixture, cell_sizes, threshold, job_budget, task_budget = JOB_BUDGETS[name]
+    vdf, edf = _to_dfs(spark, fixture())
+    sc = spark.sparkContext
+    group = f"job-budget-{name}"
+    sc.setJobGroup(group, "caller")
+    try:
+        result, _, metrics = multilevel_partition(
+            spark, vdf, edf, PartitionConfig(cell_sizes=cell_sizes),
+            local_recursion_threshold=threshold,
+        )
+        result.collect()
+        metrics.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs, tasks = _job_counts(spark, group)
+    assert {d: n for d, n in jobs.items() if n > job_budget.get(d, 0) + 1} == {}
+    assert sum(jobs.values()) <= sum(job_budget.values()) + 1
+    assert tasks <= task_budget + 8

@@ -1,6 +1,8 @@
 """End-to-end pipeline invariants, checkpoint/resume byte-equality, and
 the streaming twin."""
 
+import glob
+import json
 import os
 
 import pytest
@@ -128,14 +130,18 @@ def test_checkpoint_resume_byte_identical(spark, pages, tmp_path):
     ck3 = RoundCheckpoint(spark, str(tmp_path / "ck"), config_token="OTHER")
     assert not ck3.has_round(lvl, 0) or lvl != ck.latest()[0]
 
-    # kill/restart THROUGH the collapsed multi-level local finish: the
-    # fast path must stay active under checkpointing as its own named
-    # resumable unit — drop its manifest, resume, byte-identical again
-    import glob
-
-    units = glob.glob(str(tmp_path / "ck" / "unit=mlfinish_l*" / "manifest.json"))
-    assert units, "collapsed ml-finish did not snapshot as a named unit"
-    os.remove(units[0])
+    # kill/restart THROUGH the finishing round: the round whose finish
+    # kernel also completed the level below snapshots that level's
+    # metrics rows too — drop its manifest, resume, byte-identical again
+    finishing = [
+        m
+        for m in glob.glob(str(tmp_path / "ck" / "level=*" / "round=*" / "manifest.json"))
+        if spark.read.parquet(os.path.join(os.path.dirname(m), "metrics"))
+        .filter(f"level < {json.load(open(m))['level']}")
+        .count()
+    ]
+    assert finishing, "no round pre-finished a lower level"
+    os.remove(finishing[0])
     ck4 = RoundCheckpoint(spark, str(tmp_path / "ck"), config_token="t1")
     r4 = run_pipeline(spark, pages, cfg, res=5, k=3, checkpoint=ck4)
     assert sorted(map(tuple, r4.assignment.collect())) == b
