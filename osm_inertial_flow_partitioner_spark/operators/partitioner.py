@@ -36,26 +36,30 @@ relabeled per level by the frozen SURVEY.md §7 rule: per parent,
 non-empty cells by min original vertex id, then empty cells (degenerate
 n<=3 splits — assignFinalPartition on a 0-vertex side,
 recursiveBisection.go:127-136 — have no vertex rows; the kernel reports
-them via n_empty, carried as a DataFrame). Per-round snapshots +
-lineage/metrics via plans/checkpoint.py.
+them in the n_empty column of the level's metrics rows, which the
+relabel sums per root). Per-round snapshots + lineage/metrics via
+plans/checkpoint.py.
 
-Driver memory is independent of total cell count: the sizes a level
-enters with, finish-kernel metrics, empty-cell bookkeeping and the
-per-level relabel live in DataFrames (per-root rank window + two-phase
-prefix sum over roots). The driver holds one stat row per bisected
-cell: a bisected cell has >= ``local_recursion_threshold`` vertices, so
-a round collects at most n_vertices / threshold rows (15k at 10^9
-vertices and the default threshold), and the next round's sizes are
-the at most twice as many oversized children. Literal control rows
-(active sizes, stat rows, empties, prefix-sum offsets) become Arrow
-local relations through ``session.local_frame``, so reading them starts
-no Spark job and no Python worker.
+Driver memory is bounded by the bisected cells, not by the total cell
+count: finish-kernel metrics and the per-level relabel live in
+DataFrames (per-root rank window + two-phase prefix sum over roots).
+The driver holds one stat row per bisected cell: a bisected cell has
+>= ``local_recursion_threshold`` vertices, so a round collects at most
+n_vertices / threshold rows (15k at 10^9 vertices and the default
+threshold). Cell sizes are always driver rows: a round's are the at
+most twice as many oversized children, and a level's entry sizes are
+its live cells, each one side of a cell that the level above bisected,
+so at most twice that level's collected stat rows. Literal control rows
+(active sizes, stat rows, prefix-sum offsets) become Arrow local
+relations through ``session.local_frame``, so reading them starts no
+Spark job and no Python worker.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -98,7 +102,6 @@ ASSIGN_COLUMNS = (
     "root", "path", "vertex_id", "lat", "lon", "lower_keys", "lower_empties"
 )
 SIZES_SCHEMA = "root long, path long, n long"
-EMPTIES_SCHEMA = "root long, n_empty long"
 METRICS_SCHEMA = (
     "level int, round int, root long, parent_path long, n int, "
     "cut_edges int, part_two int, best_job int, n_empty int, mode string"
@@ -264,16 +267,16 @@ def _make_bisect_kernel(rate: float, thread_budget: int):
 
 def _bisect_control_rows(
     prows, level: int, rnd: int, max_cell_size: int
-) -> tuple[list, list, list, int]:
-    """Literal control rows (metrics, still-oversized child sizes,
-    empty-cell counts) and the number of final non-empty children — the
-    cells left live for the next level — from the collected per-parent
-    stat rows of a bisection round. LITERAL on purpose: deriving them
-    lazily round after round chains the lineage, and Catalyst's
-    sizeInBytes stats (a PRODUCT over join children) compound into
-    BigIntegers with thousands of digits — the driver then spends
-    MINUTES per round in planning (round-2 lesson)."""
-    mrows, srows, erows, live = [], [], [], 0
+) -> tuple[list, list, int]:
+    """Literal control rows (metrics, still-oversized child sizes) and
+    the number of final non-empty children — the cells left live for
+    the next level — from the collected per-parent stat rows of a
+    bisection round. LITERAL on purpose: deriving them lazily round
+    after round chains the lineage, and Catalyst's sizeInBytes stats (a
+    PRODUCT over join children) compound into BigIntegers with
+    thousands of digits — the driver then spends MINUTES per round in
+    planning (round-2 lesson)."""
+    mrows, srows, live = [], [], 0
     for r in prows:
         root, path = int(r["root"]), int(r["parent_path"])
         n_cell, p2 = int(r["n"]), int(r["part_two"])
@@ -283,45 +286,30 @@ def _bisect_control_rows(
                 p2, int(r["best_job"]), int(r["n_empty"]), "cell",
             )
         )
-        if r["n_empty"]:
-            erows.append((root, int(r["n_empty"])))
         for side, n_side in enumerate((n_cell - p2, p2)):
             if n_side >= max_cell_size:
                 srows.append((root, path * 2 + side, n_side))
             elif n_side:
                 live += 1
-    return mrows, srows, erows, live
+    return mrows, srows, live
 
 
-def _round_plan(spark, sizes, all_active: bool, local_threshold: int):
-    """The round decision, from either source of the active cell sizes
-    (root, path, n): driver rows, or a DataFrame (round 0 of a level
-    entered from a relabel — O(#cells) rows — and the round after a
-    replayed snapshot). Both hold exactly the round's active cells:
-    every parent cell at round 0, the still-oversized children after.
+def _round_plan(spark, sizes: list, all_active: bool, local_threshold: int):
+    """The round decision from the driver rows (root, path, n) of the
+    round's active cells: every live cell at round 0, the
+    still-oversized children after.
 
     Returns None when no cell is active, else (active frame, #small
     cells, #big cells, the (root, path) of the only cell when it holds
     every vertex of the assignment — ``all_active`` — else None)."""
-    if isinstance(sizes, DataFrame):
-        agg = sizes.groupBy().agg(
-            F.count("*"),
-            F.sum((F.col("n") >= local_threshold).cast("int")),
-            F.max("root"),
-            F.max("path"),
-            F.max("n"),
-        ).first()
-        n_active, n_big, max_root, max_path, max_n = (int(x or 0) for x in agg)
-    else:
-        n_active = len(sizes)
-        n_big = sum(1 for r in sizes if r[2] >= local_threshold)
-        max_root, max_path, max_n = (
-            max((r[i] for r in sizes), default=0) for i in range(3)
-        )
-    if n_active == 0:
+    if not sizes:
         return None
+    n_big = sum(1 for r in sizes if r[2] >= local_threshold)
+    max_n = max(r[2] for r in sizes)
     # every bisection round appends >= 1 bit to the heap path
-    assert max_path < 2**61, "heap-numbered cell path near int64 overflow"
+    assert max(r[1] for r in sizes) < 2**61, (
+        "heap-numbered cell path near int64 overflow"
+    )
     # promote rule: when every remaining big cell is < PROMOTE_CAP x the
     # finish threshold, one more distributed bisection round would only
     # produce children that all finish locally next round — skip the
@@ -340,10 +328,19 @@ def _round_plan(spark, sizes, all_active: bool, local_threshold: int):
             f"than the {DRIVER_COLLECT_MAX_ROWS} stat rows the driver "
             "collects; raise local_recursion_threshold"
         )
-    if not isinstance(sizes, DataFrame):
-        sizes = local_frame(spark, sizes, SIZES_SCHEMA)
-    one_cell = (max_root, max_path) if all_active and n_active == 1 else None
-    return sizes, n_active - n_big, n_big, one_cell
+    one_cell = sizes[0][:2] if all_active and len(sizes) == 1 else None
+    return (
+        local_frame(spark, sizes, SIZES_SCHEMA), len(sizes) - n_big, n_big, one_cell
+    )
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` frame. DataFrame.unpersist
+    does not reach them: they belong to the RDD under its LogicalRDD.
+    Unpersisted through the context, as ``RDD.unpersist`` warns that a
+    local checkpoint cannot be recomputed — nothing reads it again."""
+    rdd = df._jdf.logicalPlan().rdd()
+    rdd.context().unpersistRDD(rdd.id(), False)
 
 
 def _label_edges(edges: DataFrame, active: DataFrame) -> DataFrame:
@@ -450,46 +447,40 @@ def _run_level(
     rate: float,
     local_threshold: int,
     level: int,
-    metrics_frames: list,
-    sizes,
+    sizes: list,
     checkpoint=None,
     all_active: bool = True,
-) -> tuple[DataFrame, DataFrame, int, bool]:
+) -> tuple[DataFrame, DataFrame, int, bool, list]:
     """Bisection rounds for one level. Round 0 bisects every live cell
     (Partition() runs per parent unconditionally,
     multilevel_partitioner.go:59-68); later rounds only cells with
     count >= the level's max cell size.
 
-    ``sizes`` (root, path, n) holds the round's active cells: driver
-    rows, or a DataFrame at round 0 of a level entered from a relabel
-    (O(#cells) rows there). ``_round_plan`` turns either into the round
-    decision. Every later round's sizes are the still-oversized
-    children, rebuilt as literal rows from the bisection kernel's
-    collected per-parent stat rows by ``_bisect_control_rows``: a
-    bisected cell holds >= ``local_threshold`` vertices, so a round
-    collects at most n_vertices / threshold stat rows. Finish-kernel
-    metrics and empty-cell bookkeeping stay DataFrames.
-    ``all_active``: every vertex of ``assign`` is in a cell of
-    ``sizes`` (False when vertices finished above ride along).
+    ``sizes`` holds the driver rows (root, path, n) of the round's
+    active cells, which ``_round_plan`` turns into the round decision:
+    at round 0 the level's live cells, collected by the relabel above;
+    after that the still-oversized children, rebuilt from the bisection
+    kernel's collected per-parent stat rows by ``_bisect_control_rows``
+    (a bisected cell holds >= ``local_threshold`` vertices, so a round
+    collects at most n_vertices / threshold stat rows), or read from
+    the manifest of a replayed round. Finish-kernel metrics stay
+    DataFrames. ``all_active``: every vertex of ``assign`` is in a cell
+    of ``sizes`` (False when vertices finished above ride along).
 
-    Returns (assignment, empties_df (root, n_empty), the number of
-    final cells left live for the next level, whether a finish kernel
-    ran)."""
+    Returns (assignment, the level's metrics frame — checkpointed, or
+    read from the round snapshots — the number of final cells left live
+    for the next level, whether a finish kernel ran, and the round
+    assignments' local checkpoints, which the caller frees once the
+    relabel no longer needs them)."""
     spark = assign.sparkSession
     sc = spark.sparkContext
     parallelism = sc.defaultParallelism
     ckpt_parts = max(parallelism, 2)
     max_cell_size = cell_sizes[level]
-    schemas = {
-        "assign": ASSIGN_SCHEMA,
-        "sizes": SIZES_SCHEMA,
-        "empties": EMPTIES_SCHEMA,
-        "metrics": METRICS_SCHEMA,
-    }
-    empties_df = local_frame(spark, [], EMPTIES_SCHEMA)
+    schemas = {"assign": ASSIGN_SCHEMA, "metrics": METRICS_SCHEMA}
     level_metric_frames: list[DataFrame] = []
     level_unpersist: list[DataFrame] = []
-    empties_ckpt = None
+    round_ckpts: list[DataFrame] = []
     live, finished = 0, False
 
     def budget(n_cells: int) -> int:
@@ -506,22 +497,18 @@ def _run_level(
         sc.setJobDescription(f"tiler: level={level} round={rnd}")
         if checkpoint is not None and checkpoint.has_round(level, rnd):
             # resume: replay this round from its durable snapshot
-            assign, sizes, empties_df, m, state = checkpoint.load_round_dfs(
-                level, rnd, schemas
-            )
-            metrics_frames.append(m)
+            assign, m, state = checkpoint.load_round_dfs(level, rnd, schemas)
+            level_metric_frames.append(m)
+            sizes = [tuple(r) for r in state["sizes"]]
             live += state["live"]
             finished = finished or state["finished"]
             all_active = False
             rnd += 1
             continue
-        _t_phase = time.time()
         plan = _round_plan(spark, sizes, all_active, local_threshold)
         if plan is None:
             break
         active, n_small, n_big, one_cell = plan
-        if os.environ.get("TILER_DEBUG"):
-            print(f"[tiler]   sizes prep took {time.time() - _t_phase:.2f}s", flush=True)
         _t_round = time.time()
         sc.setJobDescription(
             f"tiler: level={level} round={rnd} small={n_small} big={n_big}"
@@ -568,11 +555,10 @@ def _run_level(
             )
             return out, per_parent
 
-        new_empties = empties_df
         finish_out = fin = None
         if n_small:
             # finish rows are one per small cell (O(#cells) at a lower
-            # level): their metrics and empties stay lazy
+            # level): their metrics stay lazy
             finish_out, fin = run_kernel(
                 active.filter(F.col("n") < local_threshold) if n_big else active,
                 _make_finish_kernel(
@@ -582,11 +568,7 @@ def _run_level(
                 (*STAT_COLUMNS, "sub_empties"),
             )
             frames.append(finish_out.select(*ASSIGN_COLUMNS))
-            new_empties = new_empties.unionByName(
-                fin.filter(F.col("n_empty") > 0).select(
-                    "root", F.col("n_empty").cast("long").alias("n_empty")
-                )
-            )
+            level_unpersist.append(finish_out)
         if n_big:
             big_out, big_stats = run_kernel(
                 active.filter(F.col("n") >= local_threshold),
@@ -600,9 +582,7 @@ def _run_level(
                 )
             )
 
-        new_assign = frames[0]
-        for fr in frames[1:]:
-            new_assign = new_assign.unionByName(fr)
+        new_assign = reduce(DataFrame.unionByName, frames)
         if checkpoint is None:
             # ONE eager materialization of the round's kernels (the
             # assignment); the finish metrics stay LAZY against the
@@ -614,13 +594,14 @@ def _run_level(
             # tail: checkpoint cost grew 1.1s -> 4.0s across rounds).
             _t_phase = time.time()
             assign = new_assign.coalesce(ckpt_parts).localCheckpoint(eager=True)
+            round_ckpts.append(assign)
             if os.environ.get("TILER_DEBUG"):
                 print(
                     f"[tiler]   assign checkpoint took {time.time() - _t_phase:.2f}s",
                     flush=True,
                 )
         prows = big_stats.collect() if n_big else []
-        mrows, sizes, erows, round_live = _bisect_control_rows(
+        mrows, sizes, round_live = _bisect_control_rows(
             prows, level, rnd, max_cell_size
         )
         live += round_live
@@ -648,46 +629,12 @@ def _run_level(
                     F.lit("cell").alias("mode"),
                 )
             )
-        if erows:
-            new_empties = new_empties.unionByName(
-                local_frame(spark, erows, EMPTIES_SCHEMA)
-            )
         if checkpoint is not None:
-            assign, _, empties_df, round_metrics = checkpoint.snapshot_round_dfs(
-                level, rnd, new_assign,
-                local_frame(spark, sizes, SIZES_SCHEMA), new_empties,
-                round_metrics,
-                {"live": round_live, "finished": bool(n_small)},
+            assign, round_metrics = checkpoint.snapshot_round_dfs(
+                level, rnd, new_assign, round_metrics,
+                {"sizes": sizes, "live": round_live, "finished": bool(n_small)},
             )
-            metrics_frames.append(round_metrics)
-            if finish_out is not None:
-                finish_out.unpersist()
-        else:
-            level_metric_frames.append(round_metrics)
-            if finish_out is not None:
-                # Truncate the empties lineage: the lazy finish frame
-                # references the kernel output, which references this
-                # round's split of the previous sizes, so everything
-                # that RENDERS the plan as a tree (the explainString
-                # built for the SQL listener event on every action)
-                # grows O(2^rounds) — at 200k docs / local[8] round ~10
-                # OOM'd a 16g driver building a >40M-line plan string.
-                # Its input is cached and materialized by the assignment
-                # checkpoint above, so this is a sub-second cache read.
-                # The finish output is freed at LEVEL end, once the lazy
-                # metrics that may recompute through it are checkpointed.
-                # The previous empties checkpoint is freed as soon as
-                # this one (built from it) is materialized; the level's
-                # last one stays for the relabel, as a truncated-lineage
-                # checkpoint cannot be rebuilt once its blocks are dropped.
-                # DataFrame.unpersist does not reach a local checkpoint's
-                # blocks: they belong to the RDD under its LogicalRDD plan.
-                new_empties = new_empties.localCheckpoint(eager=True)
-                if empties_ckpt is not None:
-                    empties_ckpt._jdf.logicalPlan().rdd().unpersist(False)
-                empties_ckpt = new_empties
-                level_unpersist.append(finish_out)
-            empties_df = new_empties
+        level_metric_frames.append(round_metrics)
         if n_big:
             # nothing lazy reads it past this point
             big_out.unpersist()
@@ -700,38 +647,44 @@ def _run_level(
             )
         rnd += 1
     sc.setJobDescription(f"tiler: level={level} end")
-    if level_metric_frames:
-        rm = level_metric_frames[0]
-        for fr in level_metric_frames[1:]:
-            rm = rm.unionByName(fr)
-        metrics_frames.append(rm.localCheckpoint(eager=True))
+    metrics = reduce(DataFrame.unionByName, level_metric_frames)
+    if checkpoint is None:
+        # one job for the level's lazy finish metrics, before the
+        # kernel outputs they read are freed
+        metrics = metrics.localCheckpoint(eager=True)
     for df in level_unpersist:
         df.unpersist()
-    return assign, empties_df, live, finished
+    return assign, metrics, live, finished, round_ckpts
 
 
 def _relabel_level(
     assign: DataFrame,
-    empties_df: DataFrame,
+    metrics: DataFrame,
     empty_roots_df: DataFrame,
+    level: int,
+    live: int = 0,
     n_roots_hint: int | None = None,
-) -> tuple[DataFrame, int, DataFrame, DataFrame]:
-    """Frozen numbering, fully DISTRIBUTED (the driver sees one scalar):
-    per parent root (in root-id order): non-empty cells by min original
-    vertex id, then that root's empty cells; empty roots contribute 2
-    empty child cells in place. A root whose vertices a finish kernel
-    completed above this level adds the empty count its vertices carry.
+) -> tuple[DataFrame, int, DataFrame, list]:
+    """Frozen numbering, fully DISTRIBUTED: per parent root (in root-id
+    order): non-empty cells by min original vertex id, then that root's
+    empty cells; empty roots contribute 2 empty child cells in place.
+    The level's kernels report a root's empty cells in the ``n_empty``
+    column of their ``metrics`` rows at this ``level``; a root whose
+    vertices a finish kernel completed above this level adds the empty
+    count its vertices carry.
 
     Plan shape: one groupBy for per-cell meta, a per-root rank window
     (parallel across roots), and a two-phase exclusive prefix sum over
-    roots for the cross-root id offsets — no single-partition window,
-    no O(#cells) driver collect. The labeled assignment is
-    checkpointed: the next level and the caller's result both read it.
+    roots for the cross-root id offsets — no single-partition window.
+    The labeled assignment is checkpointed: the next level and the
+    caller's result both read it. When the level below runs rounds
+    (``live`` > 0 live cells), the driver collects their sizes from
+    that checkpoint: each is one side of a cell this level bisected, so
+    there are at most twice the level's collected stat rows.
 
     Returns (labeled assignment, num_cells, empty-cell ids as a
-    DataFrame(root) for the next level, per-cell sizes DataFrame
-    (root=cell_id, path=1, n) of the live cells, seeding the next
-    level)."""
+    DataFrame(root) for the next level, the live cells' size rows
+    (root=cell_id, path=1, n) seeding the next level)."""
     # finished above this level: this level's entry still heads the
     # vertex's lower_empties (entering the level took its lower_keys one)
     pre = F.size("lower_empties") > F.size("lower_keys")
@@ -746,7 +699,12 @@ def _relabel_level(
     # cell) -> 2 empty children)
     roots = (
         meta.select("root", "min_vid", "pre_em")
-        .unionByName(empties_df, allowMissingColumns=True)
+        .unionByName(
+            metrics.filter(F.col("level") == level).select(
+                "root", F.col("n_empty").cast("long")
+            ),
+            allowMissingColumns=True,
+        )
         .unionByName(
             empty_roots_df.select("root", F.lit(2).cast("long").alias("n_empty")),
             allowMissingColumns=True,
@@ -784,12 +742,17 @@ def _relabel_level(
             )
         ).alias("root")
     )
-    level_sizes = (
-        labeled.filter(F.size("lower_keys") == 0)
-        .groupBy(F.col("cell_id").alias("root"))
-        .agg(F.lit(1).cast("long").alias("path"), F.count("*").alias("n"))
-    )
-    return labeled, int(num_cells), empty_cells, level_sizes
+    sizes = []
+    if live:
+        sizes = sorted(
+            (int(r[0]), 1, int(r[1]))
+            for r in labeled.filter(F.size("lower_keys") == 0)
+            .groupBy("cell_id")
+            .count()
+            .collect()
+        )
+        assert len(sizes) == live, f"{len(sizes)} live cells, expected {live}"
+    return labeled, int(num_cells), empty_cells, sizes
 
 
 def multilevel_partition(
@@ -838,14 +801,10 @@ def _partition_levels(
     L = config.levels
     cell_sizes = config.cell_sizes
     rate = config.rate
-    if checkpoint is not None and not checkpoint.config_token:
+    if checkpoint is not None:
         # bind the snapshot dir to this configuration — resuming after a
         # config change must recompute, not replay stale rounds
-        from ..plans.checkpoint import derive_config_token
-
-        checkpoint.config_token = derive_config_token(
-            cell_sizes, rate, local_recursion_threshold
-        )
+        checkpoint.bind(cell_sizes, rate, local_recursion_threshold)
     # callers that already hold the vertex count (run_pipeline counts
     # the persisted entity frame anyway) pass it through — the count
     # here only seeds the top level's sizes row, so re-counting was a
@@ -888,35 +847,34 @@ def _partition_levels(
             F.slice("lower_keys", 2, F.size("lower_keys")).alias("lower_keys"),
             "lower_empties",
         )
+        # with every cell finished above, only the relabel runs
+        level_metrics, round_ckpts = local_frame(spark, [], METRICS_SCHEMA), []
         if live:
-            a, empties_df, live, finished_here = _run_level(
+            a, level_metrics, live, finished_here, round_ckpts = _run_level(
                 a, edges, cell_sizes, rate, local_recursion_threshold, level,
-                metrics_frames, level_sizes, checkpoint, all_active=not finished,
+                level_sizes, checkpoint, all_active=not finished,
             )
             finished = finished or finished_here
-        else:
-            # every cell was finished above: only the relabel runs
-            empties_df = local_frame(spark, [], EMPTIES_SCHEMA)
+            metrics_frames.append(level_metrics)
         sc.setJobDescription(f"tiler: level={level} relabel")
         labeled, num_cells[level], empty_cells, level_sizes = _relabel_level(
-            a, empties_df, empty_cells,
+            a, level_metrics, empty_cells, level,
+            # the live cells of level 0 are final: no level runs them
+            live if level else 0,
             # entering roots = the upper level's cells (incl. empties)
             n_roots_hint=num_cells[level + 1] if level < L - 1 else 1,
         )
+        # the checkpointed relabel no longer reads the round assignments
+        for df in round_ckpts:
+            _free_checkpoint(df)
         level_frames.append(
             labeled.select("vertex_id", F.lit(level).alias("level"), "cell_id")
         )
 
-    result = level_frames[0]
-    for fr in level_frames[1:]:
-        result = result.unionByName(fr)
-    metrics = (
-        metrics_frames[0]
-        if metrics_frames
-        else local_frame(spark, [], METRICS_SCHEMA)
+    result = reduce(DataFrame.unionByName, level_frames)
+    metrics = reduce(
+        DataFrame.unionByName, metrics_frames, local_frame(spark, [], METRICS_SCHEMA)
     )
-    for fr in metrics_frames[1:]:
-        metrics = metrics.unionByName(fr)
     if checkpoint is not None:
         sc.setJobDescription("tiler: finalize")
         checkpoint.finalize(result, num_cells, metrics)

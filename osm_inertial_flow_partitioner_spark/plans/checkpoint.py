@@ -1,12 +1,14 @@
 """Per-round checkpoint / resume with per-partition lineage + metrics.
 
 The reference is a single batch process with no resume; the graft spec
-(north_rule) requires resumable rounds. Design: every bisection round
-snapshots the assignment table, the next round's cell sizes, the
-empty-cell counts and the round's lineage metrics to a parquet snapshot
-directory, plus a manifest recording (level, round, row count, config
-token, and the driver's per-round scalars: the cells the round left
-live for the next level, and whether it ran a finish kernel). On an
+(north_rule) requires resumable rounds. Design: every round snapshots
+two parquet datasets, the assignment table and the round's lineage
+metrics (whose ``n_empty`` column also carries the empty-cell counts),
+plus a manifest recording (level, round, config token, and the
+driver's round control ``state``: the next round's cell-size rows, the
+cells the round left live for the next level, and whether it ran a
+finish kernel). The manifest is written only after both parquet writes
+return, so a round whose manifest exists is complete. On an
 Iceberg-enabled cluster the same calls
 map to ``writeTo(...).createOrReplace()`` snapshots; parquet + manifest
 keeps the sandbox dependency-free while exercising identical resume
@@ -33,21 +35,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 #: version of the snapshot layout; bump it whenever a snapshot's schema
 #: or meaning changes, so that snapshots of an older layout miss. 2: the
-#: assignment carries each pre-finished vertex's lower-level cells.
-CHECKPOINT_FORMAT = 2
+#: assignment carries each pre-finished vertex's lower-level cells. 3: a
+#: round is two datasets (assign, metrics); sizes live in the manifest.
+CHECKPOINT_FORMAT = 3
 
 
-def derive_config_token(cell_sizes, rate, local_recursion_threshold) -> str:
+def derive_config_token(
+    cell_sizes, rate, local_recursion_threshold, caller_token: str = ""
+) -> str:
     """Deterministic token over everything that changes the assignment —
     resuming a checkpoint dir written under a different configuration or
     snapshot format must MISS (stale per-round snapshots would silently
-    produce a wrong final assignment otherwise)."""
+    produce a wrong final assignment otherwise). A caller's own token is
+    hashed in, so it narrows the match and never replaces the format."""
     payload = json.dumps(
         {
             "format": CHECKPOINT_FORMAT,
             "cell_sizes": list(cell_sizes),
             "rate": rate,
             "local_recursion_threshold": local_recursion_threshold,
+            "caller_token": caller_token,
         },
         sort_keys=True,
     )
@@ -58,8 +65,15 @@ class RoundCheckpoint:
     def __init__(self, spark: SparkSession, root: str, config_token: str = ""):
         self.spark = spark
         self.root = root
-        self.config_token = config_token
+        self.caller_token = self.config_token = config_token
         os.makedirs(root, exist_ok=True)
+
+    def bind(self, cell_sizes, rate, local_recursion_threshold) -> None:
+        """Bind the snapshots to a configuration (``derive_config_token``
+        over it and the caller's token); binding again re-derives."""
+        self.config_token = derive_config_token(
+            cell_sizes, rate, local_recursion_threshold, self.caller_token
+        )
 
     def _dir(self, level: int, rnd: int) -> str:
         return os.path.join(self.root, f"level={level}", f"round={rnd}")
@@ -69,48 +83,44 @@ class RoundCheckpoint:
         level: int,
         rnd: int,
         assign: DataFrame,
-        sizes: DataFrame,
-        empties: DataFrame,
         metrics: DataFrame,
         state: dict,
-    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-        """Durable per-round state: the per-cell rows as distributed
-        DataFrames — the driver never holds them — plus the driver's
-        few per-round scalars (``state``, kept in the manifest). Returns
-        the reloaded frames (lineage truncated at the snapshot)."""
+    ) -> tuple[DataFrame, DataFrame]:
+        """Durable per-round state: the assignment and metrics rows as
+        distributed DataFrames — the driver never holds them — plus the
+        driver's bounded control ``state`` (JSON, kept in the
+        manifest). Returns the reloaded frames (lineage truncated at the
+        snapshot)."""
         d = self._dir(level, rnd)
-        parts = {"assign": assign, "sizes": sizes, "empties": empties, "metrics": metrics}
-        out = {}
-        for name, df in parts.items():
+        out = []
+        for name, df in (("assign", assign), ("metrics", metrics)):
             p = os.path.join(d, name)
             df.write.mode("overwrite").parquet(p)
-            out[name] = self.spark.read.schema(df.schema).parquet(p)
+            out.append(self.spark.read.schema(df.schema).parquet(p))
         manifest = {
             "level": level,
             "round": rnd,
-            "rows": out["assign"].count(),
             "config_token": self.config_token,
             "state": state,
             "completed_at": time.time(),
         }
         with open(os.path.join(d, "manifest.json"), "w") as f:
             json.dump(manifest, f)
-        return out["assign"], out["sizes"], out["empties"], out["metrics"]
+        return out[0], out[1]
 
     def load_round_dfs(
         self, level: int, rnd: int, schemas: dict
-    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, dict]:
-        """The frames and the ``state`` of one round's snapshot."""
+    ) -> tuple[DataFrame, DataFrame, dict]:
+        """The assignment and metrics frames and the ``state`` of one
+        round's snapshot."""
         d = self._dir(level, rnd)
         with open(os.path.join(d, "manifest.json")) as f:
             state = json.load(f)["state"]
-        return (
-            *(
-                self.spark.read.schema(schemas[name]).parquet(os.path.join(d, name))
-                for name in ("assign", "sizes", "empties", "metrics")
-            ),
-            state,
+        assign, metrics = (
+            self.spark.read.schema(schemas[name]).parquet(os.path.join(d, name))
+            for name in ("assign", "metrics")
         )
+        return assign, metrics, state
 
     def has_round(self, level: int, rnd: int) -> bool:
         p = os.path.join(self._dir(level, rnd), "manifest.json")
@@ -119,7 +129,7 @@ class RoundCheckpoint:
         if not self.config_token:
             # an empty token cannot prove the snapshot matches this
             # configuration — never replay (multilevel_partition always
-            # derives a token, so this only guards direct callers)
+            # binds a token, so this only guards direct callers)
             return False
         with open(p) as f:
             return json.load(f).get("config_token") == self.config_token

@@ -92,9 +92,23 @@ def _finish_chains(metrics_rows) -> dict:
             [8, 16, 64, 256], 64,
             id="prefinished-mix-isolated-coincident",
         ),
+        # empty cells from bisections and from finish kernels at their
+        # own level (degenerate n <= 3 splits): threshold 2 keeps level
+        # 1's 2-7-vertex cells in a distributed round 0 (at 3 the
+        # promote rule finishes them all)
+        pytest.param(
+            lambda: road_like_graph(200, seed=3), [4, 4, 8, 32], 2,
+            id="empties-bisect-finish",
+        ),
+        # empty roots (2 empty children per empty cell above), and empty
+        # cells that pre-finished vertices carry
+        pytest.param(
+            lambda: unit_square_grid(8), [4, 4, 4, 16], 4,
+            id="empties-roots-prefinished",
+        ),
     ],
 )
-def test_distributed_equals_local(spark, fixture, cell_sizes, threshold):
+def test_distributed_equals_local(spark, request, fixture, cell_sizes, threshold):
     fix = fixture()
     expected, exp_cells, _ = _local_expected(fix, cell_sizes)
     vdf, edf = _to_dfs(spark, fix)
@@ -118,8 +132,10 @@ def test_distributed_equals_local(spark, fixture, cell_sizes, threshold):
     oracle = Counter(
         (s.round, s.n, s.cut_edges, s.part_two, s.best_job) for s in stats
     )
+    mrows = metrics.collect()
     cuts, lower = Counter(), 0
-    for r in metrics.filter("mode = 'cell'").collect():
+    for r in mrows:
+        assert r["mode"] == "cell"
         key = (r["round"], r["n"], r["cut_edges"], r["part_two"], r["best_job"])
         if r["best_job"] < 0:
             assert key[2:] == (-1, -1, -1)
@@ -127,10 +143,23 @@ def test_distributed_equals_local(spark, fixture, cell_sizes, threshold):
             cuts[key] += 1
             lower += r["level"] < len(cell_sizes) - 1
     assert not cuts - oracle
-    if threshold == 4:
+    if (cell_sizes, threshold) == ([8, 32, 128], 4):
         assert lower, "no lower level ran a distributed bisection round"
-    if len(cell_sizes) == 4:
-        chains = _finish_chains(metrics.collect())
+    # the n_empty of a level's metrics rows counts its empty cells, save
+    # the 2 children of an empty cell above that no finish completed
+    L = len(cell_sizes)
+    empty = [
+        num_cells[lvl] - len({c for (_, lv), c in got.items() if lv == lvl})
+        for lvl in range(L)
+    ] + [0]
+    reported = Counter()
+    for r in mrows:
+        reported[r["level"]] += r["n_empty"]
+    for lvl in range(L):
+        assert reported[lvl] <= empty[lvl] <= reported[lvl] + 2 * empty[lvl + 1]
+    chains = _finish_chains(mrows)
+    case = request.node.callspec.id
+    if case.startswith("prefinished"):
         assert any(len(levels) >= 3 for levels in chains.values()), (
             "no finish pre-finished two lower levels"
         )
@@ -142,6 +171,20 @@ def test_distributed_equals_local(spark, fixture, cell_sizes, threshold):
             if lvl < max(levels) and lvl in tops
         }
         assert mixed, "no level finished live cells next to pre-finished ones"
+
+    # the empties cases keep producing the kinds of empty cell they name
+    def kind(r):
+        if r["best_job"] >= 0:
+            return "bisection"
+        own = max(chains[(r["root"], r["parent_path"], r["n"])])
+        return "finish" if r["level"] == own else "pre-finished"
+
+    kinds = {kind(r) for r in mrows if r["n_empty"]}
+    if case == "empties-bisect-finish":
+        assert {"bisection", "finish"} <= kinds
+    if case == "empties-roots-prefinished":
+        assert any(empty[1:L]), "no empty root"
+        assert "pre-finished" in kinds
 
 
 def test_packed_cell_numbers_match_local(spark):
@@ -317,7 +360,7 @@ def test_prefix_sum_frame_carries_no_hint(spark):
     # only logs a HintErrorLogger warning for it
     from osm_inertial_flow_partitioner_spark.operators.partitioner import (
         ASSIGN_SCHEMA,
-        EMPTIES_SCHEMA,
+        METRICS_SCHEMA,
         _relabel_level,
     )
     from osm_inertial_flow_partitioner_spark.session import local_frame
@@ -327,10 +370,14 @@ def test_prefix_sum_frame_carries_no_hint(spark):
         [(0, 2, 5, 0.0, 0.0, [], []), (0, 3, 6, 1.0, 1.0, [], [])],
         ASSIGN_SCHEMA,
     )
+    # root 0 reports one empty cell in its level-0 metrics row
     _, num_cells, empty_cells, _ = _relabel_level(
         assign,
-        local_frame(spark, [(0, 1)], EMPTIES_SCHEMA),
+        local_frame(
+            spark, [(0, 0, 0, 1, 2, -1, -1, -1, 1, "cell")], METRICS_SCHEMA
+        ),
         local_frame(spark, [(1,)], "root long"),
+        level=0,
         n_roots_hint=2,
     )
     assert num_cells == 5
@@ -339,19 +386,38 @@ def test_prefix_sum_frame_carries_no_hint(spark):
 
 
 def test_checkpoint_format_version_misses(spark, tmp_path, monkeypatch):
-    # snapshots written under another snapshot format must not replay
+    # snapshots written under another snapshot format must not replay,
+    # whether or not the caller named a token of its own
     from osm_inertial_flow_partitioner_spark.plans import checkpoint as ckpt
 
     vdf, edf = _to_dfs(spark, unit_square_grid(8))
     cfg = PartitionConfig(cell_sizes=[4, 16])
-    ck = ckpt.RoundCheckpoint(spark, str(tmp_path))
-    multilevel_partition(spark, vdf, edf, cfg, local_recursion_threshold=20, checkpoint=ck)
-    assert ck.config_token == ckpt.derive_config_token(cfg.cell_sizes, cfg.rate, 20)
-    assert ck.has_round(1, 0)
+
+    def run(caller_token):
+        ck = ckpt.RoundCheckpoint(spark, str(tmp_path / caller_token), caller_token)
+        multilevel_partition(
+            spark, vdf, edf, cfg, local_recursion_threshold=20, checkpoint=ck
+        )
+        return ck
+
+    runs = {t: run(t) for t in ("", "t1")}
+    for t, ck in runs.items():
+        assert ck.config_token == ckpt.derive_config_token(
+            cfg.cell_sizes, cfg.rate, 20, t
+        )
+        assert ck.has_round(1, 0)
+        # binding a reused checkpoint object again keeps its token
+        ck.bind(cfg.cell_sizes, cfg.rate, 20)
+        assert ck.has_round(1, 0)
+    assert runs[""].config_token != runs["t1"].config_token
     monkeypatch.setattr(ckpt, "CHECKPOINT_FORMAT", ckpt.CHECKPOINT_FORMAT + 1)
     other = ckpt.derive_config_token(cfg.cell_sizes, cfg.rate, 20)
-    assert other != ck.config_token
-    assert not ckpt.RoundCheckpoint(spark, str(tmp_path), other).has_round(1, 0)
+    assert other != runs[""].config_token
+    assert not ckpt.RoundCheckpoint(spark, str(tmp_path / ""), other).has_round(1, 0)
+    # a run that names a token misses under another format too: it
+    # recomputes and rewrites the snapshots under its new token
+    assert run("t1").config_token != runs["t1"].config_token
+    assert not runs["t1"].has_round(1, 0)
 
 
 def _job_counts(spark, group) -> tuple[Counter, int]:
@@ -384,19 +450,19 @@ JOB_BUDGETS = {
             "tiler: level=2 round=0": 6,
             "tiler: level=2 round=1": 10,
             "tiler: level=2 end": 1,
-            "tiler: level=2 relabel": 8,
-            "tiler: level=1 round=0": 16,
+            "tiler: level=2 relabel": 10,
+            "tiler: level=1 round=0": 13,
             "tiler: level=1 round=1": 10,
             "tiler: level=1 end": 1,
-            "tiler: level=1 relabel": 8,
-            "tiler: level=0 round=0": 16,
+            "tiler: level=1 relabel": 10,
+            "tiler: level=0 round=0": 12,
             "tiler: level=0 round=1": 9,
-            "tiler: level=0 round=2": 10,
+            "tiler: level=0 round=2": 8,
             "tiler: level=0 end": 2,
             "tiler: level=0 relabel": 8,
             "caller": 2,
         },
-        380,
+        390,
     ),
     "hybrid": (
         lambda: road_like_graph(400, seed=7), [16, 64, 256], 64,
@@ -404,18 +470,18 @@ JOB_BUDGETS = {
             "tiler: count vertices": 2,
             "tiler: level=2 round=0": 6,
             "tiler: level=2 end": 1,
-            "tiler: level=2 relabel": 8,
-            "tiler: level=1 round=0": 16,
+            "tiler: level=2 relabel": 10,
+            "tiler: level=1 round=0": 12,
             "tiler: level=1 round=1": 10,
-            "tiler: level=1 round=2": 10,
+            "tiler: level=1 round=2": 8,
             "tiler: level=1 end": 2,
-            "tiler: level=1 relabel": 8,
-            "tiler: level=0 round=0": 18,
+            "tiler: level=1 relabel": 10,
+            "tiler: level=0 round=0": 11,
             "tiler: level=0 end": 2,
             "tiler: level=0 relabel": 9,
             "caller": 2,
         },
-        285,
+        275,
     ),
     "multi-component": (
         lambda: _disjoint_union(unit_square_grid(12), road_like_graph(300), 1.5),
@@ -423,13 +489,13 @@ JOB_BUDGETS = {
         {
             "tiler: count vertices": 2,
             "tiler: level=1 round=0": 6,
-            "tiler: level=1 round=1": 9,
+            "tiler: level=1 round=1": 7,
             "tiler: level=1 end": 2,
             "tiler: level=1 relabel": 8,
             "tiler: level=0 relabel": 9,
             "caller": 2,
         },
-        117,
+        109,
     ),
 }
 
@@ -439,6 +505,8 @@ def test_job_budget(spark, name):
     fixture, cell_sizes, threshold, job_budget, task_budget = JOB_BUDGETS[name]
     vdf, edf = _to_dfs(spark, fixture())
     sc = spark.sparkContext
+    persistent = sc._jsc.getPersistentRDDs
+    before = set(persistent().keys())
     group = f"job-budget-{name}"
     sc.setJobGroup(group, "caller")
     try:
@@ -455,3 +523,8 @@ def test_job_budget(spark, name):
     assert {d: n for d, n in jobs.items() if n > job_budget.get(d, 0) + 1} == {}
     assert sum(jobs.values()) <= sum(job_budget.values()) + 1
     assert tasks <= task_budget + 8
+    # each round's assignment checkpoint is freed once the relabel has
+    # checkpointed the level: a call leaves at most each level's labeled
+    # assignment and its metrics checkpoint persisted
+    left = len(set(persistent().keys()) - before)
+    assert left <= 2 * len(cell_sizes), f"{left} persistent RDDs left"

@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 from osm_inertial_flow_partitioner_spark.config import PartitionConfig
 from osm_inertial_flow_partitioner_spark.operators.partitioner import (
     ASSIGN_SCHEMA,
-    EMPTIES_SCHEMA,
     METRICS_SCHEMA,
-    SIZES_SCHEMA,
 )
 from osm_inertial_flow_partitioner_spark.plans.checkpoint import RoundCheckpoint
 from osm_inertial_flow_partitioner_spark.plans.pipeline import run_pipeline
@@ -104,12 +102,10 @@ def test_checkpoint_resume_byte_identical(spark, pages, tmp_path):
     # snapshots + lineage exist and are loadable
     latest = ck.latest()
     assert latest is not None
-    schemas = {
-        "assign": ASSIGN_SCHEMA, "sizes": SIZES_SCHEMA,
-        "empties": EMPTIES_SCHEMA, "metrics": METRICS_SCHEMA,
-    }
-    reloaded = ck.load_round_dfs(*latest, schemas)[0]
+    schemas = {"assign": ASSIGN_SCHEMA, "metrics": METRICS_SCHEMA}
+    reloaded, _, state = ck.load_round_dfs(*latest, schemas)
     assert reloaded.count() > 0
+    assert set(state) == {"sizes", "live", "finished"}
     assert os.path.exists(str(tmp_path / "ck" / "final_manifest.json"))
     # final assignment persisted durably == in-memory result
     persisted = sorted(
